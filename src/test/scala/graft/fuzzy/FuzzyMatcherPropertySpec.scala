@@ -1,6 +1,8 @@
 package graft.fuzzy
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Randomized equivalence: the full distributed matcher must agree with an
@@ -95,5 +97,50 @@ class FuzzyMatcherPropertySpec extends AnyFunSuite with SparkSpec {
 
     assert(got == expected,
       s"got ${got.size}, expected ${expected.size}; missing=${(expected -- got).take(3)}, extra=${(got -- expected).take(3)}")
+  }
+
+  test("differential matrix: 6 algorithms x 4 execution shapes x thresholds 0/70/100") {
+    // SweepSpec's corpus (non-ASCII, empty, case-different, equal and
+    // length-outlier values) plus a null on each side
+    val lRows = SweepSpec.leftRows :+ (100L, null: String)
+    val rRows = SweepSpec.rightRows :+ (200L, null: String)
+    val left = lRows.toDF("lid", "a")
+    val right = rRows.toDF("rid", "b")
+    // Spark's lower() is UTF8String.toLowerCase
+    def low(s: String) = UTF8String.fromString(s).toLowerCase
+    def rows(df: DataFrame): Set[(Long, Long, Double)] =
+      df.select("lid", "rid", "s").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val exact = MatchOptions(useApproxNearestNeighbor = Some(false), runPreprocess = false)
+    // threshold 0: every non-null pair survives, so the mapping after it
+    // runs as a filter-existing pass over the whole cross product
+    val everyPair = FuzzyMapping("a", "b", 0.0, FuzzyAlgorithm.Levenshtein,
+      outputColumnName = Some("all"))
+
+    for (algo <- FuzzyAlgorithm.all; threshold <- Seq(0.0, 70.0, 100.0)) {
+      val m = FuzzyMapping("a", "b", threshold, algo, outputColumnName = Some("s"))
+      val maxDist = m.reversedThresholdScore
+      val expected = (for {
+        (lid, lv) <- lRows if lv != null
+        (rid, rv) <- rRows if rv != null
+        d = Kernels.dist(algo.id, low(lv), low(rv))
+        if d <= maxDist
+      } yield (lid, rid, 1.0 - d)).toSet
+      assert(expected.nonEmpty)
+      val shapes = Seq(
+        "sweep" -> (() => FuzzyMatcher.matchDfs(left, right, Seq(m), exact)),
+        "blocked sweep" -> (() => FuzzyMatcher.matchDfs(left, right, Seq(m),
+          exact.copy(broadcastDistinctLimit = 3L))),
+        "filter-existing pass" -> (() =>
+          FuzzyMatcher.matchDfs(left, right, Seq(everyPair, m), exact)),
+        "prepared right" -> (() => FuzzyMatcher.matchDfsWithPreparedRight(left,
+          FuzzyMatcher.prepareRight(left.columns.toSeq, right, Seq(m), exact))))
+      for ((shape, run) <- shapes) {
+        val got = rows(run())
+        assert(got == expected,
+          s"${algo.name} @ $threshold, $shape: got ${got.size}, expected ${expected.size}; " +
+            s"missing=${(expected -- got).take(3)}, extra=${(got -- expected).take(3)}")
+      }
+    }
   }
 }

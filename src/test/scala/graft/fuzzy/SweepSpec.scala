@@ -25,22 +25,7 @@ class SweepSpec extends AnyFunSuite with SparkSpec {
 
   private def corpus: (DataFrame, DataFrame) = {
     import spark.implicits._
-    // mixed shapes: shared prefixes (strip path), case differences (lower
-    // must match Spark's), non-ASCII values (generic-kernel tail + mask-0
-    // gate disable), empty strings, equal values, length outliers (band
-    // skip), and near-threshold pairs on both sides of the cutoff
-    val base = Seq(
-      "customer#0001", "customer#0002", "Customer#0001", "CUSTOMER#00x2",
-      "alpha beta gamma", "alpha beta gamm", "alpha beta gamme",
-      "übermensch", "ubermensch", "Übermensch!", "",
-      "short", "shrt", "a", "b", "ab",
-      "the quick brown fox", "the quick brown fix", "the quick brawn fox",
-      "xxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxx", "yyyy",
-      "naïve approach", "naive approach", "données", "donnees")
-    val l = base.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("lid", "a")
-    val r = (base.map(v => if (v.nonEmpty) v.dropRight(1) + "z" else "z") ++ base)
-      .distinct.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("rid", "b")
-    (l, r)
+    (SweepSpec.leftRows.toDF("lid", "a"), SweepSpec.rightRows.toDF("rid", "b"))
   }
 
   test("sweep path reproduces the BNLJ path: pairs and scores, thresholds 70-100") {
@@ -78,4 +63,30 @@ class SweepSpec extends AnyFunSuite with SparkSpec {
     val plan = scored.queryExecution.executedPlan.toString
     assert(!plan.contains("lev_sweep"), s"sweep must be levenshtein-only:\n$plan")
   }
+}
+
+object SweepSpec {
+
+  // mixed shapes: shared prefixes (strip path), case differences (lower
+  // must match Spark's), non-ASCII values (generic-kernel tail + mask-0
+  // gate disable), empty strings, equal values, length outliers (band
+  // skip), and near-threshold pairs on both sides of the cutoff
+  private val base = Seq(
+    "customer#0001", "customer#0002", "Customer#0001", "CUSTOMER#00x2",
+    "alpha beta gamma", "alpha beta gamm", "alpha beta gamme",
+    "übermensch", "ubermensch", "Übermensch!", "",
+    "short", "shrt", "a", "b", "ab",
+    "the quick brown fox", "the quick brown fix", "the quick brawn fox",
+    "xxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxx", "yyyy",
+    "naïve approach", "naive approach", "données", "donnees")
+
+  /** `(lid, a)` rows of the shared test corpus. */
+  val leftRows: Seq[(Long, String)] =
+    base.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+
+  /** `(rid, b)` rows: each corpus value with its last char replaced by
+    * `z`, plus the corpus itself. */
+  val rightRows: Seq[(Long, String)] =
+    (base.map(v => if (v.nonEmpty) v.dropRight(1) + "z" else "z") ++ base)
+      .distinct.zipWithIndex.map { case (v, i) => (i.toLong, v) }
 }
