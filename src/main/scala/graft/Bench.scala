@@ -441,26 +441,7 @@ object Bench {
   // the fallback conf around each LSH pass's materialization
   // (FuzzyMatcher.processFuzzyMapping -> AnnJoin.withTopKHeapConf), so a
   // production caller gets the same treatment without bench-harness help
-  // (VERDICT r19 item 4).
-  private val FallbackConf =
-    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-
-  /** Run `body` with the ObjectHashAggregate fallback threshold raised
-    * (only when `scoped`), restoring the previous session value —
-    * set-or-unset — afterwards. */
-  private def withHeapAggConf[T](spark: SparkSession, scoped: Boolean)
-                                (body: => T): T = {
-    if (!scoped) body
-    else {
-      val prev = spark.conf.getOption(FallbackConf)
-      spark.conf.set(FallbackConf, "4194304")
-      try body
-      finally prev match {
-        case Some(v) => spark.conf.set(FallbackConf, v)
-        case None => spark.conf.unset(FallbackConf)
-      }
-    }
-  }
+  // (VERDICT r19 item 4). The rows above share that one helper.
 
   /** One pre-sample host reading: CPU-bound probe + I/O-bound probe,
     * with the health verdict taken AT PROBE TIME against the run's
@@ -554,7 +535,7 @@ object Bench {
       .filter { case (name, _) => warmOnly.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
         try graft.util.MatchScope.withMatchScope {
-          withHeapAggConf(spark, HeapAggQueries.contains(name)) {
+          graft.fuzzy.AnnJoin.withTopKHeapConf(spark, HeapAggQueries.contains(name)) {
             fn(spark).count()
           }
         } catch { case _: Throwable => }
@@ -717,7 +698,7 @@ object Bench {
         var dt = 0.0
         val got = try graft.util.MatchScope.withMatchScope {
           val t0 = System.nanoTime()
-          val r = try Some(withHeapAggConf(spark, HeapAggQueries.contains(name)) {
+          val r = try Some(graft.fuzzy.AnnJoin.withTopKHeapConf(spark, HeapAggQueries.contains(name)) {
             fn(spark).count()
           }) catch {
             case e: Throwable =>

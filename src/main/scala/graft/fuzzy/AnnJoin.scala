@@ -53,7 +53,7 @@ object AnnJoin {
   private val FallbackConf =
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
 
-  private[fuzzy] def withTopKHeapConf[T](
+  private[graft] def withTopKHeapConf[T](
       spark: org.apache.spark.sql.SparkSession, scoped: Boolean)(body: => T): T = {
     if (!scoped) body
     else {

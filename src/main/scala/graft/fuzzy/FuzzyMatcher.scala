@@ -1,6 +1,6 @@
 package graft.fuzzy
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Spark-native fuzzy join.
@@ -27,9 +27,13 @@ import org.apache.spark.sql.functions._
   *    size and blows up on low-cardinality keys. Joins keep every
   *    intermediate bounded by the true output size and scale horizontally;
   *
-  *  - scoring runs as a codegen'd Catalyst expression inside the candidate
-  *    join, so the cartesian stream is filtered inside WholeStageCodegen and
-  *    never materialized;
+  *  - a fresh exact pass scores in one broadcast sweep for every
+  *    algorithm ([[SweepScore]]): the smaller side's distinct values are
+  *    broadcast in length-sorted blocks and each larger-side value scans
+  *    them in flat arrays, skipping whole length groups by the kernel's
+  *    own length reject, so the cartesian stream is never materialized.
+  *    Filter-existing passes and LSH candidates score with the codegen'd
+  *    bounded-kernel expression ([[scoreValuePairs]]);
   *
   *  - strategy selection (exact cross join vs MinHash-LSH candidates) from
   *    the distinct-value cartesian estimate, constants preserved from
@@ -218,111 +222,42 @@ object FuzzyMatcher {
     * normalized distance is within the (truncated) reversed threshold, flip
     * distance to similarity (calculate_fuzzy_score, process.py:8-56).
     * Input and output are value-level: (leftVal, rightVal) -> + score `s`.
+    * Scores filter-existing passes and LSH candidates; fresh exact passes
+    * run the [[SweepScore]] sweep instead.
     *
-    * Performance shape: lowercasing happens in projections BEFORE the
-    * candidate join (once per distinct value, not once per pair), and the
-    * kernel is the thresholded [[BoundedFuzzyDistance]] — length-bound
+    * Performance shape: lowercased columns a candidate frame already
+    * carries (LSH attaches them once per distinct value) are reused, and
+    * the kernel is the thresholded [[BoundedFuzzyDistance]] — length-bound
     * pruning plus a banded DP, exact for every surviving pair. */
   def scoreValuePairs(candidates: DataFrame, leftCol: String, rightCol: String,
                       algo: FuzzyAlgorithm, reversedThreshold: Double): DataFrame = {
     val ll = lowerName(leftCol)
     val rl = lowerName(rightCol)
-    val withLower = candidates
+    candidates
       .withColumn(ll, if (candidates.columns.contains(ll)) col(ll) else lower(col(leftCol)))
       .withColumn(rl, if (candidates.columns.contains(rl)) col(rl) else lower(col(rightCol)))
-    val kernel: Column =
-      functions.fuzzy_dist_bounded(col(ll), col(rl), algo, reversedThreshold)
-    // Mask pre-gate (levenshtein only): when the candidate frame carries
-    // per-value char masks + lengths (projected once per distinct value by
-    // exactCandidates), pairs provably beyond the threshold short-circuit
-    // on xor + popcount instead of entering the DP kernel —
-    // bitCount(maskA ^ maskB) <= 2 * distance (VectorKernels.charMask), so
-    // bitCount > 2k => distance > k. Mask 0 (non-ASCII/empty) disables the
-    // gate for that pair; the kernel result is unchanged either way, the
-    // gate only replaces a subset of over-threshold results with 2.0 —
-    // indistinguishable under the `<= reversedThreshold` filter.
-    val lm = maskName(leftCol)
-    val rm = maskName(rightCol)
-    val lm2 = mask2Name(leftCol)
-    val rm2 = mask2Name(rightCol)
-    val lLen = lenName(leftCol)
-    val rLen = lenName(rightCol)
-    val canGate = algo == FuzzyAlgorithm.Levenshtein &&
-      Seq(lm, rm, lm2, rm2, lLen, rLen).forall(withLower.columns.contains)
-    val dist: Column =
-      if (!canGate) kernel
-      else {
-        val kPair = floor(lit(reversedThreshold) *
-          greatest(col(lLen), col(rLen))).cast("long")
-        // unigram bound: one edit moves the char SET by <= 2; bigram
-        // bound: one edit touches <= 2 bigrams (remove <= 2, add <= 2).
-        // Either bound exceeded => distance > k, skip the kernel.
-        val pruned =
-          (col(lm) =!= 0L && col(rm) =!= 0L &&
-            bit_count(col(lm).bitwiseXOR(col(rm))) > lit(2L) * kPair) ||
-          (col(lm2) =!= 0L && col(rm2) =!= 0L &&
-            bit_count(col(lm2).bitwiseXOR(col(rm2))) > lit(4L) * kPair)
-        when(pruned, lit(2.0)).otherwise(kernel)
-      }
-    withLower
-      .withColumn("s", dist)
+      .withColumn("s", functions.fuzzy_dist_bounded(col(ll), col(rl), algo, reversedThreshold))
       .where(col("s") <= reversedThreshold)
       .withColumn("s", lit(1.0) - col("s"))
-      .drop(ll, rl, lm, rm, lm2, rm2, lLen, rLen)
+      .drop(ll, rl)
   }
 
   private[fuzzy] def lowerName(c: String): String = s"__lower__$c"
-  private[fuzzy] def maskName(c: String): String = s"__mask__$c"
-  private[fuzzy] def mask2Name(c: String): String = s"__mask2__$c"
-  private[fuzzy] def lenName(c: String): String = s"__len__$c"
 
-  /** Candidate value pairs for a fresh pass: strategy pick by distinct-value
-    * cartesian estimate (cross_join_no_existing_fuzzy_results,
-    * matcher.py:241-340). Legacy candidate-frame surface (tests/tools);
-    * the matcher itself goes through [[freshScoredValuePairs]], which can
-    * fuse candidate generation and scoring into the [[LevSweep]] form. */
-  def freshCandidates(leftIdxDf: DataFrame, rightIdxDf: DataFrame,
-                      leftCol: String, rightCol: String,
-                      opts: MatchOptions, reversedThreshold: Double = 1.0): DataFrame =
-    planFreshPairs(leftIdxDf, rightIdxDf, leftCol, rightCol, opts,
-      reversedThreshold, sweepFor = None)._1 match {
-      case Left(candidates) => candidates
-      case Right(_) => throw new IllegalStateException(
-        "unreachable: sweep disabled")
-    }
-
-  /** Fresh-pass scored value pairs `(leftCol, rightCol, s)`, post-threshold:
-    * the strategy pick of [[freshCandidates]] plus scoring, fused into the
-    * [[LevSweep]] broadcast sweep when the pass is an exact levenshtein
-    * cross join with a broadcast-sized side (identical pair set and scores
-    * — see LevSweep's equivalence note). Returns the scored frame and
-    * whether the LSH candidate path (and so its BoundedTopK ranking) is in
-    * the plan, so the caller can scope the ObjectHashAggregate fallback
-    * conf around the pass's materialization. */
+  /** Fresh-pass scored value pairs `(leftCol, rightCol, s)`, post-threshold.
+    * Strategy pick by distinct-value cartesian estimate
+    * (cross_join_no_existing_fuzzy_results, matcher.py:241-340): the exact
+    * cross join runs as the [[SweepScore]] broadcast sweep, in blocks of at
+    * most `broadcastDistinctLimit` values for every algorithm; LSH
+    * candidates are scored by [[scoreValuePairs]]. Returns the scored
+    * frame and whether the LSH candidate path (and so its BoundedTopK
+    * ranking) is in the plan, so the caller can scope the
+    * ObjectHashAggregate fallback conf around the pass's materialization. */
   def freshScoredValuePairs(
       leftIdxDf: DataFrame, rightIdxDf: DataFrame, fuzzyMap: FuzzyMapping,
       opts: MatchOptions): (DataFrame, Boolean) = {
-    val (planned, usedLsh) = planFreshPairs(leftIdxDf, rightIdxDf,
-      fuzzyMap.leftCol, fuzzyMap.rightCol, opts,
-      fuzzyMap.reversedThresholdScore, sweepFor = Some(fuzzyMap.fuzzyType))
-    planned match {
-      case Right(scored) => (scored, usedLsh)
-      case Left(candidates) =>
-        (scoreValuePairs(candidates, fuzzyMap.leftCol, fuzzyMap.rightCol,
-          fuzzyMap.fuzzyType, fuzzyMap.reversedThresholdScore), usedLsh)
-    }
-  }
-
-  /** Shared fresh-pass planner. Returns `Left(candidates)` (to be scored by
-    * [[scoreValuePairs]]) or `Right(scored)` (the fused sweep), plus a flag
-    * for "the LSH candidate pipeline is in the plan". `sweepFor` carries
-    * the pass algorithm when fusion is allowed; None preserves the
-    * candidate-frame contract of [[freshCandidates]]. */
-  private def planFreshPairs(leftIdxDf: DataFrame, rightIdxDf: DataFrame,
-                      leftCol: String, rightCol: String,
-                      opts: MatchOptions, reversedThreshold: Double,
-                      sweepFor: Option[FuzzyAlgorithm]): (Either[DataFrame, DataFrame], Boolean) = {
-    // Checkpointed: each value frame is consumed twice (count + join).
+    val reversedThreshold = fuzzyMap.reversedThresholdScore
+    // Checkpointed: each value frame is consumed twice (count + scoring).
     // The two sides' materialize+count chains are independent — run them
     // concurrently (guide §2.6): same barriers, same counts, half the
     // serial fixed-cost floor of the four driver actions.
@@ -331,16 +266,17 @@ object FuzzyMatcher {
       (v, v.count())
     }
     val ((lv0, lc0), (rv0, rc0)) = graft.util.Par.run2(
-      valsOf(leftIdxDf, leftCol), valsOf(rightIdxDf, rightCol))
+      valsOf(leftIdxDf, fuzzyMap.leftCol), valsOf(rightIdxDf, fuzzyMap.rightCol))
     var leftVals = lv0
     var rightVals = rv0
     var lCount = lc0
     var rCount = rc0
-    var lCol = leftCol
-    var rCol = rightCol
+    var lCol = fuzzyMap.leftCol
+    var rCol = fuzzyMap.rightCol
 
     // Larger side "left" (process_fuzzy_frames swap, process.py:104-108):
-    // for the LSH path this fixes which side the top-N cap applies to.
+    // the sweep broadcasts the smaller side, and for the LSH path this
+    // fixes which side the top-N cap applies to.
     if (lCount < rCount) {
       val (fv, fc, fn) = (leftVals, lCount, lCol)
       leftVals = rightVals; lCount = rCount; lCol = rCol
@@ -352,54 +288,15 @@ object FuzzyMatcher {
       throw new IllegalStateException(
         s"The cartesian product of the two dataframes is too large to process: $cartesian")
 
-    // Exact cartesian of DISTINCT values, each side pre-projected with
-    // its lowercased value (computed once per value, not per pair).
-    // Broadcast the smaller value frame when it is clearly broadcastable
-    // so the big side never shuffles; otherwise leave the pick to AQE.
-    def exactCandidates(): DataFrame = {
-      // The stream side sets the cross join's parallelism, and AQE happily
-      // coalesces a small distinct-value frame to ONE partition — which
-      // serializes the entire O(n*m) scoring loop onto a single core
-      // (measured: 225M pairs ran single-threaded). Spread the stream side
-      // across the cluster before fanning out.
-      val spark = leftVals.sparkSession
-      val parallelism = spark.sparkContext.defaultParallelism
-      val lSpread =
-        if (leftVals.queryExecution.toRdd.getNumPartitions < parallelism)
-          leftVals.repartition(parallelism)
-        else leftVals
-      // Per-value mask + length columns feed scoreValuePairs' pre-gate:
-      // 12 bytes per DISTINCT value buys a 3-instruction per-PAIR filter
-      // in front of the DP kernel (see scoreValuePairs).
-      def proj(vals: DataFrame, c: String): DataFrame = {
-        val lo = lowerName(c)
-        vals.withColumn(lo, lower(col(c)))
-          .withColumn(maskName(c), vectorFunctions.char_mask(col(lo)))
-          .withColumn(mask2Name(c), vectorFunctions.bigram_mask(col(lo)))
-          .withColumn(lenName(c), length(col(lo)).cast("long"))
-      }
-      val lProj = proj(lSpread, lCol)
-      val rProj = proj(rightVals, rCol)
-      if (rCount <= opts.broadcastDistinctLimit) lProj.crossJoin(broadcast(rProj))
-      else lProj.crossJoin(rProj)
-    }
-
     val stats = f"$lCol x $rCol: $lCount x $rCount distinct values (cartesian $cartesian%.3g)"
 
-    // Exact-path result: the fused LevSweep when the pass algorithm is
-    // levenshtein and the small side is broadcast-sized (the same condition
-    // under which exactCandidates would broadcast it); the BNLJ candidate
-    // frame otherwise. Same pair set and scores either way.
-    def exactEither(how: String): Either[DataFrame, DataFrame] =
-      if (sweepFor.contains(FuzzyAlgorithm.Levenshtein) &&
-          rCount <= opts.broadcastDistinctLimit) {
-        log.info(s"[graft.pass] $stats -> exact broadcast sweep ($how)")
-        Right(SweepScore.sweepScoredPairs(leftVals, rightVals, lCol, rCol,
-          reversedThreshold))
-      } else {
-        log.info(s"[graft.pass] $stats -> exact cross join ($how)")
-        Left(exactCandidates())
-      }
+    def sweep(how: String): (DataFrame, Boolean) = {
+      log.info(s"[graft.pass] $stats -> exact sweep ($how)")
+      (SweepScore.sweepScoredPairs(leftVals, rightVals, lCol, rCol,
+        reversedThreshold, fuzzyMap.fuzzyType, opts.broadcastDistinctLimit), false)
+    }
+    def scoreLsh(candidates: DataFrame): (DataFrame, Boolean) =
+      (scoreValuePairs(candidates, lCol, rCol, fuzzyMap.fuzzyType, reversedThreshold), true)
 
     val useApprox = opts.useApproxNearestNeighbor.getOrElse(cartesian > opts.crossOverForApprox)
     if (useApprox) {
@@ -408,21 +305,20 @@ object FuzzyMatcher {
       // up to hardCartesianCap pairs.
       if (opts.useApproxNearestNeighbor.contains(true)) {
         log.info(s"[graft.pass] $stats -> LSH candidates (user-forced)")
-        (Left(AnnJoin.candidates(leftVals, rightVals, lCol, rCol, opts,
-          reversedThreshold, lCount + rCount)), true)
+        scoreLsh(AnnJoin.candidates(leftVals, rightVals, lCol, rCol, opts,
+          reversedThreshold, lCount + rCount))
       } else
         AnnJoin.candidatesOrExactFallback(leftVals, rightVals, lCol, rCol, opts,
             reversedThreshold, lCount + rCount, cartesian) match {
           case Some(cands) =>
             log.info(s"[graft.pass] $stats -> LSH candidates (auto)")
-            (Left(cands), true)
+            scoreLsh(cands)
           case None =>
-            (exactEither("auto: corpus is LSH-hostile, cartesian within " +
-              "the fallback cap"), false)
+            sweep("auto: corpus is LSH-hostile, cartesian within the fallback cap")
         }
     } else {
-      (exactEither(if (opts.useApproxNearestNeighbor.isEmpty) "auto: below crossover"
-        else "user-forced"), false)
+      sweep(if (opts.useApproxNearestNeighbor.isEmpty) "auto: below crossover"
+        else "user-forced")
     }
   }
 
@@ -449,9 +345,8 @@ object FuzzyMatcher {
         (pairs.join(scored, Seq(leftCol, rightCol))
           .select(col("s"), col(LeftIdx), col(RightIdx)), false)
       case None =>
-        // Fresh pass: scored distinct value pairs (strategy pick + scoring,
-        // fused where possible), then expand to row pairs by joining each
-        // side back on its value.
+        // Fresh pass: scored distinct value pairs (strategy pick + scoring),
+        // then expand to row pairs by joining each side back on its value.
         val (scored, lsh) = freshScoredValuePairs(leftIdxDf, rightIdxDf,
           fuzzyMap, opts)
         (scored

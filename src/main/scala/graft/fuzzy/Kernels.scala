@@ -167,10 +167,10 @@ object Kernels {
     var aEnd = a.numBytes
     var bStart = 0
     var bEnd = b.numBytes
-    // Common prefix/suffix stripping, 8 bytes at a time: corpora with a
-    // shared prefix (e.g. "Customer#000...") made the byte-wise strip the
-    // dominant per-pair cost AFTER the r19 diagonal kernel (GateShapeAb:
-    // ~60% of the surviving-pair cost on the 225M-pair names row).
+    // Common prefix/suffix stripping, 8 bytes at a time: on corpora with
+    // a shared prefix (e.g. "Customer#000...") the byte-wise strip was the
+    // dominant per-pair cost after the diagonal kernel (the benchmark's
+    // kernel.levenshtein.ns_per_pair measures this path).
     if (wordWise) {
       val baseA = a.getBaseObject
       val offA = a.getBaseOffset
@@ -266,77 +266,105 @@ object Kernels {
   /** Thresholded distance: exact normalized distance when it is <=
     * `maxDist`, any value > maxDist otherwise (2.0). Semantically
     * interchangeable with [[dist]] under a `<= maxDist` filter, but prunes
-    * with cheap length bounds and a banded DP. Levenshtein on pure-ASCII
-    * inputs takes an allocation-free byte path. */
+    * with [[lengthRejects]] and banded kernels ([[inBand]]). Levenshtein on
+    * pure-ASCII inputs takes an allocation-free byte path. */
   def distBounded(id: Int, a: UTF8String, b: UTF8String, maxDist: Double): Double = {
-    if (id == 0) {
+    // isFullAscii is a word-wise high-bit scan — cheaper than the old
+    // numChars walk (which decodes UTF-8 lengths byte by byte)
+    if (id == 0 && a.isFullAscii && b.isFullAscii) {
       val la = a.numBytes
       val lb = b.numBytes
-      // isFullAscii is a word-wise high-bit scan — cheaper than the old
-      // numChars walk (which decodes UTF-8 lengths byte by byte)
-      if (a.isFullAscii && b.isFullAscii) {
-        val mx = math.max(la, lb)
-        if (mx == 0) return 0.0
-        val k = (maxDist * mx).toInt
-        if (math.abs(la - lb) > k) return 2.0
-        val d = levBoundedAscii(a, b, k)
-        return if (d > k) 2.0 else d.toDouble / mx
-      }
+      val mx = math.max(la, lb)
+      if (lengthRejects(0, la, lb, maxDist)) return 2.0
+      if (mx == 0) return 0.0
+      val k = (maxDist * mx).toInt
+      val d = levBoundedAscii(a, b, k)
+      return if (d > k) 2.0 else d.toDouble / mx
     }
-    distBoundedGeneric(id, a, b, maxDist)
-  }
-
-  private def distBoundedGeneric(id: Int, a: UTF8String, b: UTF8String, maxDist: Double): Double = {
     val sa = a.toString
     val sb = b.toString
-    val la = sa.length
-    val lb = sb.length
+    if (lengthRejects(id, sa.length, sb.length, maxDist)) 2.0
+    else inBand(id).dist(sa, sb, maxDist)
+  }
+
+  /** The first reject of every bounded kernel: true when strings of
+    * lengths `la` and `lb` are provably more than `maxDist` apart from
+    * their length difference alone. [[distBounded]] tests it before any
+    * character work and the sweep ([[FuzzySweep]]) once per length group,
+    * so the pairs the sweep skips are exactly the pairs the kernel rejects.
+    *  - levenshtein, damerau (<= levenshtein): dist >= diff, within
+    *    budget floor(maxDist * mx);
+    *  - hamming (padded): dist >= diff, within maxDist * mx;
+    *  - indel: dist >= diff, within floor(maxDist * (la + lb));
+    *  - jaro: sim <= (min/max + 2) / 3 => dist >= diff / (3 * mx);
+    *  - jaro-winkler: the prefix boost can recover up to 0.4 of the jaro
+    *    gap (4 * 0.1), so dist >= 0.6 * diff / (3 * mx) = diff / (5 * mx).
+    */
+  def lengthRejects(id: Int, la: Int, lb: Int, maxDist: Double): Boolean = {
     val mx = math.max(la, lb)
     val diff = math.abs(la - lb)
     id match {
-      case 0 => // levenshtein: dist >= diff/mx
-        if (mx == 0) 0.0
-        else {
-          val k = (maxDist * mx).toInt
-          if (diff > k) 2.0
-          else {
-            val d = levenshteinBounded(sa, sb, k)
-            if (d > k) 2.0 else d.toDouble / mx
-          }
-        }
-      case 3 => // hamming (padded): dist >= diff/mx
-        if (mx == 0) 0.0
-        else if (diff > maxDist * mx) 2.0
-        else hammingDist(sa, sb)
-      case 4 => // damerau <= levenshtein shares the length bound
-        if (mx == 0) 0.0
-        else {
-          val k = (maxDist * mx).toInt
-          if (diff > k) 2.0
-          else {
-            val d = damerauBounded(sa, sb, k)
-            if (d > k) 2.0 else d.toDouble / mx
-          }
-        }
-      case 5 => // indel: dist >= diff/(la+lb)
-        if (la + lb == 0) 0.0
-        else {
-          val k = (maxDist * (la + lb)).toInt
-          if (diff > k) 2.0
-          else {
-            val d = indelBounded(sa, sb, k)
-            if (d > k) 2.0 else d.toDouble / (la + lb)
-          }
-        }
-      case 1 => // jaro: sim <= (min/max + 2) / 3 => dist >= (1 - min/max)/3
-        if (diff > 3.0 * maxDist * mx) 2.0 else jaroDist(sa, sb)
-      case 2 =>
-        // jaro-winkler: the prefix boost can recover up to 0.4 of the jaro
-        // gap (4 * 0.1), so dist >= 0.6 * (1 - jaroBound) = 0.2 * diff / mx
-        if (diff > 5.0 * maxDist * mx) 2.0 else jaroWinklerDist(sa, sb)
+      case 0 | 4 => diff > (maxDist * mx).toInt
+      case 3 => diff > maxDist * mx
+      case 5 => diff > (maxDist * (la + lb)).toInt
+      case 1 => diff > 3.0 * maxDist * mx
+      case 2 => diff > 5.0 * maxDist * mx
       case _ => throw new IllegalArgumentException(s"bad algorithm id $id")
     }
   }
+
+  /** The in-band half of a bounded kernel, for a pair [[lengthRejects]]
+    * passed: exact normalized distance when it is <= maxDist, 2.0 (or any
+    * value > maxDist) otherwise. */
+  private[fuzzy] abstract class InBandKernel extends Serializable {
+    def dist(a: String, b: String, maxDist: Double): Double
+  }
+
+  /** [[InBandKernel]]s indexed by [[FuzzyAlgorithm.id]], so a caller picks
+    * the kernel once rather than per pair. */
+  private[fuzzy] val inBand: Array[InBandKernel] = Array(
+    new InBandKernel { // levenshtein
+      def dist(a: String, b: String, maxDist: Double): Double = {
+        val mx = math.max(a.length, b.length)
+        if (mx == 0) 0.0
+        else {
+          val k = (maxDist * mx).toInt
+          val d = levenshteinBounded(a, b, k)
+          if (d > k) 2.0 else d.toDouble / mx
+        }
+      }
+    },
+    new InBandKernel {
+      def dist(a: String, b: String, maxDist: Double): Double = jaroDist(a, b)
+    },
+    new InBandKernel {
+      def dist(a: String, b: String, maxDist: Double): Double = jaroWinklerDist(a, b)
+    },
+    new InBandKernel {
+      def dist(a: String, b: String, maxDist: Double): Double = hammingDist(a, b)
+    },
+    new InBandKernel { // damerau
+      def dist(a: String, b: String, maxDist: Double): Double = {
+        val mx = math.max(a.length, b.length)
+        if (mx == 0) 0.0
+        else {
+          val k = (maxDist * mx).toInt
+          val d = damerauBounded(a, b, k)
+          if (d > k) 2.0 else d.toDouble / mx
+        }
+      }
+    },
+    new InBandKernel { // indel
+      def dist(a: String, b: String, maxDist: Double): Double = {
+        val total = a.length + b.length
+        if (total == 0) 0.0
+        else {
+          val k = (maxDist * total).toInt
+          val d = indelBounded(a, b, k)
+          if (d > k) 2.0 else d.toDouble / total
+        }
+      }
+    })
 
   // ------------------------------------------------------- damerau-levenshtein
 

@@ -385,33 +385,6 @@ case class BloomMightContain(child: Expression,
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** 64-bit character-set mask (see [[VectorKernels.charMask]]): the
-  * projection-level half of the exact cross join's mask pre-gate —
-  * computed once per DISTINCT VALUE before the join, so the per-pair gate
-  * is a bare xor + popcount in generated code. 0 disables the gate
-  * (non-ASCII or empty input). */
-case class CharMask(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "char_mask"
-  override protected def nullSafeEval(v: Any): Any =
-    VectorKernels.charMask(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.fuzzy.VectorKernels.charMask($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Bigram-set companion of [[CharMask]] (see [[VectorKernels.bigramMask]]):
-  * bound is `4 * distance`, separation on running text is much sharper. */
-case class BigramMask(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "bigram_mask"
-  override protected def nullSafeEval(v: Any): Any =
-    VectorKernels.bigramMask(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.fuzzy.VectorKernels.bigramMask($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 case class CharNgrams(child: Expression, n: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "char_ngrams"
@@ -615,8 +588,6 @@ object vectorFunctions {
     c(SignLshBits(x(vec), planes, dim))
   def sign_lsh_bits_int(vec: Column, planes: Array[Long], dim: Int): Column =
     c(SignLshBitsInt(x(vec), planes, dim))
-  def char_mask(text: Column): Column = c(CharMask(x(text)))
-  def bigram_mask(text: Column): Column = c(BigramMask(x(text)))
   def char_ngrams(text: Column, n: Int): Column = c(CharNgrams(x(text), n))
   def word_shingles(text: Column, n: Int): Column = c(WordShingles(x(text), n))
   def hashed_shingle_set(text: Column, n: Int): Column = c(HashedShingleSet(x(text), n))

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape guards for the properties that matter at 100 TB: filters and
-  * projections must reach the parquet scan, the value-level cross join must
-  * broadcast its small side, and scoring must run inside WholeStageCodegen.
+  * projections must reach the parquet scan, and the exact value-level
+  * cross join must run as the broadcast sweep generator, never as a
+  * nested-loop or cartesian join over the pair stream.
   * These regress silently — a refactor that breaks pushdown still returns
   * correct rows, just 100x slower on a real corpus.
   */
@@ -50,23 +51,24 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
       s"jaccard gate missing from the candidate plan:\n$plan")
   }
 
-  test("exact value scoring: broadcast cross join, kernel filter inside codegen") {
+  test("exact value scoring: the broadcast sweep for every algorithm, blocked or not") {
     val c = spark.read.parquet(s"$dir/customer.parquet")
     val s = spark.read.parquet(s"$dir/supplier.parquet")
     val cIdx = FuzzyMatcher.addIndexColumn(c, "__left_index")
     val sIdx = FuzzyMatcher.addIndexColumn(s, "__right_index")
-    val cand = FuzzyMatcher.freshCandidates(cIdx, sIdx, "c_name", "s_name",
-      MatchOptions(useApproxNearestNeighbor = Some(false)), reversedThreshold = 0.3)
-    val scored = FuzzyMatcher.scoreValuePairs(cand, "c_name", "s_name",
-      FuzzyAlgorithm.Levenshtein, 0.3)
-    val plan = scored.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastExchange"),
-      s"small value side not broadcast in the exact cross join:\n$plan")
-    // the bounded kernel must be FUSED into the join condition — the
-    // cartesian stream is filtered as it is produced, never materialized
-    val joinLine = plan.linesIterator.find(_.contains("BroadcastNestedLoopJoin"))
-    assert(joinLine.exists(_.contains("dist_bounded")),
-      s"bounded kernel not fused into the join condition:\n$plan")
+    for (algo <- FuzzyAlgorithm.all; limit <- Seq(200000L, 3L)) {
+      val (scored, usedLsh) = FuzzyMatcher.freshScoredValuePairs(cIdx, sIdx,
+        FuzzyMapping("c_name", "s_name", 70.0, algo),
+        MatchOptions(useApproxNearestNeighbor = Some(false), broadcastDistinctLimit = limit))
+      assert(!usedLsh)
+      val plan = scored.queryExecution.executedPlan.toString
+      // the kernel runs inside the generator over the value frame: the
+      // cartesian stream is scored as it is produced, never materialized
+      assert(plan.contains("fuzzy_sweep"),
+        s"${algo.name}, block $limit: sweep generator missing:\n$plan")
+      assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
+        s"${algo.name}, block $limit: nested-loop join on the pair stream:\n$plan")
+    }
   }
 
   test("hash sampling is a pure pushed-past-pruning filter: no shuffle anywhere") {

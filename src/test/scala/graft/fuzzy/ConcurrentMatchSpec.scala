@@ -73,23 +73,24 @@ class ConcurrentMatchSpec extends AnyFunSuite with SparkSpec {
     val (degLeft, degRight) = degFrames
     val (divLeft, divRight) = divFrames
 
+    // threshold 90 = reversed threshold 0.1
+    val m = FuzzyMapping("k", "g", 90.0, FuzzyAlgorithm.Levenshtein)
     def decide(left: DataFrame, right: DataFrame): String =
       MatchScope.withMatchScope {
-        val cands = FuzzyMatcher.freshCandidates(left, right, "k", "g", opts,
-          reversedThreshold = 0.1)
+        val (scored, _) = FuzzyMatcher.freshScoredValuePairs(left, right, m, opts)
         // consume inside the scope; the plan string carries the decision
-        val plan = cands.queryExecution.executedPlan.toString
-        cands.count()
+        val plan = scored.queryExecution.executedPlan.toString
+        scored.count()
         plan
       }
 
     for (round <- 0 until 3) {
       val (degPlan, divPlan) = runPair(
         decide(degLeft, degRight), decide(divLeft, divRight), round)
-      assert(degPlan.contains("CartesianProduct") ||
-          degPlan.contains("BroadcastNestedLoopJoin"),
+      assert(degPlan.contains("fuzzy_sweep"),
         s"round $round: the degenerate join's volume gate did not bail to exact")
-      assert(!divPlan.contains("CartesianProduct") &&
+      assert(!divPlan.contains("fuzzy_sweep") &&
+          !divPlan.contains("CartesianProduct") &&
           !divPlan.contains("BroadcastNestedLoopJoin"),
         s"round $round: the diverse join lost its LSH plan")
     }

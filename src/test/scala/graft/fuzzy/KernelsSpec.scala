@@ -166,6 +166,9 @@ class KernelsSpec extends AnyFunSuite {
         val ub = org.apache.spark.unsafe.types.UTF8String.fromString(b)
         val full = Kernels.dist(algo.id, ua, ub)
         val bounded = Kernels.distBounded(algo.id, ua, ub, maxDist)
+        // the length band the sweep skips by must never drop a match
+        if (Kernels.lengthRejects(algo.id, a.length, b.length, maxDist))
+          assert(full > maxDist, s"${algo.name}($a,$b) length-rejected at $maxDist, full=$full")
         if (full <= maxDist) assert(math.abs(bounded - full) < eps,
           s"${algo.name}($a,$b) bounded=$bounded full=$full maxDist=$maxDist")
         else assert(bounded > maxDist,

@@ -2,66 +2,53 @@ package graft.fuzzy
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Equivalence pin for the r20 broadcast-sweep scoring path: for exact
-  * levenshtein passes, [[SweepScore]]/[[LevSweep]] must reproduce the BNLJ
-  * candidate + mask-gate + bounded-kernel shape pair-for-pair and
-  * score-for-score. The BNLJ reference path is forced by
-  * `broadcastDistinctLimit = 0` (the sweep requires a broadcast-sized
-  * side — the same condition under which the old shape broadcast it).
+/** Plan pins for the exact path's one scorer: every fresh exact pass, of
+  * every algorithm, blocked or not, runs the [[FuzzySweep]] generator over
+  * the value frame, with no nested-loop or cartesian join on the pair
+  * stream. Its pairs and scores are pinned against an in-memory brute force
+  * by FuzzyMatcherPropertySpec's differential matrix.
   */
 class SweepSpec extends AnyFunSuite with SparkSpec {
-
-  private def matchAll(left: DataFrame, right: DataFrame, opts: MatchOptions,
-                       threshold: Double = 80.0): Seq[(String, String, Double)] = {
-    import spark.implicits._
-    FuzzyMatcher.matchDfs(left, right,
-        Seq(FuzzyMapping("a", "b", threshold, FuzzyAlgorithm.Levenshtein)), opts)
-      .select(col("a"), col("b"), col("a_vs_b_levenshtein"))
-      .as[(String, String, Double)].collect().toSeq.sorted
-  }
 
   private def corpus: (DataFrame, DataFrame) = {
     import spark.implicits._
     (SweepSpec.leftRows.toDF("lid", "a"), SweepSpec.rightRows.toDF("rid", "b"))
   }
 
-  test("sweep path reproduces the BNLJ path: pairs and scores, thresholds 70-100") {
-    val (l, r) = corpus
-    for (t <- Seq(70.0, 80.0, 90.0, 100.0)) {
-      val sweep = matchAll(l, r, MatchOptions(useApproxNearestNeighbor = Some(false)), t)
-      val bnlj = matchAll(l, r,
-        MatchOptions(useApproxNearestNeighbor = Some(false), broadcastDistinctLimit = 0L), t)
-      assert(sweep == bnlj, s"sweep vs BNLJ mismatch at threshold $t")
-      assert(sweep.nonEmpty, s"degenerate test corpus at threshold $t")
-    }
-  }
-
-  test("sweep plan: Generate over the value frame, no join on the pair stream") {
+  private def freshPlan(algo: FuzzyAlgorithm, opts: MatchOptions): String = {
     val (l, r) = corpus
     val lIdx = FuzzyMatcher.addIndexColumn(l, "__left_index")
     val rIdx = FuzzyMatcher.addIndexColumn(r, "__right_index")
     val (scored, usedLsh) = FuzzyMatcher.freshScoredValuePairs(lIdx, rIdx,
-      FuzzyMapping("a", "b", 90.0, FuzzyAlgorithm.Levenshtein),
-      MatchOptions(useApproxNearestNeighbor = Some(false)))
+      FuzzyMapping("a", "b", 80.0, algo), opts)
     assert(!usedLsh)
-    val plan = scored.queryExecution.executedPlan.toString
-    assert(plan.contains("lev_sweep"), s"sweep generator missing:\n$plan")
-    assert(!plan.contains("BroadcastNestedLoopJoin"),
-      s"sweep plan still carries the BNLJ:\n$plan")
+    scored.queryExecution.executedPlan.toString
   }
 
-  test("non-levenshtein passes keep the BNLJ shape") {
-    val (l, r) = corpus
-    val lIdx = FuzzyMatcher.addIndexColumn(l, "__left_index")
-    val rIdx = FuzzyMatcher.addIndexColumn(r, "__right_index")
-    val (scored, _) = FuzzyMatcher.freshScoredValuePairs(lIdx, rIdx,
-      FuzzyMapping("a", "b", 80.0, FuzzyAlgorithm.JaroWinkler),
+  test("sweep plan: Generate over the value frame, no join on the pair stream") {
+    val plan = freshPlan(FuzzyAlgorithm.Levenshtein,
       MatchOptions(useApproxNearestNeighbor = Some(false)))
-    val plan = scored.queryExecution.executedPlan.toString
-    assert(!plan.contains("lev_sweep"), s"sweep must be levenshtein-only:\n$plan")
+    assert(plan.contains("fuzzy_sweep"), s"sweep generator missing:\n$plan")
+    assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
+      s"sweep plan still carries a nested-loop join:\n$plan")
+  }
+
+  test("every algorithm sweeps, in one block or many") {
+    for (algo <- FuzzyAlgorithm.all; limit <- Seq(200000L, 3L)) {
+      val plan = freshPlan(algo,
+        MatchOptions(useApproxNearestNeighbor = Some(false), broadcastDistinctLimit = limit))
+      assert(plan.contains("fuzzy_sweep"), s"${algo.name}, block $limit: no sweep:\n$plan")
+      assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
+        s"${algo.name}, block $limit: nested-loop join on the pair stream:\n$plan")
+    }
+  }
+
+  test("a non-positive block size fails naming the option") {
+    val e = intercept[IllegalArgumentException](freshPlan(FuzzyAlgorithm.Jaro,
+      MatchOptions(useApproxNearestNeighbor = Some(false), broadcastDistinctLimit = 0L)))
+    assert(e.getMessage.contains("broadcastDistinctLimit"))
   }
 }
 

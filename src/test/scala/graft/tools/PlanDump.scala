@@ -16,10 +16,10 @@ import graft.fuzzy.{FuzzyAlgorithm, FuzzyMatcher, MatchOptions}
   * query is being BUILT (checkpoint barriers), so the tail explain of a
   * full `matchDfs` shows only the assembly joins over checkpoint scans.
   * The plan that actually carries the runtime — candidate generation +
-  * the scored cross join — is therefore captured separately via the same
-  * public entry points the matcher uses (`freshCandidates` +
-  * `scoreValuePairs`). Everything runs at sf0.001: plan SHAPE is
-  * scale-independent, and dumping must not take bench-scale minutes.
+  * scoring — is therefore captured separately via the same public entry
+  * point the matcher uses for a fresh pass (`freshScoredValuePairs`).
+  * Everything runs at sf0.001: plan SHAPE is scale-independent, and
+  * dumping must not take bench-scale minutes.
   *
   * Usage: Test/runMain graft.tools.PlanDump <tag> [round]
   */
@@ -46,28 +46,31 @@ object PlanDump {
 
     val c = spark.read.parquet(s"$sfDir/customer.parquet")
 
-    // ---- the scoring-join core (exact path): distinct values -> projected
-    // sides -> cross join -> bounded kernel (+ mask gate after r19) ----
+    // ---- the scoring core (exact path): distinct values -> broadcast
+    // sweep generator (length band + mask gate + bounded kernel) ----
     val l = c.select(col("c_name"))
     val r = c.select(col("c_name").as("r_name"))
-    // the path the matcher actually takes since r20: the fused broadcast
-    // sweep (freshScoredValuePairs) — before-plans show the BNLJ shape it
-    // replaced (freshCandidates + scoreValuePairs)
     dump("scoring_join_exact",
       FuzzyMatcher.freshScoredValuePairs(l, r,
         graft.fuzzy.FuzzyMapping("c_name", "r_name", 90.0,
           FuzzyAlgorithm.Levenshtein),
         MatchOptions(useApproxNearestNeighbor = Some(false)))._1)
+    // every algorithm takes the same sweep; jaro-winkler shows the generic
+    // (non-levenshtein) kernel dispatch
+    dump("scoring_join_exact_jw",
+      FuzzyMatcher.freshScoredValuePairs(l, r,
+        graft.fuzzy.FuzzyMapping("c_name", "r_name", 90.0,
+          FuzzyAlgorithm.JaroWinkler),
+        MatchOptions(useApproxNearestNeighbor = Some(false)))._1)
 
-    // ---- the LSH candidate pipeline core (band join -> dedup -> jaccard
-    // gate -> topN) + its scored verify join ----
+    // ---- the LSH candidate pipeline (band join -> dedup -> jaccard gate
+    // -> topN) + its scored verify join ----
     val opts = MatchOptions(lshNumBands = 12, lshRowsPerBand = 5,
       useApproxNearestNeighbor = Some(true))
-    val lshCands = FuzzyMatcher.freshCandidates(l, r, "c_name", "r_name", opts, 0.1)
-    dump("lsh_candidates", lshCands)
     dump("scoring_join_lsh",
-      FuzzyMatcher.scoreValuePairs(lshCands, "c_name", "r_name",
-        FuzzyAlgorithm.Levenshtein, 0.1))
+      FuzzyMatcher.freshScoredValuePairs(l, r,
+        graft.fuzzy.FuzzyMapping("c_name", "r_name", 90.0,
+          FuzzyAlgorithm.Levenshtein), opts)._1)
 
     // ---- full bench queries (tail assembly plans; barriers make these
     // short, captured for completeness) ----
