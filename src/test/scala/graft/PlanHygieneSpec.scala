@@ -51,7 +51,7 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
       s"jaccard gate missing from the candidate plan:\n$plan")
   }
 
-  test("exact value scoring: the broadcast sweep for every algorithm, blocked or not") {
+  test("exact value scoring: broadcast sweep, every algorithm, blocked or not") {
     val c = spark.read.parquet(s"$dir/customer.parquet")
     val s = spark.read.parquet(s"$dir/supplier.parquet")
     val cIdx = FuzzyMatcher.addIndexColumn(c, "__left_index")
