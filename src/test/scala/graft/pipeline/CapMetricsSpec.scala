@@ -123,4 +123,46 @@ class CapMetricsSpec extends AnyFunSuite with SparkSpec {
     assert(gate2.isLeft, "with drops over the driver cap the gate must return a frame")
     assert(s2.droppedBuckets == 4 && s2.keptPairs == 0L)
   }
+
+  test("all three gate regimes keep the same rows and account the same stats") {
+    import spark.implicits._
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.functions._
+    // 12 buckets over 3 bands, 4 of them over the cap (n*n > 100): the
+    // default driver cap collects them all, 6 forces cluster-side
+    // accounting with blocked keys, 2 (< 4 drops) the allowed-frame join
+    val sizes = Seq(2, 3, 11, 1, 12, 4, 2, 20, 5, 13, 1, 3)
+    val banded = sizes.zipWithIndex.flatMap { case (n, b) =>
+      (0 until n).map(i => (b % 3, (b * 7919L) - 40000L, s"r$b.$i"))
+    }.toDF("__band", "__bucket", "id")
+    val cells = banded.select(col("__bucket").as("cell"), col("id"))
+    def stats(df: DataFrame, band: Column, key: Column): DataFrame =
+      df.groupBy(band.as("__b"), key.as("__k")).agg(count(lit(1)).as("__n"))
+    val shapes = Seq(
+      ("band", banded, stats(banded, col("__band"), col("__bucket")),
+        col("__band"), col("__bucket")),
+      ("cell", cells, stats(cells, lit(0), col("cell")), lit(0), col("cell")))
+    for ((shape, df, st, band, key) <- shapes) {
+      val runs = Seq(2_000_000, 6, 2).map { maxDriver =>
+        val (g, s) = CapMetrics.gateWithStats(st, "regime_spec", "__b", "__k",
+          col("__n") * col("__n") > 100L, col("__n") * col("__n"),
+          graft.util.CheckpointStrategy.Local, maxDriverBuckets = maxDriver)
+        val kept = g match {
+          case Right(b) =>
+            if (b.isEmpty) df else df.where(!graft.fuzzy.vectorFunctions.bucket_allowed(band, key, b))
+          case Left(allowed) =>
+            df.join(allowed.select(col("__b").as("__gb"), col("__k").as("__gk")),
+              band === col("__gb") && key === col("__gk"), "left_semi")
+        }
+        (kept.select("id").as[String].collect().sorted.toSeq, s)
+      }
+      assert(runs.head._2 == CapMetrics.CapStats(4, 12, 144 + 121 + 400 + 169, 4 + 9 + 1 + 16 + 4 + 25 + 1 + 9),
+        s"$shape: ${runs.head._2}")
+      assert(runs.head._1.size == sizes.filter(_ <= 10).sum, s"$shape: ${runs.head._1.size}")
+      runs.tail.foreach { r =>
+        assert(r._1 == runs.head._1, s"$shape: kept rows differ across regimes")
+        assert(r._2 == runs.head._2, s"$shape: stats differ across regimes")
+      }
+    }
+  }
 }
