@@ -486,8 +486,9 @@ object Bench {
     * round can never raise the bar, and a real regression ages in after
     * the window rolls. Only applied/updated at the driver's sf0.1. */
   val FamilyHistoryLen = 5
+  // relative to the repo root: sbt forks `runMain` in the project directory
   private def familyPath: String =
-    sys.env.getOrElse("SPARK_GRAFT_FAMILY", "/root/repo/bench_family.json")
+    sys.env.getOrElse("SPARK_GRAFT_FAMILY", "bench_family.json")
 
   private[graft] def loadFamily(): Map[String, Seq[Double]] = {
     val f = new java.io.File(familyPath)
@@ -505,6 +506,14 @@ object Bench {
         Map.empty
     }
   }
+
+  /** Whether a run may write the committed records (`BENCH_LOCAL.json`
+    * and the family history): only a FULL run at the driver's scale
+    * factor. A filtered dev loop or an sf0.001 sanity run must never
+    * clobber the round's 24-row sf0.1 record or its family history. */
+  private[graft] def writesCommittedRecords(sfDir: String,
+                                            only: Option[Set[String]]): Boolean =
+    only.isEmpty && sfDir.contains("sf0.1")
 
   private def saveFamily(hist: Map[String, Seq[Double]]): Unit = {
     val txt = hist.toSeq.sortBy(_._1).map { case (k, vs) =>
@@ -627,11 +636,9 @@ object Bench {
       "calibration" -> cal,
       "sf" -> ("\"" + sfDir + "\"")))
 
-    // only a FULL run at the driver's scale factor may write the
-    // committed record — a filtered dev loop or an sf0.001 sanity run
-    // must never clobber the round's 24-row sf0.1 record in the repo
+    val commitRecords = writesCommittedRecords(sfDir, only)
     val detailPath =
-      if (only.isEmpty && familyApplies) "/root/repo/BENCH_LOCAL.json"
+      if (commitRecords) "BENCH_LOCAL.json"
       else "/tmp/graft_bench_local_dev.json"
     def writeDetail(detail: String): Unit =
       try java.nio.file.Files.write(
@@ -848,7 +855,7 @@ object Bench {
       val (updated, adjRows) = updateFamilyHistory(prev,
         results.collect { case r if r.familyEligible => r.name -> r.best })
       adjudicatedRows = adjRows
-      saveFamily(updated)
+      if (commitRecords) saveFamily(updated)
     } catch { case e: Exception =>
       System.err.println(s"[bench] could not update family file: $e") }
 

@@ -82,8 +82,7 @@ object AnnJoin {
                                 leftCol: String, rightCol: String,
                                 opts: MatchOptions, reversedThreshold: Double,
                                 totalValues: Long, cartesian: Double): Option[DataFrame] = {
-    require(opts.lshNumBands >= 1 && opts.lshNumBands < 131,
-      s"lshNumBands must be in [1, 130] (got ${opts.lshNumBands})")
+    CapMetrics.requireBands(opts.lshNumBands, "lshNumBands")
     val n = opts.lshNgramSize
 
     val probeApplies =
@@ -154,10 +153,7 @@ object AnnJoin {
                  leftCol: String, rightCol: String,
                  opts: MatchOptions, reversedThreshold: Double = 1.0,
                  totalValues: Long = -1L): DataFrame = {
-    // CapMetrics' blocked-key encoding is key*131+band — band counts
-    // past 130 would alias distinct buckets (silent recall loss)
-    require(opts.lshNumBands >= 1 && opts.lshNumBands < 131,
-      s"lshNumBands must be in [1, 130] (got ${opts.lshNumBands})")
+    CapMetrics.requireBands(opts.lshNumBands, "lshNumBands")
     val total =
       if (totalValues > 0) totalValues
       else leftValues.count() + rightValues.count()
@@ -308,13 +304,8 @@ object AnnJoin {
       .agg(sum(col("__l")).as("__lc"), sum(col("__r")).as("__rc"))
       .where(col("__lc") > 0 && col("__rc") > 0)
     val overCap = col("__lc") * col("__rc") > opts.lshMaxBucketPairs
-    // estBuckets = the band-row count, an upper bound on distinct
-    // (band, key) buckets: past ~500k buckets CapMetrics accounts
-    // cluster-side instead of collecting every healthy bucket to the
-    // driver (the former single largest candidate-generation stage).
-    val (gatePredicate, capStats) = CapMetrics.gateWithStats(bucketStats, "fuzzy_lsh",
-      "__band", "__bkey", overCap, col("__lc") * col("__rc"), opts.checkpoint,
-      estBuckets = sys.env.get("GRAFT_AB_OLDGATE").map(_ => -1L).getOrElse(estBandRows))
+    val gate = CapMetrics.gate(bucketStats, "fuzzy_lsh",
+      "__band", "__bkey", overCap, col("__lc") * col("__rc"), opts.checkpoint)
 
     // Volume bail (auto mode): plan on THIS gate call's returned stats —
     // `lastMetrics("fuzzy_lsh")` is a global keyed by stage name, so under
@@ -336,22 +327,12 @@ object AnnJoin {
     // The capped band join as a function of the left banded frame, so the
     // volume-bail estimator below can run it on a SAMPLE of left values
     // before the real join runs on all of them.
-    val gatedJoin: DataFrame => DataFrame = lbIn => gatePredicate match {
-      case Right(blockedKeys) =>
-        // keep rows whose bucket is NOT in the dropped set (O(drops) driver
-        // state — no join against the bucket list at any corpus size)
-        val keep = (df: DataFrame) =>
-          if (blockedKeys.isEmpty) df
-          else df.where(!vectorFunctions.bucket_allowed(col("__band"), col("__bkey"), blockedKeys))
-        keep(lbIn).join(keep(rb), Seq("__band", "__bkey"))
-      case Left(allowed) =>
-        lbIn.join(allowed, Seq("__band", "__bkey"))
-          .join(rb, Seq("__band", "__bkey"))
-    }
+    val gatedJoin: DataFrame => DataFrame = lbIn =>
+      gate.keep(lbIn).join(gate.keep(rb), Seq("__band", "__bkey"))
 
     bailVolume match {
       case Some(budget) =>
-        val rawPlanned = (capStats.keptPairs + capStats.droppedPairs).toDouble
+        val rawPlanned = (gate.stats.keptPairs + gate.stats.droppedPairs).toDouble
         val uniquePlanned =
           if (rawPlanned / bands > budget || rawPlanned <= budget) rawPlanned / bands
           else {

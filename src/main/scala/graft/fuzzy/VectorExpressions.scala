@@ -146,12 +146,11 @@ case class WinnowSketch(child: Expression, k: Int, window: Int,
 
 /** Membership of the (band, bucket-key) pair in a driver-collected key set,
   * stored as a sorted long array probed by binary search — the
-  * broadcast-hash-join of bucket gating without the join stage. Callers of
-  * [[graft.util.CapMetrics.gate]] negate it over the DROPPED keys (keep =
-  * not blocked), so driver state is O(drops) at any corpus size. Key
-  * encoding `key * 131 + band` must match [[graft.util.CapMetrics.gate]];
-  * 131 exceeds every validated band count (≤ 64) so distinct (band, key)
-  * pairs never collide. */
+  * broadcast-hash-join of bucket gating without the join stage.
+  * [[graft.util.CapMetrics.BucketGate]] negates it over the DROPPED keys
+  * (keep = not blocked), so driver state is O(drops) at any corpus size.
+  * Keys use [[graft.util.CapMetrics.bucketKey]] (`key * 131 + band`), which
+  * keeps every band count in [1, 130] apart. */
 case class BucketAllowed(band: Expression, bkey: Expression, sortedKeys: Array[Long])
     extends BinaryExpression with Predicate {
   override def left: Expression = band
@@ -159,11 +158,11 @@ case class BucketAllowed(band: Expression, bkey: Expression, sortedKeys: Array[L
   override def prettyName: String = "bucket_allowed"
   override protected def nullSafeEval(b: Any, k: Any): Any =
     java.util.Arrays.binarySearch(sortedKeys,
-      k.asInstanceOf[Long] * 131L + b.asInstanceOf[Int]) >= 0
+      graft.util.CapMetrics.bucketKey(b.asInstanceOf[Int], k.asInstanceOf[Long])) >= 0
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("sortedKeys", sortedKeys, "long[]")
     defineCodeGen(ctx, ev, (b, k) =>
-      s"(java.util.Arrays.binarySearch($ref, ((long)$k) * 131L + $b) >= 0)")
+      s"(java.util.Arrays.binarySearch($ref, graft.util.CapMetrics.bucketKey($b, (long)$k)) >= 0)")
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(band = l, bkey = r)

@@ -1302,21 +1302,12 @@ object AnnSearch {
       .agg(sum(col("__q")).as("__qc"), sum(col("__c")).as("__cc"))
       .where(col("__qc") > 0 && col("__cc") > 0)
     val overCap = col("__qc") * col("__cc") > maxBucketPairs
-    val (qg, cg) = graft.util.CapMetrics.gate(bucketStats, "ann_lsh_topk",
-        "__band", "__bkey", overCap, col("__qc") * col("__cc"), checkpoint) match {
-      case Right(blocked) =>
-        val keep = (df: DataFrame) =>
-          if (blocked.isEmpty) df
-          else df.where(!graft.fuzzy.vectorFunctions.bucket_allowed(
-            col("__band"), col("__bkey"), blocked))
-        (keep(qb), keep(cb))
-      case Left(allowed) =>
-        (qb.join(allowed, Seq("__band", "__bkey")), cb)
-    }
+    val gate = graft.util.CapMetrics.gate(bucketStats, "ann_lsh_topk",
+        "__band", "__bkey", overCap, col("__qc") * col("__cc"), checkpoint)
 
     // 16-byte id pairs through the bucket join and the dedup; the exact
     // cosine runs once per unique pair after both vectors re-attach by id
-    val pairIds = qg.join(cg, Seq("__band", "__bkey"))
+    val pairIds = gate.keep(qb).join(gate.keep(cb), Seq("__band", "__bkey"))
       .where(col("query_id") =!= col("corpus_id"))
       .select(col("query_id"), col("corpus_id"))
       .dropDuplicates("query_id", "corpus_id")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 import graft.pipeline.Dedup
-import graft.util.CheckpointStrategy
+import graft.util.{CapMetrics, CheckpointStrategy}
 
 /** Pure-SQL front door for near-duplicate PAIR GENERATION — the dedup
   * pillar of the pipeline ([[graft.pipeline.Dedup]]), previously
@@ -89,10 +89,10 @@ object DedupPairsTable {
       case "shingle_len" => shingleLen = A.int(v, "shingle_len value")
       case "num_bands" =>
         numBands = A.int(v, "num_bands value")
-        // CapMetrics' blocked-key encoding (key*131+band) aliases band
-        // counts past 130 — reject here with the TVF's own diagnostic
-        if (numBands < 1 || numBands > 130)
-          A.bad("num_bands must be in [1, 130]", numBands)
+        // the bucket cap's blocked-key encoding aliases band counts past
+        // CapMetrics.MaxBands — reject here with the TVF's own diagnostic
+        if (numBands < 1 || numBands > CapMetrics.MaxBands)
+          A.bad(s"num_bands must be in [1, ${CapMetrics.MaxBands}]", numBands)
       case "rows_per_band" => rowsPerBand = A.int(v, "rows_per_band value")
       case "threshold" => threshold = Some(A.dbl(v, "threshold value"))
       case "ngram_n" => ngramN = A.int(v, "ngram_n value")

@@ -6,15 +6,16 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.slf4j.LoggerFactory
 
-/** Observability for LSH bucket-cap drops.
+/** The bucket cap shared by every LSH-style pair generator, with its
+  * accounting.
   *
   * Every LSH-style pair generator in the engine caps bucket sizes so a
   * degenerate bucket cannot concentrate quadratic work on one reducer
   * (see [[graft.fuzzy.AnnJoin]]). The cap trades recall for boundedness —
-  * and that trade must never be silent. [[accountBucketCap]] materializes
+  * and that trade must never be silent. [[gate]] accounts the drops from
   * the per-bucket statistics frame (tiny: one row per candidate bucket,
-  * already aggregated — the join needs it anyway), runs one cheap
-  * driver-side aggregate over it, and logs one line per capped stage:
+  * already aggregated — the join needs it anyway) and logs one line per
+  * capped stage:
   *
   *   [graft.cap] <stage>: dropped N of M buckets (~P candidate pairs)
   *
@@ -50,22 +51,48 @@ object CapMetrics {
       log.info(s"[graft.cap] $stage: no buckets dropped (total ${s.totalBuckets})")
   }
 
-  /** Materialize `bucketStats`, account + log what `overCap` will drop, and
-    * return the materialized frame for the caller to filter. `overCap` must
-    * be the same predicate the caller uses to FILTER the buckets; `pairs` is
-    * the candidate-pair count a bucket would have contributed. */
-  def accountBucketCap(bucketStats: DataFrame, stage: String,
-                       overCap: Column, pairs: Column,
-                       checkpoint: CheckpointStrategy): DataFrame =
-    accountBucketCapWithStats(bucketStats, stage, overCap, pairs, checkpoint)._1
+  /** Largest band count the blocked-key encoding [[bucketKey]] keeps apart:
+    * past it, distinct (band, key) pairs alias and a healthy bucket could
+    * be dropped with an over-cap one. */
+  val MaxBands = 130
+
+  /** The blocked-key encoding of a (band, key) bucket, shared with
+    * [[graft.fuzzy.BucketAllowed]]. Wraps on overflow by design (Spark-side
+    * long arithmetic would throw under ANSI instead). */
+  def bucketKey(band: Int, key: Long): Long = key * 131L + band
+
+  /** Reject a band count the blocked-key encoding cannot keep apart. Every
+    * banded entry point calls this before its first Spark job. */
+  def requireBands(n: Int, name: String = "numBands"): Unit =
+    require(n >= 1 && n <= MaxBands,
+      s"$name must be in [1, $MaxBands] (got $n): the bucket-cap " +
+        s"blocked-key encoding (key*131+band) aliases band counts past $MaxBands")
+
+  /** What [[gate]] decided: the accounted [[CapStats]] and [[keep]], which
+    * removes the rows of dropped buckets from any frame keyed like the
+    * statistics. Callers plan on `stats`, not on `lastMetrics(stage)`:
+    * concurrent matches on different driver threads (a supported pattern —
+    * MatchScope is per-thread) share the stage key. */
+  final class BucketGate private[CapMetrics] (val stats: CapStats,
+      bandCol: String, keyCol: String,
+      blocked: Array[Long], allowed: Option[DataFrame]) {
+    /** `df` without the rows of dropped buckets. `band` must be int-typed
+      * and `key` long-typed; a single-key gate passes `band = lit(0)`. */
+    def keep(df: DataFrame, band: Column = col(bandCol), key: Column = col(keyCol)): DataFrame =
+      allowed match {
+        case Some(a) =>
+          df.join(a, band === col("__gate_band") && key === col("__gate_key"), "left_semi")
+        case None if blocked.isEmpty => df
+        case None => df.where(!graft.fuzzy.vectorFunctions.bucket_allowed(band, key, blocked))
+      }
+  }
 
   /** Bucket gate with accounting, three regimes (shared by every LSH-style
-    * pair generator). `Right` carries the sorted DROPPED bucket keys — the
-    * caller keeps rows whose bucket is NOT in the set (via a negated
-    * codegen'd membership filter, [[graft.fuzzy.BucketAllowed]]); `Left`
-    * carries an allowed-buckets frame to equi-join against:
-    *  - bucket count fits on the driver (small corpora): ONE collect,
-    *    driver-side drop accounting — no checkpoint, no extra action;
+    * pair generator). The regime follows the real bucket count:
+    *  - bucket count fits on the driver (up to `maxDriverBuckets`): ONE
+    *    collect, driver-side drop accounting — no checkpoint, no extra
+    *    action; [[BucketGate.keep]] filters out the dropped keys with a
+    *    codegen'd membership test ([[graft.fuzzy.BucketAllowed]]);
     *  - more buckets than that, but drops fit (THE scale regime: drops are
     *    outliers by design, so a 100 TB corpus with billions of healthy
     *    buckets still lands here): stats materialize cluster-side, one
@@ -75,53 +102,22 @@ object CapMetrics {
     *    at sf10: the allowed-frame join made LSH candidate generation grow
     *    18x at 10x values; the blocked-keys filter restored ~linear);
     *  - more DROPPED buckets than the driver cap (pathological — the
-    *    volume-bail/exact-fallback territory): allowed-frame join.
+    *    volume-bail/exact-fallback territory): [[BucketGate.keep]]
+    *    semi-joins the allowed-bucket frame.
     *
-    * `bandCol` must be int-typed, `keyCol` long-typed; the driver-side key
-    * is `key * 131 + band` (the multiplier must exceed every validated band
-    * count — currently ≤ 64 — or distinct (band, key) pairs collide and a
-    * healthy bucket could be dropped with an over-cap one), matching
-    * [[graft.fuzzy.BucketAllowed]] which MUST stay in sync. A 64-bit hash
-    * collision between a dropped and a kept bucket key drops the kept
-    * bucket too: a bounded recall perturbation (same class as the cap
-    * itself, ~drops x buckets / 2^64), never a wrong score. */
+    * `bandCol` must be int-typed and `keyCol` long-typed, with at most
+    * [[MaxBands]] bands ([[requireBands]]). A 64-bit hash collision between
+    * a dropped and a kept bucket key drops the kept bucket too: a bounded
+    * recall perturbation (same class as the cap itself, ~drops x buckets /
+    * 2^64), never a wrong score. `maxDriverBuckets` is the test seam that
+    * forces a regime. */
   def gate(bucketStats: DataFrame, stage: String, bandCol: String, keyCol: String,
            overCap: Column, pairs: Column, checkpoint: CheckpointStrategy,
-           maxDriverBuckets: Int = 2_000_000): Either[DataFrame, Array[Long]] =
-    gateWithStats(bucketStats, stage, bandCol, keyCol, overCap, pairs, checkpoint,
-      maxDriverBuckets)._1
-
-  /** As [[gate]], additionally returning the accounted [[CapStats]] so the
-    * caller can plan on ITS OWN numbers. Planning off `lastMetrics(stage)`
-    * instead is racy: concurrent matches on different driver threads (a
-    * supported pattern — MatchScope is per-thread) share the stage key, so
-    * one join's decision could read another join's volume. */
-  def gateWithStats(bucketStats: DataFrame, stage: String, bandCol: String, keyCol: String,
-           overCap: Column, pairs: Column, checkpoint: CheckpointStrategy,
-           maxDriverBuckets: Int = 2_000_000,
-           estBuckets: Long = -1L): (Either[DataFrame, Array[Long]], CapStats) = {
-    // `estBuckets` is the caller's upper bound on the bucket count (e.g.
-    // band-row count). Past this bar the small-regime collect below would
-    // ship every healthy bucket to the driver just to count it — measured
-    // as the single largest LSH candidate-generation stage at sf0.1
-    // (~1.6M collected rows). Account cluster-side instead and ship only
-    // the dropped keys: three small jobs over a materialized stats frame
-    // beat one multi-second full-bucket collect well before a million
-    // buckets, and driver memory stays O(drops).
-    val DriverCollectBucketBar = 500_000L
-    if (estBuckets > DriverCollectBucketBar) {
-      return clusterSideGate(bucketStats, stage, bandCol, keyCol, overCap,
-        pairs, checkpoint, maxDriverBuckets)
-    }
+           maxDriverBuckets: Int = 2_000_000): BucketGate = {
     val rows = bucketStats.select(col(bandCol).cast("int").as("__b"), col(keyCol).as("__k"),
         overCap.as("__over"), pairs.cast("long").as("__p"))
       .limit(maxDriverBuckets + 1).collect()
-    if (rows.length > maxDriverBuckets) {
-      // Too many buckets to ship (the scale regime — see the scaladoc on
-      // [[gate]]).
-      clusterSideGate(bucketStats, stage, bandCol, keyCol, overCap, pairs,
-        checkpoint, maxDriverBuckets)
-    } else {
+    if (rows.length <= maxDriverBuckets) {
       var dropped = 0L
       var droppedPairs = 0L
       var keptPairs = 0L
@@ -129,43 +125,22 @@ object CapMetrics {
       rows.foreach { r =>
         if (r.getBoolean(2)) {
           dropped += 1; droppedPairs += r.getLong(3)
-          blocked += r.getLong(1) * 131L + r.getInt(0)
+          blocked += bucketKey(r.getInt(0), r.getLong(1))
         } else keptPairs += r.getLong(3)
       }
       val s = CapStats(dropped, rows.length.toLong, droppedPairs, keptPairs)
       record(stage, s)
-      val sorted = blocked.result()
-      java.util.Arrays.sort(sorted)
-      (Right(sorted), s)
-    }
+      blockedGate(s, bandCol, keyCol, blocked.result())
+    } else clusterSideGate(bucketStats, stage, bandCol, keyCol, overCap, pairs,
+      checkpoint, maxDriverBuckets)
   }
 
-  /** Cluster-side accounting regime of [[gateWithStats]]: materialize the
-    * stats, account drops with one 4-scalar aggregate, ship only the
-    * dropped keys (or, pathologically, return the allowed frame). */
+  /** The cluster-side regimes of [[gate]]: materialize the stats, account
+    * drops with one 4-scalar aggregate, ship only the dropped keys (or,
+    * pathologically, keep the allowed-bucket frame). */
   private def clusterSideGate(bucketStats: DataFrame, stage: String,
-           bandCol: String, keyCol: String, overCap: Column, pairs: Column,
-           checkpoint: CheckpointStrategy,
-           maxDriverBuckets: Int): (Either[DataFrame, Array[Long]], CapStats) = {
-    val (stats, s) = accountBucketCapWithStats(bucketStats, stage, overCap, pairs, checkpoint)
-    if (s.droppedBuckets <= maxDriverBuckets) {
-      // hash on the driver: key * 131 wraps on overflow by design, and
-      // Spark-side long arithmetic would throw under ANSI instead
-      val blocked = stats.where(overCap)
-        .select(col(bandCol).cast("int").as("__b"), col(keyCol).as("__k"))
-        .collect().map(r => r.getLong(1) * 131L + r.getInt(0))
-      java.util.Arrays.sort(blocked)
-      (Right(blocked), s)
-    } else
-      (Left(stats.where(!overCap).select(col(bandCol), col(keyCol))), s)
-  }
-
-  /** As [[accountBucketCap]], additionally returning the accounted numbers
-    * so callers can plan with them (e.g. broadcast the allowed-bucket list
-    * when the bucket count is known to be small). */
-  def accountBucketCapWithStats(bucketStats: DataFrame, stage: String,
-                                overCap: Column, pairs: Column,
-                                checkpoint: CheckpointStrategy): (DataFrame, CapStats) = {
+      bandCol: String, keyCol: String, overCap: Column, pairs: Column,
+      checkpoint: CheckpointStrategy, maxDriverBuckets: Int): BucketGate = {
     val stats = Materialize(bucketStats, checkpoint)
     val row = stats.agg(
       sum(when(overCap, 1L).otherwise(0L)).as("dropped_buckets"),
@@ -177,12 +152,19 @@ object CapMetrics {
       if (row.isNullAt(1)) 0L else row.getLong(1),
       if (row.isNullAt(2)) 0L else row.getLong(2),
       if (row.isNullAt(3)) 0L else row.getLong(3))
-    last.put(stage, s)
-    if (s.droppedBuckets > 0)
-      log.warn(s"[graft.cap] $stage: dropped ${s.droppedBuckets} of ${s.totalBuckets} buckets " +
-        s"(~${s.droppedPairs} candidate pairs) — raise the bucket cap or dedup inputs first")
+    record(stage, s)
+    if (s.droppedBuckets <= maxDriverBuckets)
+      blockedGate(s, bandCol, keyCol, stats.where(overCap)
+        .select(col(bandCol).cast("int").as("__b"), col(keyCol).as("__k"))
+        .collect().map(r => bucketKey(r.getInt(0), r.getLong(1))))
     else
-      log.info(s"[graft.cap] $stage: no buckets dropped (total ${s.totalBuckets})")
-    (stats, s)
+      new BucketGate(s, bandCol, keyCol, Array.emptyLongArray, Some(stats.where(!overCap)
+        .select(col(bandCol).as("__gate_band"), col(keyCol).as("__gate_key"))))
+  }
+
+  private def blockedGate(s: CapStats, bandCol: String, keyCol: String,
+                          keys: Array[Long]): BucketGate = {
+    java.util.Arrays.sort(keys)
+    new BucketGate(s, bandCol, keyCol, keys, None)
   }
 }

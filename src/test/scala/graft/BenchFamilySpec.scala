@@ -46,4 +46,12 @@ class BenchFamilySpec extends AnyFunSuite {
       Map("~adjudicated_row" -> Seq(99.0), "row" -> Seq(1.0)), Seq.empty)
     assert(u3("~adjudicated_row") == Seq(99.0) && u3("row") == Seq(1.0))
   }
+
+  test("only a full sf0.1 run writes the committed bench records") {
+    assert(Bench.writesCommittedRecords("/data/sf0.1", None))
+    // a filtered dev loop (SPARK_GRAFT_BENCH_ONLY) writes neither
+    // BENCH_LOCAL.json nor the family history
+    assert(!Bench.writesCommittedRecords("/data/sf0.1", Some(Set("fuzzy_annf_3g_lsh"))))
+    assert(!Bench.writesCommittedRecords("/data/sf0.001", None))
+  }
 }

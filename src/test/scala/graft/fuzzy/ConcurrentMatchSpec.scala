@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * matches). The race under test: CapMetrics' `lastMetrics` is a global
   * keyed by stage name ("fuzzy_lsh" for every fuzzy join), so a volume-gate
   * decision that read the global instead of its own gate call's returned
-  * stats (AnnJoin.buildOrBail via gateWithStats) could plan one join off
+  * stats (AnnJoin.buildOrBail reads `gate.stats`) could plan one join off
   * the OTHER join's candidate volume. Here one corpus is degenerate (the
   * runtime volume gate must bail it to exact — the sampled probe is
   * disabled so the decision rests ENTIRELY on the gate stats) and one is

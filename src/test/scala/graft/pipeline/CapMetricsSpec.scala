@@ -12,6 +12,14 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CapMetricsSpec extends AnyFunSuite with SparkSpec {
 
+  /** Whether the gated frame pays a join (the allowed-frame regime) rather
+    * than a filter. Read off the analyzed plan: a local fixture's filter is
+    * folded away before the optimized plan exists. */
+  private def hasJoin(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.collectFirst {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.isDefined
+
   test("minhash bucket cap drops are counted on a skewed fixture") {
     import spark.implicits._
     // 100 near-identical docs -> every band bucket holds ~50 docs; with a
@@ -81,14 +89,13 @@ class CapMetricsSpec extends AnyFunSuite with SparkSpec {
     // encoding both mapped to 31, making them indistinguishable in the
     // blocked-key set.
     val stats = Seq((31, 0L, 2L), (0, 1L, 1000L)).toDF("__band", "__bucket", "__n")
-    val gated = CapMetrics.gate(stats, "encoding_spec", "__band", "__bucket",
+    val gate = CapMetrics.gate(stats, "encoding_spec", "__band", "__bucket",
       col("__n") * col("__n") > 100L, col("__n") * col("__n"),
       graft.util.CheckpointStrategy.Local)
-    val blocked = gated.toOption.getOrElse(fail("expected driver-side gate regime"))
     val banded = Seq((31, 0L, "keep"), (0, 1L, "drop")).toDF("__band", "__bucket", "tag")
-    val kept = banded.where(!graft.fuzzy.vectorFunctions.bucket_allowed(
-        col("__band"), col("__bucket"), blocked))
-      .select("tag").collect().map(_.getString(0)).toSet
+    val gated = gate.keep(banded)
+    assert(!hasJoin(gated), "expected the driver-side gate regime (no join)")
+    val kept = gated.select("tag").collect().map(_.getString(0)).toSet
     assert(kept == Set("keep"), s"gate admitted wrong buckets: $kept")
     val s = CapMetrics.lastMetrics("encoding_spec").get
     assert(s.droppedBuckets == 1 && s.totalBuckets == 2)
@@ -104,27 +111,33 @@ class CapMetricsSpec extends AnyFunSuite with SparkSpec {
     // 18x at 10x values at sf10 (SCALE.md round 8).
     val stats = Seq((0, 1L, 2L), (1, 2L, 2L), (2, 3L, 2L), (3, 4L, 2L), (0, 5L, 1000L))
       .toDF("__band", "__bucket", "__n")
-    val (gate, s) = CapMetrics.gateWithStats(stats, "scale_regime_spec", "__band",
+    val banded = Seq((0, 1L, "a"), (1, 2L, "b"), (2, 3L, "c"), (3, 4L, "d"), (0, 5L, "hot"))
+      .toDF("__band", "__bucket", "tag")
+    val gate = CapMetrics.gate(stats, "scale_regime_spec", "__band",
       "__bucket", col("__n") * col("__n") > 100L, col("__n") * col("__n"),
       graft.util.CheckpointStrategy.Local, maxDriverBuckets = 2)
-    val blocked = gate.toOption
-      .getOrElse(fail("expected blocked-keys regime, got the allowed-frame join"))
-    assert(blocked.toSeq == Seq(5L * 131L + 0),
-      s"blocked set should hold exactly the over-cap bucket key: ${blocked.toSeq}")
+    val gated = gate.keep(banded)
+    assert(!hasJoin(gated), "expected blocked-keys regime, got the allowed-frame join")
+    assert(gated.select("tag").as[String].collect().toSet == Set("a", "b", "c", "d"),
+      "the blocked set should hold exactly the over-cap bucket key")
+    val s = gate.stats
     assert(s.droppedBuckets == 1 && s.totalBuckets == 5)
     assert(s.droppedPairs == 1000L * 1000L && s.keptPairs == 16L)
 
     // more DROPPED buckets than the cap: the join path remains the backstop
     val allOver = Seq((0, 1L, 50L), (1, 2L, 50L), (2, 3L, 50L), (3, 4L, 50L))
       .toDF("__band", "__bucket", "__n")
-    val (gate2, s2) = CapMetrics.gateWithStats(allOver, "scale_regime_spec", "__band",
+    val gate2 = CapMetrics.gate(allOver, "scale_regime_spec", "__band",
       "__bucket", col("__n") * col("__n") > 100L, col("__n") * col("__n"),
       graft.util.CheckpointStrategy.Local, maxDriverBuckets = 2)
-    assert(gate2.isLeft, "with drops over the driver cap the gate must return a frame")
+    val gated2 = gate2.keep(banded)
+    assert(hasJoin(gated2), "with drops over the driver cap the gate must join the allowed frame")
+    assert(gated2.count() == 0L)
+    val s2 = gate2.stats
     assert(s2.droppedBuckets == 4 && s2.keptPairs == 0L)
   }
 
-  test("all three gate regimes keep the same rows and account the same stats") {
+  test("all three gate regimes keep the same rows and stats") {
     import spark.implicits._
     import org.apache.spark.sql.{Column, DataFrame}
     import org.apache.spark.sql.functions._
@@ -144,17 +157,12 @@ class CapMetricsSpec extends AnyFunSuite with SparkSpec {
       ("cell", cells, stats(cells, lit(0), col("cell")), lit(0), col("cell")))
     for ((shape, df, st, band, key) <- shapes) {
       val runs = Seq(2_000_000, 6, 2).map { maxDriver =>
-        val (g, s) = CapMetrics.gateWithStats(st, "regime_spec", "__b", "__k",
+        val g = CapMetrics.gate(st, "regime_spec", "__b", "__k",
           col("__n") * col("__n") > 100L, col("__n") * col("__n"),
           graft.util.CheckpointStrategy.Local, maxDriverBuckets = maxDriver)
-        val kept = g match {
-          case Right(b) =>
-            if (b.isEmpty) df else df.where(!graft.fuzzy.vectorFunctions.bucket_allowed(band, key, b))
-          case Left(allowed) =>
-            df.join(allowed.select(col("__b").as("__gb"), col("__k").as("__gk")),
-              band === col("__gb") && key === col("__gk"), "left_semi")
-        }
-        (kept.select("id").as[String].collect().sorted.toSeq, s)
+        val kept = g.keep(df, band, key)
+        assert(hasJoin(kept) == (maxDriver == 2), s"$shape: regime not forced at $maxDriver")
+        (kept.select("id").as[String].collect().sorted.toSeq, g.stats)
       }
       assert(runs.head._2 == CapMetrics.CapStats(4, 12, 144 + 121 + 400 + 169, 4 + 9 + 1 + 16 + 4 + 25 + 1 + 9),
         s"$shape: ${runs.head._2}")

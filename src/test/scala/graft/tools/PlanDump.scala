@@ -21,13 +21,19 @@ import graft.fuzzy.{FuzzyAlgorithm, FuzzyMatcher, MatchOptions}
   * Everything runs at sf0.001: plan SHAPE is scale-independent, and
   * dumping must not take bench-scale minutes.
   *
+  * The three bucket-gate shapes are dumped under caps small enough to drop
+  * some buckets, so the gated stage shows its `bucket_allowed` filter:
+  * two-sided (ANN LSH top-k), self-join (minhash LSH dedup) and the
+  * semantic-cell gate (semantic dedup). The fuzzy LSH join's gate is in
+  * `scoring_join_lsh`.
+  *
   * Usage: Test/runMain graft.tools.PlanDump <tag> [round]
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val tag = args.headOption.getOrElse("before")
     val round = if (args.length > 1) args(1) else "r19"
-    val outDir = Paths.get(s"/root/repo/plans/$round")
+    val outDir = Paths.get("plans", round)
     Files.createDirectories(outDir)
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -71,6 +77,21 @@ object PlanDump {
       FuzzyMatcher.freshScoredValuePairs(l, r,
         graft.fuzzy.FuzzyMapping("c_name", "r_name", 90.0,
           FuzzyAlgorithm.Levenshtein), opts)._1)
+
+    // ---- bucket-gate shapes ----
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    dump("ann_lsh_topk",
+      graft.pipeline.AnnSearch.lshTopK(emb.where(col("vec_id") < 10), emb,
+        "embedding", "vec_id", 10, dim = 64, planes = 16, bands = 8,
+        maxBucketPairs = 200L))
+    dump("dedup_minhash",
+      graft.pipeline.Dedup.minhashLshPairs(
+        spark.read.parquet(s"$sfDir/documents.parquet"), "text", "doc_id",
+        maxBucketPairs = 4L))
+    dump("dedup_semantic",
+      graft.pipeline.Dedup.semDedup(emb, "embedding", "vec_id",
+        graft.pipeline.DemoModels.SemCentroids, dim = 64, nCells = 8,
+        threshold = 0.35, maxCellPairs = 4000L))
 
     // ---- full bench queries (tail assembly plans; barriers make these
     // short, captured for completeness) ----
