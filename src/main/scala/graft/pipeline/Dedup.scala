@@ -1762,7 +1762,6 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
   }
 
-
   /** Bucket expression shared by the stored hamming state's writer and
     * its query-time pruning — MUST stay identical on both sides. */
   private def hammingBucket(nBuckets: Int): Column =
