@@ -2,6 +2,7 @@ package graft.fuzzy
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -99,24 +100,23 @@ class FuzzyMatcherPropertySpec extends AnyFunSuite with SparkSpec {
       s"got ${got.size}, expected ${expected.size}; missing=${(expected -- got).take(3)}, extra=${(got -- expected).take(3)}")
   }
 
-  test("differential matrix: 6 algorithms x 4 execution shapes x thresholds 0/70/100") {
-    // SweepSpec's corpus (non-ASCII, empty, case-different, equal and
-    // length-outlier values) plus a null on each side
+  // SweepSpec's corpus (non-ASCII, empty, case-different, equal and
+  // length-outlier values) plus a null on each side
+  private lazy val matrixLeft = (SweepSpec.leftRows :+ (100L, null: String)).toDF("lid", "a")
+  private lazy val matrixRight = (SweepSpec.rightRows :+ (200L, null: String)).toDF("rid", "b")
+  private val exact = MatchOptions(useApproxNearestNeighbor = Some(false), runPreprocess = false)
+
+  /** Every named shape of `m` (a -> b, score column `s`) must return
+    * exactly the driver brute force, for every algorithm at thresholds
+    * 0/70/100. */
+  private def assertMatrix(shapes: FuzzyMapping => Seq[(String, () => DataFrame)]): Unit = {
     val lRows = SweepSpec.leftRows :+ (100L, null: String)
     val rRows = SweepSpec.rightRows :+ (200L, null: String)
-    val left = lRows.toDF("lid", "a")
-    val right = rRows.toDF("rid", "b")
     // Spark's lower() is UTF8String.toLowerCase
     def low(s: String) = UTF8String.fromString(s).toLowerCase
     def rows(df: DataFrame): Set[(Long, Long, Double)] =
       df.select("lid", "rid", "s").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val exact = MatchOptions(useApproxNearestNeighbor = Some(false), runPreprocess = false)
-    // threshold 0: every non-null pair survives, so the mapping after it
-    // runs as a filter-existing pass over the whole cross product
-    val everyPair = FuzzyMapping("a", "b", 0.0, FuzzyAlgorithm.Levenshtein,
-      outputColumnName = Some("all"))
-
     for (algo <- FuzzyAlgorithm.all; threshold <- Seq(0.0, 70.0, 100.0)) {
       val m = FuzzyMapping("a", "b", threshold, algo, outputColumnName = Some("s"))
       val maxDist = m.reversedThresholdScore
@@ -127,20 +127,50 @@ class FuzzyMatcherPropertySpec extends AnyFunSuite with SparkSpec {
         if d <= maxDist
       } yield (lid, rid, 1.0 - d)).toSet
       assert(expected.nonEmpty)
-      val shapes = Seq(
-        "sweep" -> (() => FuzzyMatcher.matchDfs(left, right, Seq(m), exact)),
-        "blocked sweep" -> (() => FuzzyMatcher.matchDfs(left, right, Seq(m),
-          exact.copy(broadcastDistinctLimit = 3L))),
-        "filter-existing pass" -> (() =>
-          FuzzyMatcher.matchDfs(left, right, Seq(everyPair, m), exact)),
-        "prepared right" -> (() => FuzzyMatcher.matchDfsWithPreparedRight(left,
-          FuzzyMatcher.prepareRight(left.columns.toSeq, right, Seq(m), exact))))
-      for ((shape, run) <- shapes) {
+      for ((shape, run) <- shapes(m)) {
         val got = rows(run())
         assert(got == expected,
           s"${algo.name} @ $threshold, $shape: got ${got.size}, expected ${expected.size}; " +
             s"missing=${(expected -- got).take(3)}, extra=${(got -- expected).take(3)}")
       }
     }
+  }
+
+  test("differential matrix: 6 algorithms x 4 execution shapes x thresholds 0/70/100") {
+    val (left, right) = (matrixLeft, matrixRight)
+    // threshold 0: every non-null pair survives, so the mapping after it
+    // runs as a filter-existing pass over the whole cross product
+    val everyPair = FuzzyMapping("a", "b", 0.0, FuzzyAlgorithm.Levenshtein,
+      outputColumnName = Some("all"))
+    assertMatrix(m => Seq(
+      "sweep" -> (() => FuzzyMatcher.matchDfs(left, right, Seq(m), exact)),
+      "blocked sweep" -> (() => FuzzyMatcher.matchDfs(left, right, Seq(m),
+        exact.copy(broadcastDistinctLimit = 3L))),
+      "filter-existing pass" -> (() =>
+        FuzzyMatcher.matchDfs(left, right, Seq(everyPair, m), exact)),
+      "prepared right" -> (() => FuzzyMatcher.matchDfsWithPreparedRight(left,
+        FuzzyMatcher.prepareRight(left.columns.toSeq, right, Seq(m), exact)))))
+  }
+
+  test("differential matrix: both front doors, preprocessing on") {
+    // preprocessing names the score column {left}_vs_{right}_{algo}
+    def scored(df: DataFrame, m: FuzzyMapping): DataFrame =
+      df.withColumnRenamed(s"a_vs_b_${m.fuzzyType.name}", "s")
+    matrixLeft.createOrReplaceTempView("fmp_matrix_left")
+    matrixRight.createOrReplaceTempView("fmp_matrix_right")
+    // a constant key on each side: its threshold-0 mapping keeps every
+    // pair, and its low uniqueness makes the order step run it second
+    val left = matrixLeft.withColumn("t", lit("x"))
+    val right = matrixRight.withColumn("u", lit("x"))
+    val constant = FuzzyMapping("t", "u", 0.0, FuzzyAlgorithm.Levenshtein)
+    val preprocessed = exact.copy(runPreprocess = true)
+    assertMatrix(m => Seq(
+      "fuzzy_match TVF" -> (() => scored(spark.sql(
+        s"""SELECT * FROM fuzzy_match('fmp_matrix_left', 'fmp_matrix_right',
+              'a', 'b', ${m.thresholdScore}, '${m.fuzzyType.name}',
+              'use_approx', false)"""), m)),
+      "prepared right, two mappings" -> (() => scored(
+        FuzzyMatcher.matchDfsWithPreparedRight(left, FuzzyMatcher.prepareRight(
+          left.columns.toSeq, right, Seq(constant, m), preprocessed)), m))))
   }
 }
