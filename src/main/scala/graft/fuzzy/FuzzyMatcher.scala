@@ -41,7 +41,17 @@ import org.apache.spark.sql.functions._
   *
   *  - multi-pass fold where pass N's matches gate pass N+1's candidates
   *    (matcher.py:507-577), each pass checkpointed because it is consumed
-  *    at least twice (next pass + final combine).
+  *    at least twice (next pass + final combine);
+  *
+  *  - one driver behind both front doors: [[matchDfs]] (also behind the
+  *    `fuzzy_match` TVF) and the prepared-right path ([[prepareRight]] +
+  *    [[matchDfsWithPreparedRight]]) preprocess through the same
+  *    [[PreProcess]] steps and end in the same assembly (pass fold,
+  *    combine, join-back, column order). They differ only in where the
+  *    right side's statistics and row index come from: computed per call,
+  *    or once at preparation. The prepared path's deduplicated right side
+  *    is built on first need and lives exactly as long as its row index
+  *    (see [[PreparedRight]]).
   */
 object FuzzyMatcher {
 
@@ -55,25 +65,13 @@ object FuzzyMatcher {
                opts: MatchOptions = MatchOptions.default): DataFrame = {
     require(maps.nonEmpty, "at least one FuzzyMapping is required")
     val plan = PreProcess.run(left, right, maps, runStats = opts.runPreprocess)
-    val outputOrder: Seq[String] =
-      plan.left.columns.toSeq ++ plan.right.columns.toSeq ++ plan.maps.map(_.resolvedOutputName)
-
     // The two index materializations are independent jobs — run them
     // concurrently (guide §2.6); ids stay per-side deterministic because
     // each side's checkpoint freezes its own assignment exactly as before.
     val (leftIdx, rightIdx) = graft.util.Par.run2(
       addIndexColumn(plan.left, LeftIdx, opts.checkpoint),
       addIndexColumn(plan.right, RightIdx, opts.checkpoint))
-
-    val matchFrames = performAllFuzzyMatches(leftIdx, rightIdx, plan.maps, opts)
-    // single mapping: no combine join needed (matcher.py:642-647)
-    val allMatches =
-      if (matchFrames.size == 1) matchFrames.head else combineMatches(matchFrames)
-
-    leftIdx.join(allMatches, LeftIdx)
-      .join(rightIdx, RightIdx)
-      .drop(LeftIdx, RightIdx)
-      .select(outputOrder.map(col): _*)
+    assemble(leftIdx, rightIdx, plan.maps, opts)
   }
 
   /** Static-side preparation for repeated matching against a fixed corpus —
@@ -87,11 +85,14 @@ object FuzzyMatcher {
     * spends per-call Spark actions only on the left side; the right side is
     * consumed exclusively through the materialized barrier.
     *
-    * `rightIdxDeduped` backs the aggregation heuristic for batches whose
-    * joint uniqueness triggers it: built lazily on first use and reused by
-    * every later batch (in the one-shot path the dedup runs before
-    * indexing; here it runs on the indexed frame — same surviving value
-    * set, and which duplicate row survives is arbitrary in both engines).
+    * `rightIdxDeduped` backs the dedup verdict for batches whose joint
+    * uniqueness triggers it: built on first use and reused by every later
+    * batch (in the one-shot path the dedup runs before indexing; here it
+    * runs on the indexed frame — same surviving value set, and which
+    * duplicate row survives is arbitrary in both engines). It lives exactly
+    * as long as `rightIdx`: it registers with the [[withMatchScope]] scopes
+    * that were active when the side was prepared, never with the scope of
+    * the batch that happens to force it first.
     */
   final case class PreparedRight private[fuzzy] (
       rightIdx: DataFrame,
@@ -101,8 +102,9 @@ object FuzzyMatcher {
       leftCols: Seq[String],
       maps: Seq[FuzzyMapping],
       opts: MatchOptions) {
-    lazy val rightIdxDeduped: DataFrame = graft.util.Materialize(
-      rightIdx.dropDuplicates(maps.map(_.rightCol).distinct), opts.checkpoint)
+    private val owners = graft.util.MatchScope.capturedScopes
+    lazy val rightIdxDeduped: DataFrame = graft.util.MatchScope.runWithScopes(owners)(
+      graft.util.Materialize(PreProcess.dedup(rightIdx, maps.map(_.rightCol)), opts.checkpoint))
   }
 
   /** Build a [[PreparedRight]]. `leftCols` is the (fixed) schema of the
@@ -112,18 +114,10 @@ object FuzzyMatcher {
   def prepareRight(leftCols: Seq[String], right: DataFrame, maps: Seq[FuzzyMapping],
                    opts: MatchOptions = MatchOptions.default): PreparedRight = {
     require(maps.nonEmpty, "at least one FuzzyMapping is required")
-    // mid-level fallback names resolve from the ORIGINAL columns, before the
-    // structural renames (same order as PreProcess.run)
-    var ms = maps
-    if (!opts.runPreprocess)
-      ms = ms.map(m => m.copy(outputColumnName = Some(m.resolvedOutputName)))
-    val renames = NameUtils.renameRightColumns(leftCols, right.columns.toSeq)
-    ms = NameUtils.renameMappingRightCols(ms, renames)
-    val rRenamed = renames.foldLeft(right) { case (df, (from, to)) => df.withColumnRenamed(from, to) }
-    val rightIdx = addIndexColumn(rRenamed, RightIdx, opts.checkpoint)
+    val (renamed, ms, renames) = PreProcess.structural(leftCols, right, maps, opts.runPreprocess)
+    val rightIdx = addIndexColumn(renamed, RightIdx, opts.checkpoint)
     val (len, stats) =
-      if (opts.runPreprocess)
-        PreProcess.statScan(rightIdx, ms.map(_.rightCol))
+      if (opts.runPreprocess) PreProcess.statScan(rightIdx, ms.map(_.rightCol))
       else (-1L, Map.empty[String, Long])
     PreparedRight(rightIdx, len, stats, renames, leftCols.toVector, ms, opts)
   }
@@ -137,36 +131,29 @@ object FuzzyMatcher {
     require(left.columns.toSet == prepared.leftCols.toSet,
       s"left schema ${left.columns.mkString(",")} does not match the schema " +
         s"the right side was prepared against (${prepared.leftCols.mkString(",")})")
-    var l = left
-    var ms = prepared.maps
-    var rightIdx = prepared.rightIdx
-    if (opts.runPreprocess) {
-      // one fused count+HLL scan over the batch (PreProcess.statScan) —
-      // the per-batch planning cost is a single small job
-      val (leftLen, leftStats) = PreProcess.statScan(l, ms.map(_.leftCol))
-      if (leftLen > 0 && prepared.rightLen > 0) {
-        ms = PreProcess.fillPercUniqueFromStats(leftStats, prepared.rightDistinct,
-          ms, leftLen, prepared.rightLen)
-        ms = PreProcess.orderMaps(ms)
-        PreProcess.reportOnOrder(ms)
-        val cartesian = leftLen.toDouble * prepared.rightLen.toDouble
-        if (PreProcess.needsAggregation(PreProcess.uniquenessRate(ms), cartesian)) {
-          log.info("Low uniqueness rate on a large cartesian — deduplicating " +
-            "the batch and routing to the deduplicated static side")
-          l = l.dropDuplicates(ms.map(_.leftCol).distinct)
-          rightIdx = prepared.rightIdxDeduped
-        }
-      }
-      ms = NameUtils.setNamesInMappings(ms)
-    }
-    val outputOrder: Seq[String] = l.columns.toSeq ++
-      prepared.rightIdx.columns.toSeq.filterNot(_ == RightIdx) ++ ms.map(_.resolvedOutputName)
+    // the per-batch planning cost is one fused count+HLL scan of the batch
+    val (maps, dedupBoth) =
+      if (opts.runPreprocess)
+        PreProcess.decide(prepared.maps, PreProcess.statScan(left, prepared.maps.map(_.leftCol)),
+          (prepared.rightLen, prepared.rightDistinct))
+      else (prepared.maps, false)
+    val (l, rightIdx) =
+      if (dedupBoth) (PreProcess.dedup(left, maps.map(_.leftCol)), prepared.rightIdxDeduped)
+      else (left, prepared.rightIdx)
+    assemble(addIndexColumn(l, LeftIdx, opts.checkpoint), rightIdx, maps, opts)
+  }
 
-    val leftIdx = addIndexColumn(l, LeftIdx, opts.checkpoint)
-    val matchFrames = performAllFuzzyMatches(leftIdx, rightIdx, ms, opts)
-    val allMatches =
-      if (matchFrames.size == 1) matchFrames.head else combineMatches(matchFrames)
-    leftIdx.join(allMatches, LeftIdx)
+  /** The assembly both front doors end in: the pass fold, the combine
+    * (skipped for a single mapping, matcher.py:642-647), the join back to
+    * both indexed sides and the final column order
+    * `left ++ right(renamed) ++ scores`. */
+  private def assemble(leftIdx: DataFrame, rightIdx: DataFrame, maps: Seq[FuzzyMapping],
+                       opts: MatchOptions): DataFrame = {
+    val frames = performAllFuzzyMatches(leftIdx, rightIdx, maps, opts)
+    val matches = if (frames.size == 1) frames.head else combineMatches(frames)
+    val outputOrder = (leftIdx.columns ++ rightIdx.columns).toSeq
+      .filterNot(c => c == LeftIdx || c == RightIdx) ++ maps.map(_.resolvedOutputName)
+    leftIdx.join(matches, LeftIdx)
       .join(rightIdx, RightIdx)
       .drop(LeftIdx, RightIdx)
       .select(outputOrder.map(col): _*)

@@ -11,6 +11,12 @@ import org.slf4j.LoggerFactory
   * (HLL, same sketch family the reference uses via `approx_n_unique`,
   * pre_process.py:12-28), the uniqueness formula and the dedup heuristic use
   * the reference's exact constants (pre_process.py:45,149).
+  *
+  * Both fuzzy-join front doors ([[FuzzyMatcher.matchDfs]] via [[run]], and
+  * the prepared-right path) preprocess through the same two steps: the
+  * structural naming and renames ([[structural]]) and the pure decision
+  * from statistics to planned mappings and dedup verdict ([[decide]]).
+  * They differ only in where each side's statistics come from.
   */
 object PreProcess {
 
@@ -29,19 +35,11 @@ object PreProcess {
     }
   }
 
-  /** One scan per side computing approx distinct for every requested column. */
-  def approxUniqueness(df: DataFrame, cols: Seq[String]): Map[String, Long] = {
-    if (cols.isEmpty) return Map.empty
-    val distinctCols = cols.distinct
-    val row = df.select(distinctCols.map(c => approx_count_distinct(col(c)).as(c)): _*).head()
-    distinctCols.zipWithIndex.map { case (c, i) => c -> row.getLong(i) }.toMap
-  }
-
   /** Fused planning-stats scan: exact row count + approx distinct per
     * mapping column in ONE aggregate job (the count rides the HLL scan
     * instead of a second pass over the side — guide §1.2: don't pay two
-    * passes for values one pass produces). Same numbers as
-    * `df.count()` + [[approxUniqueness]]. */
+    * passes for values one pass produces). Same numbers as `df.count()`
+    * plus one `approx_count_distinct` per column. */
   def statScan(df: DataFrame, cols: Seq[String]): (Long, Map[String, Long]) = {
     val distinctCols = cols.distinct
     val aggs = count(lit(1)).as("__n") +:
@@ -56,17 +54,9 @@ object PreProcess {
   def calculateUniqueness(a: Double, b: Double): Double =
     (math.pow(a + 0.5, 2) + math.pow(b + 0.5, 2)) / 2 - math.pow(0.5, 2) + 0.5 * math.abs(a - b)
 
-  def fillPercUnique(left: DataFrame, right: DataFrame, maps: Seq[FuzzyMapping],
-                     leftLen: Long, rightLen: Long): Seq[FuzzyMapping] =
-    fillPercUniqueFromStats(
-      approxUniqueness(left, maps.map(_.leftCol)),
-      approxUniqueness(right, maps.map(_.rightCol)),
-      maps, leftLen, rightLen)
-
-  /** Stats-injection variant of [[fillPercUnique]]: both sides' approx
-    * distinct counts are supplied by the caller, so filling the mappings
-    * triggers NO Spark action. The stream-static path precomputes the
-    * static side's stats once and re-derives only the batch side's. */
+  /** Uniqueness of every mapping from both sides' statistics (no Spark
+    * action: the stream-static path scans the static side once and only
+    * the batch side per call). */
   def fillPercUniqueFromStats(leftStats: Map[String, Long], rightStats: Map[String, Long],
                               maps: Seq[FuzzyMapping],
                               leftLen: Long, rightLen: Long): Seq[FuzzyMapping] =
@@ -86,64 +76,79 @@ object PreProcess {
   def needsAggregation(rate: Double, cartesianSize: Double): Boolean =
     rate < 1.2 && cartesianSize > 1_000_000L
 
-  def aggregateOutput(left: DataFrame, right: DataFrame, maps: Seq[FuzzyMapping]): (DataFrame, DataFrame) =
-    (left.dropDuplicates(maps.map(_.leftCol).distinct),
-     right.dropDuplicates(maps.map(_.rightCol).distinct))
+  /** One side deduplicated on its mapping columns — what [[decide]]'s
+    * dedup verdict means for each side. */
+  private[fuzzy] def dedup(df: DataFrame, cols: Seq[String]): DataFrame =
+    df.dropDuplicates(cols.distinct)
 
-  /** Full preprocessing: stats -> order -> conditional dedup -> renames ->
-    * output names (pre_process.py:281-327). When `runStats` is false only
-    * the structurally required steps (rename + naming) run — the mid-level
-    * API semantics of the reference. */
-  def run(left: DataFrame, right: DataFrame, maps: Seq[FuzzyMapping],
-          runStats: Boolean = true): Plan = {
-    var l = left
-    var r = right
-    var ms = maps
-    var leftLen = -1L
-    var rightLen = -1L
-    if (runStats) {
-      // Both sides' fused count+HLL scans run CONCURRENTLY (guide §2.6):
-      // they are independent jobs, and serializing them only added their
-      // fixed scheduling latencies. Values are identical to the serial
-      // count() + approxUniqueness() pair.
-      val ((ll, lStats), (rl, rStats)) = graft.util.Par.run2(
-        statScan(l, maps.map(_.leftCol)), statScan(r, maps.map(_.rightCol)))
-      leftLen = ll
-      rightLen = rl
-      // Empty side: stats/ordering/dedup are skipped, but — deliberate
-      // deviation from pre_process.py:309-310, which returns before the
-      // renames — the rename + naming steps below STILL run, so the
-      // output schema is identical for empty and non-empty inputs.
-      // SURVEY §8 deviation 5 has the full rationale (polars auto-suffixes
-      // colliding names at join time; Spark would emit duplicate columns
-      // that fail on parquet write).
-      if (leftLen > 0 && rightLen > 0) {
-        ms = fillPercUniqueFromStats(lStats, rStats, ms, leftLen, rightLen)
-        ms = orderMaps(ms)
-        reportOnOrder(ms)
-        val rate = uniquenessRate(ms)
+  /** The structural half of preprocessing, which runs whether or not the
+    * statistics do: with `runStats` off the mid-level fallback score name
+    * `fuzzy_score_{left}_{right}` is resolved from the ORIGINAL column
+    * names — the reference's constructor default survives because
+    * set_name_in_fuzzy_mappings only runs inside preprocessing
+    * (models.py:87-89, pre_process.py:326) — and then right columns that
+    * collide with `leftCols` get the `_right` suffix (pre_process.py:200-254).
+    * Returns the renamed right side, the mappings pointing at it, and the
+    * rename map. */
+  private[fuzzy] def structural(
+      leftCols: Seq[String], right: DataFrame, maps: Seq[FuzzyMapping],
+      runStats: Boolean): (DataFrame, Seq[FuzzyMapping], Map[String, String]) = {
+    val named =
+      if (runStats) maps else maps.map(m => m.copy(outputColumnName = Some(m.resolvedOutputName)))
+    val renames = NameUtils.renameRightColumns(leftCols, right.columns.toSeq)
+    (renames.foldLeft(right) { case (df, (from, to)) => df.withColumnRenamed(from, to) },
+      NameUtils.renameMappingRightCols(named, renames), renames)
+  }
+
+  /** The statistics half of preprocessing as a pure decision (no Spark
+    * action): from each side's (row count, approx distinct per mapping
+    * column), fill the uniqueness, order the mappings most selective first,
+    * report the order, decide whether both sides are deduplicated before
+    * matching, and assign the output names. Returns the planned mappings
+    * and the dedup verdict.
+    *
+    * Empty side: uniqueness, order and dedup are skipped but the names are
+    * still assigned — deliberate deviation from pre_process.py:309-310,
+    * which returns before naming, so the output schema is identical for
+    * empty and non-empty inputs (SURVEY §8 deviation 5: polars
+    * auto-suffixes colliding names at join time; Spark would emit
+    * duplicate columns that fail on parquet write). */
+  private[fuzzy] def decide(maps: Seq[FuzzyMapping], left: (Long, Map[String, Long]),
+                            right: (Long, Map[String, Long])): (Seq[FuzzyMapping], Boolean) = {
+    val ((leftLen, leftStats), (rightLen, rightStats)) = (left, right)
+    val (ordered, dedupBoth) =
+      if (leftLen <= 0 || rightLen <= 0) (maps, false)
+      else {
+        val ordered = orderMaps(fillPercUniqueFromStats(leftStats, rightStats, maps, leftLen, rightLen))
+        reportOnOrder(ordered)
+        val rate = uniquenessRate(ordered)
         val cartesian = leftLen.toDouble * rightLen.toDouble
-        if (needsAggregation(rate, cartesian)) {
+        val dedupBoth = needsAggregation(rate, cartesian)
+        if (dedupBoth)
           log.info(f"Low uniqueness rate ($rate%.3f) on a $cartesian%.3g cartesian — " +
             "deduplicating both sides on the mapping columns before matching")
-          val agg = aggregateOutput(l, r, ms)
-          l = agg._1
-          r = agg._2
-        }
+        (ordered, dedupBoth)
       }
-    }
-    // Mid-level API semantics (runStats=false): the reference's constructor
-    // default `fuzzy_score_{left}_{right}` survives because
-    // set_name_in_fuzzy_mappings only runs inside preprocessing
-    // (models.py:87-89, pre_process.py:326). The fallback is resolved from
-    // the ORIGINAL column names, BEFORE the structural right-side renames —
-    // exactly when the reference's constructor runs.
-    if (!runStats)
-      ms = ms.map(m => m.copy(outputColumnName = Some(m.resolvedOutputName)))
-    val renames = NameUtils.renameRightColumns(l.columns.toSeq, r.columns.toSeq)
-    ms = NameUtils.renameMappingRightCols(ms, renames)
-    if (runStats) ms = NameUtils.setNamesInMappings(ms)
-    val rRenamed = renames.foldLeft(r) { case (df, (from, to)) => df.withColumnRenamed(from, to) }
-    Plan(l, rRenamed, ms, leftLen, rightLen)
+    (NameUtils.setNamesInMappings(ordered), dedupBoth)
+  }
+
+  /** Full preprocessing of two frames (pre_process.py:281-327): the
+    * [[structural]] renames, then — when `runStats` is set — both sides'
+    * [[statScan]]s, [[decide]], and the dedup it asks for. With `runStats`
+    * off only the structural step runs: the mid-level API semantics of the
+    * reference. */
+  def run(left: DataFrame, right: DataFrame, maps: Seq[FuzzyMapping],
+          runStats: Boolean = true): Plan = {
+    val (r, named, _) = structural(left.columns.toSeq, right, maps, runStats)
+    if (!runStats) return Plan(left, r, named, -1L, -1L)
+    // Both sides' fused count+HLL scans run CONCURRENTLY (guide §2.6):
+    // they are independent jobs, and serializing them only added their
+    // fixed scheduling latencies.
+    val (leftStats, rightStats) = graft.util.Par.run2(
+      statScan(left, named.map(_.leftCol)), statScan(r, named.map(_.rightCol)))
+    val (ms, dedupBoth) = decide(named, leftStats, rightStats)
+    if (dedupBoth)
+      Plan(dedup(left, ms.map(_.leftCol)), dedup(r, ms.map(_.rightCol)), ms, leftStats._1, rightStats._1)
+    else Plan(left, r, ms, leftStats._1, rightStats._1)
   }
 }

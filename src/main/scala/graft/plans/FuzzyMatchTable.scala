@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.Decimal
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.fuzzy.{FuzzyAlgorithm, FuzzyMapping, FuzzyMatcher, MatchOptions}
@@ -31,7 +32,7 @@ import graft.fuzzy.{FuzzyAlgorithm, FuzzyMapping, FuzzyMatcher, MatchOptions}
   * `fuzzy_match_dfs`' keyword arguments (matcher.py:661-668):
   *
   *   'use_approx',  true|false   — force LSH / force exact (omit = auto),
-  *   'top_n',       int          — top-N per record on the approx path,
+  *   'top_n',       int >= 1     — top-N per record on the approx path,
   *   'cross_over',  long         — cartesian size where auto flips to LSH,
   *   'checkpoint_dir', 'path'    — fault-tolerant barriers: materialize
   *                                 multi-pass intermediates as reliable
@@ -98,45 +99,14 @@ object FuzzyMatchTable {
         s"${OptionKeys.toSeq.sorted.mkString("'", "'/'", "'")}) — alias " +
         s"the column before calling. Usage: $usage")
 
-  private def lit(e: Expression, what: String): Any = {
-    if (!e.foldable)
-      throw new IllegalArgumentException(
-        s"fuzzy_match: $what must be a literal, got '${e.sql}'. Usage: $usage")
-    e.eval()
-  }
+  private val A = new TvfArgs(Name, usage)
 
-  private def str(e: Expression, what: String): String = lit(e, what) match {
-    case s: UTF8String => s.toString
-    case s: String => s
-    case other =>
-      throw new IllegalArgumentException(
-        s"fuzzy_match: $what must be a string literal, got '$other'. Usage: $usage")
-  }
-
-  /** Numeric value of a foldable option argument, None if non-numeric —
-    * lets the caller emit the quadruple-vs-option ambiguity message
-    * instead of [[dbl]]'s generic one. */
-  private def numeric(e: Expression): Option[Double] = lit(e, "option value") match {
-    case d: Double => Some(d)
-    case f: Float => Some(f.toDouble)
-    case i: Int => Some(i.toDouble)
-    case l: Long => Some(l.toDouble)
-    case d: java.math.BigDecimal => Some(d.doubleValue())
-    case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-    case _ => None
-  }
-
-  private def dbl(e: Expression, what: String): Double = lit(e, what) match {
-    case d: Double => d
-    case f: Float => f.toDouble
-    case i: Int => i.toDouble
-    case l: Long => l.toDouble
-    case d: java.math.BigDecimal => d.doubleValue()
-    case d: org.apache.spark.sql.types.Decimal => d.toDouble
-    case other =>
-      throw new IllegalArgumentException(
-        s"fuzzy_match: $what must be a numeric literal, got '$other'. Usage: $usage")
-  }
+  /** A numeric option value passes; anything else is the ambiguity error. */
+  private def requireNumeric(key: String, v: Expression, expected: String): Unit =
+    A.lit(v, s"$key value") match {
+      case _: Number | _: Decimal =>
+      case other => ambiguity(key, other, expected)
+    }
 
   /** TVF builder registered by [[graft.GraftExtensions]]. */
   def build(args: Seq[Expression]): LogicalPlan = {
@@ -144,8 +114,8 @@ object FuzzyMatchTable {
       throw new IllegalArgumentException(
         s"fuzzy_match: got ${args.length} arguments. Usage: $usage")
     val spark = SparkSession.active
-    val left = spark.table(str(args(0), "left table name"))
-    val right = spark.table(str(args(1), "right table name"))
+    val left = spark.table(A.str(args(0), "left table name"))
+    val right = spark.table(A.str(args(1), "right table name"))
 
     // consume mapping quadruples until an option key (or the end)
     val rest = args.drop(2)
@@ -166,48 +136,34 @@ object FuzzyMatchTable {
           s"Usage: $usage")
     val maps = rest.take(nQuadArgs).grouped(4).zipWithIndex.map { case (g, i) =>
       FuzzyMapping(
-        leftCol = str(g(0), s"mapping $i left column"),
-        rightCol = str(g(1), s"mapping $i right column"),
-        thresholdScore = dbl(g(2), s"mapping $i threshold"),
-        fuzzyType = FuzzyAlgorithm.fromName(str(g(3), s"mapping $i algorithm")))
+        leftCol = A.str(g(0), s"mapping $i left column"),
+        rightCol = A.str(g(1), s"mapping $i right column"),
+        thresholdScore = A.dbl(g(2), s"mapping $i threshold"),
+        fuzzyType = FuzzyAlgorithm.fromName(A.str(g(3), s"mapping $i algorithm")))
     }.toSeq
 
-    val opts = rest.drop(nQuadArgs).grouped(2).foldLeft(MatchOptions()) {
-      case (o, Seq(k, v)) => str(k, "option name") match {
-        case "use_approx" => lit(v, "use_approx value") match {
-          case b: Boolean => o.copy(useApproxNearestNeighbor = Some(b))
-          case other => ambiguity("use_approx", other, "a boolean literal")
-        }
-        case "top_n" => numeric(v) match {
-          case Some(n) => o.copy(topNForNewMatches = n.toInt)
-          case None => ambiguity("top_n", lit(v, "top_n value"), "an integer literal")
-        }
-        case "cross_over" => numeric(v) match {
-          case Some(n) => o.copy(crossOverForApprox = n)
-          case None =>
-            ambiguity("cross_over", lit(v, "cross_over value"), "a numeric literal")
-        }
-        case "checkpoint_dir" => lit(v, "checkpoint_dir value") match {
-          case s: UTF8String if s.toString.nonEmpty =>
-            o.copy(checkpoint = graft.util.CheckpointStrategy.Reliable(s.toString))
-          case other => ambiguity("checkpoint_dir", other,
-            "a non-empty string literal (an HDFS-compatible directory)")
-        }
-        case other => throw new IllegalArgumentException(
-          s"fuzzy_match: unknown option '$other'. Usage: $usage")
+    var opts = MatchOptions()
+    A.options(args, 2 + nQuadArgs) { (key, v) => key match {
+      case "use_approx" => A.lit(v, "use_approx value") match {
+        case b: Boolean => opts = opts.copy(useApproxNearestNeighbor = Some(b))
+        case other => ambiguity("use_approx", other, "a boolean literal")
       }
-      // unreachable: the remainder was validated even above, so grouped(2)
-      // never yields a 1-element tail — but the match must be total
-      case (_, odd) => throw new IllegalStateException(
-        s"fuzzy_match: internal option-pair grouping error on $odd")
-    }
-    // Serial orchestration: this builder runs inside the analyzer's
-    // SessionCatalog-synchronized TVF resolution, so the matcher's
-    // concurrent-action helpers must stay on THIS thread — a helper
-    // thread's own analysis would deadlock on the catalog monitor
-    // (graft.util.Par.serial scaladoc has the thread-dump shape).
-    graft.util.Par.serial {
-      FuzzyMatcher.matchDfs(left, right, maps, opts).queryExecution.analyzed
-    }
+      case "top_n" =>
+        requireNumeric("top_n", v, "an integer literal")
+        val n = A.int(v, "top_n value")
+        if (n < 1) A.bad("top_n must be >= 1", n)
+        opts = opts.copy(topNForNewMatches = n)
+      case "cross_over" =>
+        requireNumeric("cross_over", v, "a numeric literal")
+        opts = opts.copy(crossOverForApprox = A.dbl(v, "cross_over value"))
+      case "checkpoint_dir" => A.lit(v, "checkpoint_dir value") match {
+        case s: UTF8String if s.toString.nonEmpty =>
+          opts = opts.copy(checkpoint = graft.util.CheckpointStrategy.Reliable(s.toString))
+        case other => ambiguity("checkpoint_dir", other,
+          "a non-empty string literal (an HDFS-compatible directory)")
+      }
+      case other => A.bad("unknown option", other)
+    }}
+    FuzzyMatcher.matchDfs(left, right, maps, opts).queryExecution.analyzed
   }
 }

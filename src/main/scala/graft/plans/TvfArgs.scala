@@ -5,8 +5,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared literal-argument machinery for the graft table-valued
   * functions ([[AnnTopKTable]], [[CurateDHashTable]], [[DedupPairsTable]],
-  * [[Bm25TopKTable]] — [[FuzzyMatchTable]] keeps its own copy because its
-  * quadruple-vs-option ambiguity diagnostics are bespoke): every argument
+  * [[Bm25TopKTable]], [[FuzzyMatchTable]], ...): every argument
   * must be a foldable literal, every malformed argument fails with a
   * diagnostic naming the argument and the usage line, and numerics that
   * claim to be integers must BE integers (`2.9` never truncates to 2).

@@ -36,13 +36,6 @@ object FuzzyMatchStream {
                   opts: MatchOptions = MatchOptions.default)
                  (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     val prepared = FuzzyMatcher.prepareRight(stream.columns.toSeq, reference, maps, opts)
-    // Pre-force the lazily-built deduplicated right side on the CALLER
-    // thread: the per-batch scope below would otherwise capture a lazy
-    // first-touch of this SHARED frame and release it at batch end — the
-    // next batch would recompute through the severed checkpoint lineage
-    // and fail. Forced only when the aggregation heuristic (runPreprocess)
-    // can ever route a batch to it.
-    if (opts.runPreprocess) prepared.rightIdxDeduped
     stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // Per-batch MatchScope: foreachBatch runs on the stream-execution
@@ -52,7 +45,10 @@ object FuzzyMatchStream {
         // lifetime and an unbounded stream would accumulate executor blocks
         // without bound. The scope releases them when the sink returns; the
         // sink must CONSUME its frame (write/collect) before returning —
-        // the standard MatchScope contract.
+        // the standard MatchScope contract. The shared prepared side,
+        // including the deduplicated variant a batch may build first,
+        // belongs to the scopes active when the writer was built, never
+        // to a batch's scope.
         graft.util.MatchScope.withMatchScope {
           sink(FuzzyMatcher.matchDfsWithPreparedRight(batch, prepared), batchId)
         }

@@ -139,16 +139,18 @@ object MatchScope {
     active.get.headOption.foreach(_.track(df))
 
   /** The calling thread's scope stack, for explicit propagation to a
-    * helper thread (see [[Par]]). Scope tracking is a plain ThreadLocal —
+    * helper thread (see [[Par]]) or to a barrier built later on behalf of
+    * a frame these scopes own
+    * ([[graft.fuzzy.FuzzyMatcher.PreparedRight]]). Scope tracking is a plain ThreadLocal —
     * NOT inheritable, so long-lived worker threads (streaming writers)
     * never capture a scope by accident; concurrent-action helpers opt in
     * through this pair instead. */
-  private[util] def capturedScopes: List[MatchScope] = active.get
+  private[graft] def capturedScopes: List[MatchScope] = active.get
 
   /** Run `body` with the given scope stack active on the current thread,
     * restoring the previous stack afterwards. [[MatchScope.track]] is
     * synchronized, so registration from the helper thread is safe. */
-  private[util] def runWithScopes[A](scopes: List[MatchScope])(body: => A): A = {
+  private[graft] def runWithScopes[A](scopes: List[MatchScope])(body: => A): A = {
     val prev = active.get
     active.set(scopes)
     try body finally active.set(prev)

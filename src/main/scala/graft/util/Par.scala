@@ -1,5 +1,7 @@
 package graft.util
 
+import org.apache.spark.sql.SparkSession
+
 /** Concurrent submission of independent Spark actions (guide §2.6 "overlap
   * independent jobs"): a multi-pass fuzzy match runs ~8-13 small driver
   * actions per match (stat scans, index checkpoints, distinct-value
@@ -20,34 +22,13 @@ package graft.util
   */
 object Par {
 
-  /** Serial mode for contexts where the calling thread may hold a lock the
-    * helper thread's own query ANALYSIS needs. The concrete case: the
-    * `fuzzy_match` TVF builder runs `matchDfs` inside
-    * `SessionCatalog.resolveBuiltinOrTempFunctionInternal`, which is
-    * synchronized on the SessionCatalog — a helper thread analyzing its
-    * stat-scan query blocks on that same monitor while the TVF thread
-    * joins the helper: a guaranteed single-caller deadlock (observed as a
-    * thread-dump pair: parent `Thread.join` holding the catalog monitor,
-    * `graft-par` child BLOCKED on `lookupBuiltinOrTempFunction`). Inside
-    * [[serial]], [[run2]] evaluates both thunks sequentially on the
-    * calling thread — exactly the pre-r20 behavior. */
-  private val serialMode = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
-  }
-
-  /** Run `body` with [[run2]] degraded to sequential evaluation on this
-    * thread (restored afterwards; see [[serialMode]]). */
-  def serial[A](body: => A): A = {
-    val prev = serialMode.get
-    serialMode.set(java.lang.Boolean.TRUE)
-    try body finally serialMode.set(prev)
-  }
-
   /** Run `a` on the calling thread and `b` on a fresh thread, concurrently;
     * return both results. If either fails, the other is still awaited and
-    * the first failure (caller side preferred) is rethrown. */
+    * the first failure (caller side preferred) is rethrown. Both run
+    * sequentially on the calling thread when it holds the active session's
+    * SessionCatalog monitor (see `holdsCatalogMonitor`). */
   def run2[A, B](a: => A, b: => B): (A, B) = {
-    if (serialMode.get) return (a, b)
+    if (holdsCatalogMonitor) return (a, b)
     val scopes = MatchScope.capturedScopes
     var rb: Either[Throwable, B] = null
     val t = new Thread(() => {
@@ -68,4 +49,15 @@ object Par {
       case _ => throw new IllegalStateException("unreachable")
     }
   }
+
+  /** Whether the calling thread holds the active session's SessionCatalog
+    * monitor. The `fuzzy_match` TVF builder does: it runs `matchDfs` inside
+    * `SessionCatalog.resolveBuiltinOrTempFunctionInternal`, which is
+    * synchronized on the catalog. A helper thread analyzing its own query
+    * blocks on that same monitor while the caller joins the helper — a
+    * guaranteed single-caller deadlock (observed as a thread-dump pair:
+    * parent `Thread.join` holding the catalog monitor, `graft-par` child
+    * BLOCKED on `lookupBuiltinOrTempFunction`). */
+  private def holdsCatalogMonitor: Boolean =
+    SparkSession.getActiveSession.exists(s => Thread.holdsLock(s.sessionState.catalog))
 }

@@ -461,6 +461,8 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
       "fuzzy_match('fm_fz', 'fm_fz', 'c', 'c', 80.0, 'levenshtein', 'top_n')", // dangling option key
       "fuzzy_match('fm_fz', 'fm_fz', 'c', 'c', 80.0, 'levenshtein', 'use_approx', 'yes')", // non-bool option
       "fuzzy_match('fm_fz', 'fm_fz', 'c', 'c', 80.0, 'levenshtein', 'top_n', 'many')", // non-numeric option
+      "fuzzy_match('fm_fz', 'fm_fz', 'c', 'c', 80.0, 'levenshtein', 'top_n', 2.9)", // fractional top_n
+      "fuzzy_match('fm_fz', 'fm_fz', 'c', 'c', 80.0, 'levenshtein', 'top_n', 0)", // top_n below 1
       "fuzzy_match('fm_fz', 'fm_fz', 'c', 'c', 80.0, 'levenshtein', 'checkpoint_dir', 42)", // non-string dir
       "fuzzy_match('fm_fz', 'fm_fz', 'c', 'c', 80.0, 'levenshtein', 'checkpoint_dir', '')", // empty dir
       "fuzzy_match('fm_fz', 'fm_fz', 'cross_over', 'c', 80.0, 'levenshtein')", // option-key column collision

@@ -122,6 +122,33 @@ class ConcurrentMatchSpec extends AnyFunSuite with SparkSpec {
     assert(leaked.isEmpty, s"MatchScope leaked persisted RDDs: $leaked")
   }
 
+  test("matchDfs finishes while its thread holds the session catalog monitor") {
+    // the fuzzy_match TVF's situation with no TVF involved: its builder runs
+    // matchDfs inside the analyzer's SessionCatalog-synchronized function
+    // resolution, so a helper thread analyzing a side's query would block
+    // on the monitor the matching thread holds
+    val fresh = spark.newSession()
+    val vals = (0 until 50).map(v => (v.toLong, f"name_$v%02d"))
+    val left = fresh.createDataFrame(vals).toDF("lid", "k")
+    val right = fresh.createDataFrame(vals.map { case (id, v) => (id + 100, v) }).toDF("rid", "g")
+    val maps = Seq(FuzzyMapping("k", "g", 95.0, FuzzyAlgorithm.Levenshtein))
+    @volatile var rows = -1L
+    @volatile var failure: Throwable = null
+    val holder = new Thread(() => {
+      org.apache.spark.sql.SparkSession.setActiveSession(fresh)
+      try fresh.sessionState.catalog.synchronized {
+        rows = MatchScope.withMatchScope(FuzzyMatcher.matchDfs(left, right, maps).count())
+      } catch { case t: Throwable => failure = t }
+    }, "catalog-monitor-holder")
+    holder.setDaemon(true)
+    holder.start()
+    holder.join(120000L)
+    assert(!holder.isAlive, "matchDfs deadlocked on the session catalog monitor")
+    if (failure != null) throw failure
+    // threshold 95 on distinct 2-digit suffixes: only the 50 self pairs
+    assert(rows == 50L)
+  }
+
   test("concurrent fuzzy_match TVF callers get independent, correct plans") {
     // the SQL front door plans at ANALYSIS time (the TVF builder runs
     // matchDfs, jobs and all, inside resolution) — four driver threads

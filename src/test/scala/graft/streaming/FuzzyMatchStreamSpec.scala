@@ -103,8 +103,8 @@ class FuzzyMatchStreamSpec extends AnyFunSuite with SparkSpec {
     val writer = FuzzyMatchStream.matchWriter(stream, reference, maps) { (matched, _) =>
       matched.count(): Unit
     }
-    // prepared-side barriers (row-id frame + pre-forced dedup variant)
-    // exist as soon as the writer is built, before any batch runs
+    // the prepared side's row-id barrier exists as soon as the writer is
+    // built, before any batch runs
     val preparedRdds = sc.getPersistentRDDs.keySet -- before
     assert(preparedRdds.nonEmpty, "prepareRight should materialize the static side")
 
@@ -136,6 +136,26 @@ class FuzzyMatchStreamSpec extends AnyFunSuite with SparkSpec {
     val expected = FuzzyMatcher.matchDfs(customers, reference, maps, opts)
     assert(res.columns.toSeq == expected.columns.toSeq)
     assert(res.count() == expected.count())
+  }
+
+  test("prepared static side: the deduplicated side outlives each batch's scope") {
+    import spark.implicits._
+    // the documented per-batch pattern: prepare once, then one MatchScope
+    // per batch. Both batches trigger the aggregation heuristic, so both
+    // read the deduplicated static side; the first builds it inside its
+    // own scope, which must not release it for the second.
+    val left = (1 to 1200).map(i => (i, s"name_${i % 3}")).toDF("lid", "k")
+    val right = (1 to 1200).map(i => (i, s"name_${i % 3}")).toDF("rid", "g")
+    val maps = Seq(FuzzyMapping("k", "g", 90.0, FuzzyAlgorithm.Levenshtein))
+    val prepared = FuzzyMatcher.prepareRight(left.columns.toSeq, right, maps)
+    def pairs(df: org.apache.spark.sql.DataFrame): Seq[(String, String)] =
+      df.select("k", "g").collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    val expected = FuzzyMatcher.withMatchScope(pairs(FuzzyMatcher.matchDfs(left, right, maps)))
+    assert(expected.size == 3)
+    for (batch <- 1 to 2)
+      assert(FuzzyMatcher.withMatchScope(
+        pairs(FuzzyMatcher.matchDfsWithPreparedRight(left, prepared))) == expected,
+        s"batch $batch")
   }
 
   test("prepared static side: aggregation heuristic dedups via the shared lazy variant") {

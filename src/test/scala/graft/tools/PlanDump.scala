@@ -10,7 +10,8 @@ import graft.fuzzy.{FuzzyAlgorithm, FuzzyMatcher, MatchOptions}
 
 /** Commit-able `.explain("formatted")` capture for the optimization rounds:
   * writes `plans/<round>/<name>_<tag>.txt` for the bench's fuzzy rows and
-  * for the scoring-join core they share.
+  * for the scoring-join core they share, and for the prepared-right front
+  * door (`fuzzy_prepared_right`).
   *
   * The fuzzy bench rows MATERIALIZE their per-pass match frames while the
   * query is being BUILT (checkpoint barriers), so the tail explain of a
@@ -92,6 +93,16 @@ object PlanDump {
       graft.pipeline.Dedup.semDedup(emb, "embedding", "vec_id",
         graft.pipeline.DemoModels.SemCentroids, dim = 64, nCells = 8,
         threshold = 0.35, maxCellPairs = 4000L))
+
+    // ---- the prepared-right front door (stream-static shape): the
+    // two-mapping customer self-join of `fuzzy_multi_225m` (renames, order
+    // step, filter-existing pass, combine) through prepareRight ----
+    dump("fuzzy_prepared_right", FuzzyMatcher.matchDfsWithPreparedRight(c,
+      FuzzyMatcher.prepareRight(c.columns.toSeq, c, Seq(
+          graft.fuzzy.FuzzyMapping("c_name", "c_name", 90.0, FuzzyAlgorithm.Levenshtein),
+          graft.fuzzy.FuzzyMapping("c_mktsegment", "c_mktsegment", 80.0,
+            FuzzyAlgorithm.JaroWinkler)),
+        MatchOptions(useApproxNearestNeighbor = Some(false)))))
 
     // ---- full bench queries (tail assembly plans; barriers make these
     // short, captured for completeness) ----
