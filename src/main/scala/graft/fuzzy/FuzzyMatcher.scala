@@ -104,7 +104,8 @@ object FuzzyMatcher {
       opts: MatchOptions) {
     private val owners = graft.util.MatchScope.capturedScopes
     lazy val rightIdxDeduped: DataFrame = graft.util.MatchScope.runWithScopes(owners)(
-      graft.util.Materialize(PreProcess.dedup(rightIdx, maps.map(_.rightCol)), opts.checkpoint))
+      graft.util.Materialize(rightIdx.dropDuplicates(maps.map(_.rightCol).distinct),
+        opts.checkpoint))
   }
 
   /** Build a [[PreparedRight]]. `leftCols` is the (fixed) schema of the
@@ -138,7 +139,7 @@ object FuzzyMatcher {
           (prepared.rightLen, prepared.rightDistinct))
       else (prepared.maps, false)
     val (l, rightIdx) =
-      if (dedupBoth) (PreProcess.dedup(left, maps.map(_.leftCol)), prepared.rightIdxDeduped)
+      if (dedupBoth) (left.dropDuplicates(maps.map(_.leftCol).distinct), prepared.rightIdxDeduped)
       else (left, prepared.rightIdx)
     assemble(addIndexColumn(l, LeftIdx, opts.checkpoint), rightIdx, maps, opts)
   }

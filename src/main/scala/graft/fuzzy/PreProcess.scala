@@ -76,11 +76,6 @@ object PreProcess {
   def needsAggregation(rate: Double, cartesianSize: Double): Boolean =
     rate < 1.2 && cartesianSize > 1_000_000L
 
-  /** One side deduplicated on its mapping columns — what [[decide]]'s
-    * dedup verdict means for each side. */
-  private[fuzzy] def dedup(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.dropDuplicates(cols.distinct)
-
   /** The structural half of preprocessing, which runs whether or not the
     * statistics do: with `runStats` off the mid-level fallback score name
     * `fuzzy_score_{left}_{right}` is resolved from the ORIGINAL column
@@ -103,9 +98,9 @@ object PreProcess {
   /** The statistics half of preprocessing as a pure decision (no Spark
     * action): from each side's (row count, approx distinct per mapping
     * column), fill the uniqueness, order the mappings most selective first,
-    * report the order, decide whether both sides are deduplicated before
-    * matching, and assign the output names. Returns the planned mappings
-    * and the dedup verdict.
+    * report the order, decide whether both sides are deduplicated on their
+    * mapping columns before matching, and assign the output names. Returns
+    * the planned mappings and the dedup verdict.
     *
     * Empty side: uniqueness, order and dedup are skipped but the names are
     * still assigned — deliberate deviation from pre_process.py:309-310,
@@ -119,7 +114,8 @@ object PreProcess {
     val (ordered, dedupBoth) =
       if (leftLen <= 0 || rightLen <= 0) (maps, false)
       else {
-        val ordered = orderMaps(fillPercUniqueFromStats(leftStats, rightStats, maps, leftLen, rightLen))
+        val ordered =
+          orderMaps(fillPercUniqueFromStats(leftStats, rightStats, maps, leftLen, rightLen))
         reportOnOrder(ordered)
         val rate = uniquenessRate(ordered)
         val cartesian = leftLen.toDouble * rightLen.toDouble
@@ -148,7 +144,8 @@ object PreProcess {
       statScan(left, named.map(_.leftCol)), statScan(r, named.map(_.rightCol)))
     val (ms, dedupBoth) = decide(named, leftStats, rightStats)
     if (dedupBoth)
-      Plan(dedup(left, ms.map(_.leftCol)), dedup(r, ms.map(_.rightCol)), ms, leftStats._1, rightStats._1)
+      Plan(left.dropDuplicates(ms.map(_.leftCol).distinct),
+        r.dropDuplicates(ms.map(_.rightCol).distinct), ms, leftStats._1, rightStats._1)
     else Plan(left, r, ms, leftStats._1, rightStats._1)
   }
 }

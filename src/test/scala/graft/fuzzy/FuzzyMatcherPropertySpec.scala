@@ -102,16 +102,16 @@ class FuzzyMatcherPropertySpec extends AnyFunSuite with SparkSpec {
 
   // SweepSpec's corpus (non-ASCII, empty, case-different, equal and
   // length-outlier values) plus a null on each side
-  private lazy val matrixLeft = (SweepSpec.leftRows :+ (100L, null: String)).toDF("lid", "a")
-  private lazy val matrixRight = (SweepSpec.rightRows :+ (200L, null: String)).toDF("rid", "b")
+  private val lRows = SweepSpec.leftRows :+ (100L, null: String)
+  private val rRows = SweepSpec.rightRows :+ (200L, null: String)
+  private lazy val matrixLeft = lRows.toDF("lid", "a")
+  private lazy val matrixRight = rRows.toDF("rid", "b")
   private val exact = MatchOptions(useApproxNearestNeighbor = Some(false), runPreprocess = false)
 
   /** Every named shape of `m` (a -> b, score column `s`) must return
     * exactly the driver brute force, for every algorithm at thresholds
     * 0/70/100. */
   private def assertMatrix(shapes: FuzzyMapping => Seq[(String, () => DataFrame)]): Unit = {
-    val lRows = SweepSpec.leftRows :+ (100L, null: String)
-    val rRows = SweepSpec.rightRows :+ (200L, null: String)
     // Spark's lower() is UTF8String.toLowerCase
     def low(s: String) = UTF8String.fromString(s).toLowerCase
     def rows(df: DataFrame): Set[(Long, Long, Double)] =
