@@ -340,23 +340,8 @@ case class SortedIntersectCount(left: Expression, right: Expression) extends Bin
     copy(left = l, right = r)
 }
 
-/** Membership of a long key in a driver-collected sorted array (binary
-  * search) — the codegen'd NOT-IN filter for small hot-key stop sets
-  * (document-frequency-capped shingles). */
-case class LongIn(child: Expression, sortedKeys: Array[Long])
-    extends UnaryExpression with Predicate {
-  override def prettyName: String = "long_in"
-  override protected def nullSafeEval(k: Any): Any =
-    java.util.Arrays.binarySearch(sortedKeys, k.asInstanceOf[Long]) >= 0
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("sortedKeys", sortedKeys, "long[]")
-    defineCodeGen(ctx, ev, k => s"(java.util.Arrays.binarySearch($ref, (long)$k) >= 0)")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 /** Probabilistic membership of a string in a BROADCAST Bloom filter — the
-  * executor-memory-bounded form of [[LongIn]]/[[KeptGrams]]'s literal sets.
+  * executor-memory-bounded form of [[KeptGrams]]'s literal sets.
   * A literal reference object reships with EVERY task binary; holding the
   * `Broadcast` handle instead ships 8 bytes per task and the bits land on
   * each executor exactly once (TorrentBroadcast), so the filter can be
@@ -592,7 +577,6 @@ object vectorFunctions {
   def hashed_shingle_set(text: Column, n: Int): Column = c(HashedShingleSet(x(text), n))
   def sorted_intersect_count(a: Column, b: Column): Column =
     c(SortedIntersectCount(x(a), x(b)))
-  def long_in(key: Column, sortedKeys: Array[Long]): Column = c(LongIn(x(key), sortedKeys))
   def bloom_might_contain(s: Column,
       bloom: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]): Column =
     c(BloomMightContain(x(s), bloom))

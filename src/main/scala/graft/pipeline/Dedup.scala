@@ -592,43 +592,45 @@ object Dedup {
     * documents puts n·(n-1)/2 candidate pairs on ONE reducer key, so
     * shingles whose pair contribution exceeds `maxShinglePairs` are dropped
     * from PAIR GENERATION only (scores of surviving candidates stay exact —
-    * the verify uses full sets). Drops are counted and logged via
-    * [[CapMetrics]], mirroring every LSH bucket cap. `Long.MaxValue`
-    * disables the gate (and its extra aggregation pass) entirely.
-    *
-    * Common case (nothing hot): ONE map-side-combined aggregate action and
-    * no per-row filter. Hot shingles found: the hot set — bounded by
-    * totalShingleRows / maxDf — inlines as a sorted-array NOT-IN codegen
-    * filter when it fits on the driver, else a left_anti join (the
-    * dfStats recompute on that rare path is two cheap aggregates over the
-    * already-materialized sets frame). */
+    * the verify uses full sets). The gate is the single-key form of the
+    * shared [[CapMetrics.gate]] (band 0, key `__sh`): same regimes, same
+    * accounting as every LSH bucket cap. `Long.MaxValue` disables the gate
+    * entirely: no stats job runs and no stage is recorded. */
   private def gateHotShingles(exploded: DataFrame, stage: String,
-                              maxShinglePairs: Long, maxDriverHot: Int): DataFrame = {
+                              maxShinglePairs: Long,
+                              checkpoint: CheckpointStrategy): DataFrame = {
     if (maxShinglePairs == Long.MaxValue) return exploded
     // largest document frequency whose bucket stays within the pair budget:
     // df * (df - 1) / 2 <= maxShinglePairs (computed driver-side — a
     // df*(df-1) column expression would overflow long for extreme dfs)
     val maxDf = ((1.0 + math.sqrt(1.0 + 8.0 * maxShinglePairs.toDouble)) / 2.0).toLong
     val dfStats = exploded.groupBy(col("__sh")).agg(count(lit(1)).as("__df"))
-    val overCap = col("__df") > maxDf
-    val pairsEst = col("__df").cast("double") * (col("__df") - 1).cast("double") / 2.0
-    val row = dfStats.agg(
-      count(lit(1)).as("total"),
-      sum(when(overCap, 1L).otherwise(0L)).as("dropped"),
-      sum(when(overCap, pairsEst).otherwise(lit(0.0))).as("dropped_pairs")).head()
-    val total = if (row.isNullAt(0)) 0L else row.getLong(0)
-    val dropped = if (row.isNullAt(1)) 0L else row.getLong(1)
-    val droppedPairs =
-      if (row.isNullAt(2)) 0L
-      else math.min(row.getDouble(2), Long.MaxValue.toDouble).toLong
-    CapMetrics.record(stage, CapMetrics.CapStats(dropped, total, droppedPairs))
-    if (dropped == 0L) exploded
-    else if (dropped <= maxDriverHot) {
-      val hot = dfStats.where(overCap).select(col("__sh")).collect().map(_.getLong(0))
-      java.util.Arrays.sort(hot)
-      exploded.where(!graft.fuzzy.vectorFunctions.long_in(col("__sh"), hot))
-    } else
-      exploded.join(dfStats.where(overCap).select(col("__sh")), Seq("__sh"), "left_anti")
+      .withColumn("__band", lit(0))
+    CapMetrics.gate(dfStats, stage, "__band", "__sh", col("__df") > maxDf,
+        col("__df").cast("double") * (col("__df") - 1).cast("double") / 2.0, checkpoint)
+      .keep(exploded, lit(0))
+  }
+
+  /** Shared self-join blocking scaffold of [[ngramJaccardPairs]] and
+    * [[containmentPairs]] — shingle sets, the materialized exploded rows,
+    * the hot gate, the shared-shingle self-join, pair dedup; the self twin
+    * of [[crossBlockedCandidates]]. Returns (candidate id pairs, sets). */
+  private def selfBlockedCandidates(docs: DataFrame, textCol: String, idCol: String,
+                                    n: Int, stage: String,
+                                    checkpoint: CheckpointStrategy,
+                                    maxShinglePairs: Long): (DataFrame, DataFrame) = {
+    val sets = shingleSets(docs, textCol, idCol, n, checkpoint)
+    // the exploded (id, shingle) rows feed the gate's df census AND both
+    // sides of the blocking self-join — three computes of a corpus-sized
+    // explode if left lazy (the multi-consumer trap; A/B in SCALE.md)
+    val exploded = Materialize(
+      sets.select(col(idCol), explode(col("__hset")).as("__sh")), checkpoint)
+    val gated = gateHotShingles(exploded, stage, maxShinglePairs, checkpoint)
+    val pairs = gated.as("a").join(gated.as("b"),
+        col("a.__sh") === col("b.__sh") && col(s"a.$idCol") < col(s"b.$idCol"))
+      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
+      .dropDuplicates("id_a", "id_b")
+    (pairs, sets)
   }
 
   /** Exact n-gram Jaccard near-duplicate pairs (id_a < id_b, jaccard >=
@@ -644,20 +646,9 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, textCol: String, idCol: String,
                         n: Int, threshold: Double,
                         checkpoint: CheckpointStrategy = CheckpointStrategy.Local,
-                        maxShinglePairs: Long = 4_000_000L,
-                        maxDriverHotShingles: Int = 1_000_000): DataFrame = {
-    val sets = shingleSets(docs, textCol, idCol, n, checkpoint)
-    // the exploded (id, shingle) rows feed the gate's df census AND both
-    // sides of the blocking self-join — three computes of a corpus-sized
-    // explode if left lazy (the multi-consumer trap; A/B in SCALE.md)
-    val exploded = Materialize(
-      sets.select(col(idCol), explode(col("__hset")).as("__sh")), checkpoint)
-    val gated = gateHotShingles(exploded, "dedup_ngram", maxShinglePairs,
-      maxDriverHotShingles)
-    val pairs = gated.as("a").join(gated.as("b"),
-        col("a.__sh") === col("b.__sh") && col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
+                        maxShinglePairs: Long = 4_000_000L): DataFrame = {
+    val (pairs, sets) = selfBlockedCandidates(docs, textCol, idCol, n,
+      "dedup_ngram", checkpoint, maxShinglePairs)
     verifyJaccard(pairs, sets, idCol, threshold)
   }
 
@@ -686,18 +677,9 @@ object Dedup {
   def containmentPairs(docs: DataFrame, textCol: String, idCol: String,
                        n: Int, threshold: Double,
                        checkpoint: CheckpointStrategy = CheckpointStrategy.Local,
-                       maxShinglePairs: Long = 4_000_000L,
-                       maxDriverHotShingles: Int = 1_000_000): DataFrame = {
-    val sets = shingleSets(docs, textCol, idCol, n, checkpoint)
-    // same multi-consumer materialization as ngramJaccardPairs
-    val exploded = Materialize(
-      sets.select(col(idCol), explode(col("__hset")).as("__sh")), checkpoint)
-    val gated = gateHotShingles(exploded, "dedup_containment", maxShinglePairs,
-      maxDriverHotShingles)
-    val pairs = gated.as("a").join(gated.as("b"),
-        col("a.__sh") === col("b.__sh") && col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
+                       maxShinglePairs: Long = 4_000_000L): DataFrame = {
+    val (pairs, sets) = selfBlockedCandidates(docs, textCol, idCol, n,
+      "dedup_containment", checkpoint, maxShinglePairs)
     verifyScoredSided(pairs, sets, sets, idCol, "containment",
       (common, sa, sb) => common / least(sa, sb), threshold)
   }
@@ -716,11 +698,9 @@ object Dedup {
                             textCol: String, idCol: String,
                             n: Int, threshold: Double,
                             checkpoint: CheckpointStrategy = CheckpointStrategy.Local,
-                            maxShinglePairs: Long = 4_000_000L,
-                            maxDriverHotShingles: Int = 1_000_000): DataFrame = {
+                            maxShinglePairs: Long = 4_000_000L): DataFrame = {
     val (pairs, setsL, setsR) = crossBlockedCandidates(left, right, textCol,
-      idCol, n, "dedup_containment_cross", checkpoint, maxShinglePairs,
-      maxDriverHotShingles)
+      idCol, n, "dedup_containment_cross", checkpoint, maxShinglePairs)
     verifyScoredSided(pairs, setsL, setsR, idCol, "containment",
       (common, sa, sb) => common / least(sa, sb), threshold)
   }
@@ -830,7 +810,6 @@ object Dedup {
                                     stored: StoredContainmentState,
                                     threshold: Double = 0.6,
                                     maxShinglePairs: Long = 4_000_000L,
-                                    maxDriverHotShingles: Int = 1_000_000,
                                     checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
     val bSets = shingleSets(batch, textCol, idCol, stored.n, checkpoint)
     val eB = bSets.select(col(idCol), explode(col("__hset")).as("__sh"))
@@ -841,7 +820,7 @@ object Dedup {
     val cStats = stored.stats.where(col("bucket").isin(touched: _*)).drop("bucket")
     // pruned read 2: the cross gate priced from batch dfs x stored stats
     val (gB, gC) = gateHotShinglesCross(eB, cSh, "dedup_containment_stored",
-      maxShinglePairs, maxDriverHotShingles, dfRPre = Some(cStats))
+      maxShinglePairs, checkpoint, dfRPre = Some(cStats))
     val pairs = Materialize(gB.as("a").join(gC.as("b"),
         col("a.__sh") === col("b.__sh"))
       .select(col(s"a.$idCol").as("id_a"), col("b.id").as("id_b"))
@@ -866,15 +845,13 @@ object Dedup {
                                      textCol: String, idCol: String,
                                      n: Int, stage: String,
                                      checkpoint: CheckpointStrategy,
-                                     maxShinglePairs: Long,
-                                     maxDriverHotShingles: Int
+                                     maxShinglePairs: Long
                                     ): (DataFrame, DataFrame, DataFrame) = {
     val setsL = shingleSets(left, textCol, idCol, n, checkpoint)
     val setsR = shingleSets(right, textCol, idCol, n, checkpoint)
     val eL = setsL.select(col(idCol), explode(col("__hset")).as("__sh"))
     val eR = setsR.select(col(idCol), explode(col("__hset")).as("__sh"))
-    val (gL, gR) = gateHotShinglesCross(eL, eR, stage,
-      maxShinglePairs, maxDriverHotShingles)
+    val (gL, gR) = gateHotShinglesCross(eL, eR, stage, maxShinglePairs, checkpoint)
     val pairs = gL.as("a").join(gR.as("b"), col("a.__sh") === col("b.__sh"))
       .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
       .dropDuplicates("id_a", "id_b")
@@ -898,11 +875,9 @@ object Dedup {
                              textCol: String, idCol: String,
                              n: Int, threshold: Double,
                              checkpoint: CheckpointStrategy = CheckpointStrategy.Local,
-                             maxShinglePairs: Long = 4_000_000L,
-                             maxDriverHotShingles: Int = 1_000_000): DataFrame = {
+                             maxShinglePairs: Long = 4_000_000L): DataFrame = {
     val (pairs, setsL, setsR) = crossBlockedCandidates(left, right, textCol,
-      idCol, n, "dedup_ngram_cross", checkpoint, maxShinglePairs,
-      maxDriverHotShingles)
+      idCol, n, "dedup_ngram_cross", checkpoint, maxShinglePairs)
     verifyJaccardSided(pairs, setsL, setsR, idCol, threshold)
   }
 
@@ -910,46 +885,27 @@ object Dedup {
     * left and dfR right docs contributes dfL*dfR candidate pairs on one
     * reducer key, so shingles over the pair budget are dropped from pair
     * generation on BOTH sides (scores of survivors stay exact). One
-    * joined df-stats aggregate; hot set inlines as a sorted-array NOT-IN
-    * codegen filter when it fits on the driver, else anti-joins.
-    * `dfRPre` supplies a PRECOMPUTED right-side (`__sh`, `__dfr`) frame —
-    * the stored-state query paths price the gate from their store's
-    * stats table instead of rescanning the right rows. */
+    * single-key [[CapMetrics.gate]] over the joined df stats. `dfRPre`
+    * supplies a PRECOMPUTED right-side (`__sh`, `__dfr`) frame — the
+    * stored-state query paths price the gate from their store's stats
+    * table instead of rescanning the right rows. */
   private def gateHotShinglesCross(eL: DataFrame, eR: DataFrame, stage: String,
                                    maxShinglePairs: Long,
-                                   maxDriverHot: Int,
+                                   checkpoint: CheckpointStrategy,
                                    dfRPre: Option[DataFrame] = None): (DataFrame, DataFrame) = {
     if (maxShinglePairs == Long.MaxValue) return (eL, eR)
     val dfL = eL.groupBy(col("__sh")).agg(count(lit(1)).as("__dfl"))
     val dfR = dfRPre.getOrElse(
       eR.groupBy(col("__sh")).agg(count(lit(1)).as("__dfr")))
     // inner join: a shingle on one side only makes no pairs (the blocking
-    // join skips it for free) and cannot be hot
-    val joint = dfL.join(dfR, Seq("__sh"))
-    val pairsEst = col("__dfl").cast("double") * col("__dfr").cast("double")
-    val overCap = pairsEst > maxShinglePairs.toDouble
-    val row = joint.agg(
-      count(lit(1)).as("total"),
-      sum(when(overCap, 1L).otherwise(0L)).as("dropped"),
-      sum(when(overCap, pairsEst).otherwise(lit(0.0))).as("dropped_pairs")).head()
-    val total = if (row.isNullAt(0)) 0L else row.getLong(0)
-    val dropped = if (row.isNullAt(1)) 0L else row.getLong(1)
-    val droppedPairs =
-      if (row.isNullAt(2)) 0L
-      else math.min(row.getDouble(2), Long.MaxValue.toDouble).toLong
-    CapMetrics.record(stage, CapMetrics.CapStats(dropped, total, droppedPairs))
-    if (dropped == 0L) (eL, eR)
-    else if (dropped <= maxDriverHot) {
-      val hot = joint.where(overCap).select(col("__sh")).collect().map(_.getLong(0))
-      java.util.Arrays.sort(hot)
-      val keep = (e: DataFrame) =>
-        e.where(!graft.fuzzy.vectorFunctions.long_in(col("__sh"), hot))
-      (keep(eL), keep(eR))
-    } else {
-      val hotFrame = joint.where(overCap).select(col("__sh"))
-      (eL.join(hotFrame, Seq("__sh"), "left_anti"),
-        eR.join(hotFrame, Seq("__sh"), "left_anti"))
-    }
+    // join skips it for free) and cannot be hot. The allowed-frame regime
+    // semi-joins these joint stats, so it also drops such one-sided rows:
+    // they could never pair, so the pairs are unchanged.
+    val joint = dfL.join(dfR, Seq("__sh")).withColumn("__band", lit(0))
+    val pairs = col("__dfl").cast("double") * col("__dfr").cast("double")
+    val gate = CapMetrics.gate(joint, stage, "__band", "__sh",
+      pairs > maxShinglePairs.toDouble, pairs, checkpoint)
+    (gate.keep(eL, lit(0)), gate.keep(eR, lit(0)))
   }
 
   // ------------------------------------------------------------- winnow
@@ -971,14 +927,13 @@ object Dedup {
   def winnowOverlapPairs(docs: DataFrame, textCol: String, idCol: String,
                          k: Int = 5, window: Int = 4, minShared: Long = 8L,
                          maxFingerprintPairs: Long = 4_000_000L,
-                         maxDriverHotFingerprints: Int = 1_000_000,
                          useMd5: Boolean = false,
                          checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
     // materialize once: the df-gate aggregate and both self-join sides
     // would otherwise each rebuild the k-gram + window-min sketch
     val exploded = winnowState(docs, textCol, idCol, k, window, useMd5, checkpoint)
     val gated = gateHotShingles(exploded, "dedup_winnow", maxFingerprintPairs,
-      maxDriverHotFingerprints)
+      checkpoint)
     gated.as("a").join(gated.as("b"),
         col("a.__sh") === col("b.__sh") && col(s"a.$idCol") < col(s"b.$idCol"))
       .groupBy(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
@@ -1009,19 +964,18 @@ object Dedup {
     * [[ngramJaccardCrossPairs]] cross-side rule on the fingerprint key:
     * batch fingerprint rows join ONLY corpus rows of the same
     * fingerprint (cost Σ dfBatch·dfCorpus per fingerprint, never Σ df²)
-    * and [[gateHotShinglesCross]] caps the cross product with O(drops)
-    * accounting (stage `dedup_winnow_cross`). `k`/`window`/`useMd5` must
+    * and [[gateHotShinglesCross]] caps the cross product
+    * (stage `dedup_winnow_cross`). `k`/`window`/`useMd5` must
     * match the state's construction. */
   def winnowCrossPairs(batch: DataFrame, corpusState: DataFrame,
                        textCol: String, idCol: String,
                        k: Int = 5, window: Int = 4, minShared: Long = 8L,
                        maxFingerprintPairs: Long = 4_000_000L,
-                       maxDriverHotFingerprints: Int = 1_000_000,
                        useMd5: Boolean = false,
                        checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
     val eB = winnowState(batch, textCol, idCol, k, window, useMd5, checkpoint)
     val (gB, gC) = gateHotShinglesCross(eB, corpusState, "dedup_winnow_cross",
-      maxFingerprintPairs, maxDriverHotFingerprints)
+      maxFingerprintPairs, checkpoint)
     gB.as("a").join(gC.as("b"), col("a.__sh") === col("b.__sh"))
       .groupBy(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
       .agg(count(lit(1)).as("n_shared"))
@@ -1111,15 +1065,13 @@ object Dedup {
     * collect — ≤ nBuckets values) become a partition filter on both
     * stored frames; the cross-side hot gate is priced from batch
     * frequencies × the store's stats with no fps-row scan, and hot
-    * fingerprints are filtered from BOTH sides (driver-bounded NOT-IN
-    * when small, anti-join otherwise — the [[gateHotShinglesCross]]
-    * escalation). Output identical to the in-memory form on the same
+    * fingerprints are filtered from BOTH sides by the shared
+    * [[gateHotShinglesCross]]. Output identical to the in-memory form on the same
     * sketch parameters (spec-pinned; the oracled twin shares
     * `dedup_winnow_inc`'s oracle verbatim). */
   def winnowPairsAgainstStored(batch: DataFrame, textCol: String, idCol: String,
                                stored: StoredWinnowState, minShared: Long = 8L,
                                maxFingerprintPairs: Long = 4_000_000L,
-                               maxDriverHotFingerprints: Int = 1_000_000,
                                checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
     val eB = winnowState(batch, textCol, idCol, stored.k, stored.window,
       stored.useMd5, checkpoint)
@@ -1131,7 +1083,7 @@ object Dedup {
     // the shared cross gate, priced from batch dfs x the STORE's stats
     // table (dfRPre) — no fps-row scan to decide
     val (gB, gC) = gateHotShinglesCross(eB, cFps, "dedup_winnow_stored",
-      maxFingerprintPairs, maxDriverHotFingerprints, dfRPre = Some(cStats))
+      maxFingerprintPairs, checkpoint, dfRPre = Some(cStats))
     gB.as("a").join(gC.as("b"), col("a.__sh") === col("b.__sh"))
       .groupBy(col(s"a.$idCol").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("n_shared"))

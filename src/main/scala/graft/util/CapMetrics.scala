@@ -6,12 +6,17 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.slf4j.LoggerFactory
 
-/** The bucket cap shared by every LSH-style pair generator, with its
+/** The bucket cap shared by every blocked pair generator, with its
   * accounting.
   *
-  * Every LSH-style pair generator in the engine caps bucket sizes so a
+  * Every blocked pair generator in the engine caps bucket sizes so a
   * degenerate bucket cannot concentrate quadratic work on one reducer
-  * (see [[graft.fuzzy.AnnJoin]]). The cap trades recall for boundedness —
+  * (see [[graft.fuzzy.AnnJoin]]). [[gate]] is the one implementation:
+  * the eleven LSH-style call sites (fuzzy LSH join, ANN LSH top-k, the
+  * minhash, chunk, cosine and semantic dedup families) gate (band, key)
+  * buckets, and Dedup's hot-shingle / hot-fingerprint gates (n-gram,
+  * containment and winnow dedup, self, cross and stored forms) gate a
+  * single key (band 0, key `__sh`). The cap trades recall for boundedness —
   * and that trade must never be silent. [[gate]] accounts the drops from
   * the per-bucket statistics frame (tiny: one row per candidate bucket,
   * already aggregated — the join needs it anyway) and logs one line per
@@ -27,12 +32,13 @@ import org.slf4j.LoggerFactory
 object CapMetrics {
   private val log = LoggerFactory.getLogger(getClass)
 
-  /** `keptPairs` is the SUM over allowed buckets of their lc*rc candidate
-    * counts — an upper bound on unique surviving pairs (a pair colliding
-    * in b bands counts b times). Callers use kept + dropped as the LSH
+  /** `keptPairs` is the SUM over allowed buckets of their candidate-pair
+    * counts (the `pairs` column the caller prices) — an upper bound on
+    * unique surviving pairs (a pair colliding in b bands, or sharing b
+    * shingles, counts b times). Callers use kept + dropped as the LSH
     * path's total planned volume (see AnnJoin's exact-fallback gate). */
   final case class CapStats(droppedBuckets: Long, totalBuckets: Long,
-                            droppedPairs: Long, keptPairs: Long = 0L)
+                            droppedPairs: Long, keptPairs: Long)
 
   /** Last accounted stats per stage name, refreshed on every build that
     * touches the stage. */
@@ -40,9 +46,7 @@ object CapMetrics {
 
   def lastMetrics(stage: String): Option[CapStats] = Option(last.get(stage))
 
-  /** Record + log stats computed by the caller (driver-side accounting
-    * paths that already hold the bucket rows). */
-  def record(stage: String, s: CapStats): Unit = {
+  private def record(stage: String, s: CapStats): Unit = {
     last.put(stage, s)
     if (s.droppedBuckets > 0)
       log.warn(s"[graft.cap] $stage: dropped ${s.droppedBuckets} of ${s.totalBuckets} buckets " +
@@ -87,7 +91,7 @@ object CapMetrics {
       }
   }
 
-  /** Bucket gate with accounting, three regimes (shared by every LSH-style
+  /** Bucket gate with accounting, three regimes (shared by every blocked
     * pair generator). The regime follows the real bucket count:
     *  - bucket count fits on the driver (up to `maxDriverBuckets`): ONE
     *    collect, driver-side drop accounting — no checkpoint, no extra

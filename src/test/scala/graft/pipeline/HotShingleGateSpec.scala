@@ -105,7 +105,7 @@ class HotShingleGateSpec extends AnyFunSuite with SparkSpec {
     rows.groupBy(_._2).map { case (k, rs) => k -> rs.size.toLong }
 
   /** Expected accounting and the keys that stay in pair generation. */
-  private final case class Census(dropped: Long, total: Long, droppedPairs: Long,
+  private case class Census(dropped: Long, total: Long, droppedPairs: Long,
                                   keptPairs: Long, kept: Set[Long])
 
   private def selfCensus(rows: Seq[(Long, Long)]): Census = {
@@ -177,6 +177,7 @@ class HotShingleGateSpec extends AnyFunSuite with SparkSpec {
     assert(s.droppedBuckets === census.dropped)
     assert(s.totalBuckets === census.total)
     assert(s.droppedPairs === census.droppedPairs)
+    assert(s.keptPairs === census.keptPairs)
   }
 
   private def tempDir(prefix: String): String =

@@ -26,7 +26,10 @@ import graft.fuzzy.{FuzzyAlgorithm, FuzzyMatcher, MatchOptions}
   * some buckets, so the gated stage shows its `bucket_allowed` filter:
   * two-sided (ANN LSH top-k), self-join (minhash LSH dedup) and the
   * semantic-cell gate (semantic dedup). The fuzzy LSH join's gate is in
-  * `scoring_join_lsh`.
+  * `scoring_join_lsh`. The hot-shingle gates are dumped the same way:
+  * self-join n-gram dedup (`dedup_ngram`), the incremental dedup's cross
+  * gate (`dedup_incremental`) and the stored winnow gate
+  * (`dedup_winnow_stored`).
   *
   * Usage: Test/runMain graft.tools.PlanDump <tag> [round]
   */
@@ -93,6 +96,26 @@ object PlanDump {
       graft.pipeline.Dedup.semDedup(emb, "embedding", "vec_id",
         graft.pipeline.DemoModels.SemCentroids, dim = 64, nCells = 8,
         threshold = 0.35, maxCellPairs = 4000L))
+
+    // ---- hot-shingle gate shapes (single-key gates on `__sh`), capped so
+    // the gate drops shingles: self-join n-gram dedup, the incremental
+    // dedup's cross gate (`dedup_ngram_cross`) and the stored winnow gate
+    // priced from the store's stats table ----
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val batch = docs.where(col("doc_id") % 5 === 0)
+      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
+    dump("dedup_ngram",
+      graft.pipeline.Dedup.ngramJaccardPairs(docs, "text", "doc_id", 3, 0.5,
+        maxShinglePairs = 10L))
+    dump("dedup_incremental",
+      graft.pipeline.Dedup.incrementalDedup(batch, docs, "text", "doc_id",
+        n = 3, threshold = 0.5, maxShinglePairs = 10L))
+    val winnowDir = Files.createTempDirectory("plandump_winnow").toString
+    graft.pipeline.Dedup.saveWinnowState(docs, "text", "doc_id", winnowDir, nBuckets = 16)
+    dump("dedup_winnow_stored",
+      graft.pipeline.Dedup.winnowPairsAgainstStored(batch, "text", "doc_id",
+        graft.pipeline.Dedup.loadWinnowState(spark, winnowDir), minShared = 2L,
+        maxFingerprintPairs = 10L))
 
     // ---- the prepared-right front door (stream-static shape): the
     // two-mapping customer self-join of `fuzzy_multi_225m` (renames, order
