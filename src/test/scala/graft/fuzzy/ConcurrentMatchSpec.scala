@@ -3,7 +3,9 @@ package graft.fuzzy
 import java.util.concurrent.{CountDownLatch, CyclicBarrier, Executors, TimeUnit}
 
 import graft.SparkSpec
-import graft.util.MatchScope
+import graft.util.{MatchScope, Par}
+import org.apache.spark.{SparkContext, TaskContext}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -149,6 +151,37 @@ class ConcurrentMatchSpec extends AnyFunSuite with SparkSpec {
     assert(rows == 50L)
   }
 
+  test("Par.run2 cancels the other side's Spark jobs when one side fails") {
+    // one side throws after ~1 s while the other runs a 60 s single-task
+    // job: run2 must rethrow the original failure without waiting the job
+    // out, and leave no job running under its tag
+    val sc = spark.sparkContext
+    val tagged = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.contains("graft-par-"))) tagged.add(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = tagged.remove(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    try Seq(true, false).foreach { callerFails =>
+      val boom = new IllegalStateException(s"one side failed (caller side: $callerFails)")
+      def failing: Long = { Thread.sleep(1000); throw boom }
+      val t0 = System.nanoTime()
+      val e = intercept[IllegalStateException] {
+        if (callerFails) Par.run2(failing, ConcurrentMatchSpec.longJob(sc))
+        else Par.run2(ConcurrentMatchSpec.longJob(sc), failing)
+      }
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(e eq boom, s"run2 rethrew $e instead of the original failure")
+      assert(secs < 20.0, f"run2 waited $secs%.1f s for the other side's job")
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!tagged.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(tagged.isEmpty, s"jobs still active under a run2 tag: $tagged")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("concurrent fuzzy_match TVF callers get independent, correct plans") {
     // the SQL front door plans at ANALYSIS time (the TVF builder runs
     // matchDfs, jobs and all, inside resolution) — four driver threads
@@ -184,4 +217,15 @@ class ConcurrentMatchSpec extends AnyFunSuite with SparkSpec {
       }
     } finally pool.shutdownNow()
   }
+}
+
+object ConcurrentMatchSpec {
+  /** A single-task job that runs for up to 60 s and ends early once its
+    * task is killed. */
+  def longJob(sc: SparkContext): Long = sc.parallelize(Seq(1L), 1).map { x =>
+    val tc = TaskContext.get()
+    val end = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (System.nanoTime() < end && !tc.isInterrupted()) Thread.sleep(50)
+    x
+  }.count()
 }
