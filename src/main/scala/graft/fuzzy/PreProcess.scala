@@ -22,8 +22,7 @@ object PreProcess {
 
   private val log = LoggerFactory.getLogger(getClass)
 
-  final case class Plan(left: DataFrame, right: DataFrame, maps: Seq[FuzzyMapping],
-                        leftLen: Long, rightLen: Long)
+  final case class Plan(left: DataFrame, right: DataFrame, maps: Seq[FuzzyMapping])
 
   /** Log the processing order of the mappings with their uniqueness scores
     * (`report_on_order_of_fuzzy_maps`, pre_process.py:174-197): the most
@@ -136,7 +135,7 @@ object PreProcess {
   def run(left: DataFrame, right: DataFrame, maps: Seq[FuzzyMapping],
           runStats: Boolean = true): Plan = {
     val (r, named, _) = structural(left.columns.toSeq, right, maps, runStats)
-    if (!runStats) return Plan(left, r, named, -1L, -1L)
+    if (!runStats) return Plan(left, r, named)
     // Both sides' fused count+HLL scans run CONCURRENTLY (guide §2.6):
     // they are independent jobs, and serializing them only added their
     // fixed scheduling latencies.
@@ -145,7 +144,7 @@ object PreProcess {
     val (ms, dedupBoth) = decide(named, leftStats, rightStats)
     if (dedupBoth)
       Plan(left.dropDuplicates(ms.map(_.leftCol).distinct),
-        r.dropDuplicates(ms.map(_.rightCol).distinct), ms, leftStats._1, rightStats._1)
-    else Plan(left, r, ms, leftStats._1, rightStats._1)
+        r.dropDuplicates(ms.map(_.rightCol).distinct), ms)
+    else Plan(left, r, ms)
   }
 }

@@ -30,7 +30,14 @@ object FuzzyMatchStream {
     * handing each batch's matched frame to `sink`. The caller starts it
     * (`.start()`) and chooses trigger / checkpoint options as with any
     * streaming writer (e.g. `Trigger.AvailableNow()` for drain-and-stop,
-    * the default processing-time trigger for a continuous stream). */
+    * the default processing-time trigger for a continuous stream).
+    *
+    * The prepared static side is built here, on the caller's thread, and
+    * belongs to the MatchScopes active at this call: build the writer
+    * inside a `withMatchScope` that spans `start()` to `stop()` (or the
+    * query's termination), and closing that scope releases the side.
+    * Built outside any scope, it stays persisted for the application's
+    * lifetime, one static side per query. */
   def matchWriter(stream: DataFrame, reference: DataFrame,
                   maps: Seq[FuzzyMapping],
                   opts: MatchOptions = MatchOptions.default)

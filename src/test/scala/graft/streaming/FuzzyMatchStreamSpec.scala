@@ -125,6 +125,36 @@ class FuzzyMatchStreamSpec extends AnyFunSuite with SparkSpec {
       "a batch scope released the shared prepared-right barriers")
   }
 
+  test("prepared static side: a scope spanning start() to stop() releases it") {
+    // matchWriter's contract: the prepared side belongs to the scopes
+    // active when the writer is built
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("cust_stream_owner")
+    val src = spark.read.parquet(custPath).limit(60)
+    src.coalesce(1).write.parquet(dir.resolve("b1").toString)
+    val stream = spark.readStream.schema(src.schema).parquet(s"$dir/*/")
+    val reference = spark.read.parquet(suppPath)
+    val maps = Seq(FuzzyMapping("c_name", "s_name", 70.0, FuzzyAlgorithm.Levenshtein))
+
+    val before = sc.getPersistentRDDs.keySet
+    val rows = new java.util.concurrent.atomic.AtomicLong()
+    graft.util.MatchScope.withMatchScope {
+      val q = FuzzyMatchStream.matchWriter(stream, reference, maps) { (matched, _) =>
+        rows.addAndGet(matched.count()): Unit
+      }.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("fms_owner_ckpt").toString)
+        .start()
+      try assert(q.awaitTermination(180000L), "streaming query did not drain in time")
+      finally q.stop()
+      assert((sc.getPersistentRDDs.keySet -- before).nonEmpty,
+        "the prepared side should be live until its scope closes")
+    }
+    assert(rows.get > 0L)
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"the prepared side outlived its scope: RDDs $leaked")
+  }
+
   test("prepared static side: mid-level semantics (no preprocessing) keep fallback names") {
     val customers = spark.read.parquet(custPath).limit(50)
     val reference = spark.read.parquet(suppPath)
