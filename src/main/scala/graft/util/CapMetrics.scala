@@ -38,7 +38,7 @@ object CapMetrics {
     * shingles, counts b times). Callers use kept + dropped as the LSH
     * path's total planned volume (see AnnJoin's exact-fallback gate). */
   final case class CapStats(droppedBuckets: Long, totalBuckets: Long,
-                            droppedPairs: Long, keptPairs: Long)
+                            droppedPairs: Long, keptPairs: Long = 0L)
 
   /** Last accounted stats per stage name, refreshed on every build that
     * touches the stage. */
