@@ -13,14 +13,14 @@ import org.slf4j.LoggerFactory
   * degenerate bucket cannot concentrate quadratic work on one reducer
   * (see [[graft.fuzzy.AnnJoin]]). [[gate]] is the one implementation:
   * the eleven LSH-style call sites (fuzzy LSH join, ANN LSH top-k, the
-  * minhash, chunk, cosine and semantic dedup families) gate (band, key)
-  * buckets, and Dedup's hot-shingle / hot-fingerprint gates (n-gram,
-  * containment and winnow dedup, self, cross and stored forms) gate a
-  * single key (band 0, key `__sh`). The cap trades recall for boundedness —
-  * and that trade must never be silent. [[gate]] accounts the drops from
-  * the per-bucket statistics frame (tiny: one row per candidate bucket,
-  * already aggregated — the join needs it anyway) and logs one line per
-  * capped stage:
+  * minhash, simhash/hamming, cosine and semantic dedup families) gate
+  * (band, key) buckets, and Dedup's hot-shingle / hot-fingerprint gates
+  * (n-gram, containment and winnow dedup, self, cross and stored forms)
+  * gate a single key (band 0, key `__sh`). The cap trades recall for
+  * boundedness — and that trade must never be silent. [[gate]] accounts
+  * the drops from the per-bucket statistics frame (tiny: one row per
+  * candidate bucket, already aggregated — the join needs it anyway) and
+  * logs one line per capped stage:
   *
   *   [graft.cap] <stage>: dropped N of M buckets (~P candidate pairs)
   *
