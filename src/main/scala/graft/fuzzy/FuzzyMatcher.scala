@@ -32,22 +32,29 @@ import org.apache.spark.sql.functions._
   *    broadcast in length-sorted blocks and each larger-side value scans
   *    them in flat arrays, skipping whole length groups by the kernel's
   *    own length reject, so the cartesian stream is never materialized.
-  *    Filter-existing passes and LSH candidates score with the codegen'd
-  *    bounded-kernel expression ([[scoreValuePairs]]);
+  *    LSH candidates score with the codegen'd bounded-kernel expression
+  *    ([[scoreValuePairs]]);
   *
   *  - strategy selection (exact cross join vs MinHash-LSH candidates) from
   *    the distinct-value cartesian estimate, constants preserved from
   *    matcher.py:250,322;
   *
   *  - multi-pass fold where pass N's matches gate pass N+1's candidates
-  *    (matcher.py:507-577), each pass checkpointed because it is consumed
-  *    at least twice (next pass + final combine);
+  *    (matcher.py:507-577). Only the fresh first pass is checkpointed. A
+  *    filter pass carries its scores: it attaches its two value columns to
+  *    the surviving row pairs by id, scores each row pair inline with the
+  *    same bounded kernel, and keeps the earlier passes' score columns, so
+  *    the last pass frame already holds every score and no combine join
+  *    runs. The reference scores each distinct value pair once here too;
+  *    a filter pass sees only pairs that survived pass 1, where one bounded
+  *    kernel call per row costs less than the shuffle and join-back that
+  *    deduplication needs;
   *
   *  - one driver behind both front doors: [[matchDfs]] (also behind the
   *    `fuzzy_match` TVF) and the prepared-right path ([[prepareRight]] +
   *    [[matchDfsWithPreparedRight]]) preprocess through the same
   *    [[PreProcess]] steps and end in the same assembly (pass fold,
-  *    combine, join-back, column order). They differ only in where the
+  *    join-back, column order). They differ only in where the
   *    right side's statistics and row index come from: computed per call,
   *    or once at preparation. The prepared path's deduplicated right side
   *    is built on first need and lives exactly as long as its row index
@@ -144,14 +151,12 @@ object FuzzyMatcher {
     assemble(addIndexColumn(l, LeftIdx, opts.checkpoint), rightIdx, maps, opts)
   }
 
-  /** The assembly both front doors end in: the pass fold, the combine
-    * (skipped for a single mapping, matcher.py:642-647), the join back to
-    * both indexed sides and the final column order
-    * `left ++ right(renamed) ++ scores`. */
+  /** The assembly both front doors end in: the pass fold, the join of the
+    * last pass frame (every score column) back to both indexed sides and
+    * the final column order `left ++ right(renamed) ++ scores`. */
   private def assemble(leftIdx: DataFrame, rightIdx: DataFrame, maps: Seq[FuzzyMapping],
                        opts: MatchOptions): DataFrame = {
-    val frames = performAllFuzzyMatches(leftIdx, rightIdx, maps, opts)
-    val matches = if (frames.size == 1) frames.head else combineMatches(frames)
+    val matches = combineMatches(performAllFuzzyMatches(leftIdx, rightIdx, maps, opts))
     val outputOrder = (leftIdx.columns ++ rightIdx.columns).toSeq
       .filterNot(c => c == LeftIdx || c == RightIdx) ++ maps.map(_.resolvedOutputName)
     leftIdx.join(matches, LeftIdx)
@@ -171,7 +176,7 @@ object FuzzyMatcher {
 
   /** Scoped barrier lifecycle — the reference's `fuzzy_match_temp_dir`
     * context manager (matcher.py:725-750) restated for Spark: every
-    * materialization barrier taken inside `body` (pass checkpoints, index
+    * materialization barrier taken inside `body` (the fresh pass, index
     * frames, the eager result) is released when `body` exits — local
     * blocks unpersist, reliable checkpoint files delete. Consume the
     * result inside the scope (write/collect), exactly as the reference
@@ -210,8 +215,9 @@ object FuzzyMatcher {
     * normalized distance is within the (truncated) reversed threshold, flip
     * distance to similarity (calculate_fuzzy_score, process.py:8-56).
     * Input and output are value-level: (leftVal, rightVal) -> + score `s`.
-    * Scores filter-existing passes and LSH candidates; fresh exact passes
-    * run the [[SweepScore]] sweep instead.
+    * Scores LSH candidates; fresh exact passes run the [[SweepScore]]
+    * sweep instead, and filter passes score row pairs inline with the same
+    * kernel expression ([[processFuzzyMapping]]).
     *
     * Performance shape: lowercased columns a candidate frame already
     * carries (LSH attaches them once per distinct value) are reused, and
@@ -311,58 +317,58 @@ object FuzzyMatcher {
   }
 
   /** One pass (process_fuzzy_mapping, matcher.py:419-504). Returns the
-    * per-pass match frame `(score-as-output-name, leftIdx, rightIdx)`,
-    * one row per surviving row pair. */
+    * pass frame `(leftIdx, rightIdx, score_1 … score_k)`, one row per row
+    * pair that meets this and every earlier mapping, one score column per
+    * mapping so far, each named by its mapping's output name.
+    *
+    * The fresh pass (`existing` empty) is materialized and counted: the
+    * next pass and the final join back both read it. A filter pass
+    * (`existing` set, cross_join_filter_existing_fuzzy_results,
+    * matcher.py:188-238) stays lazy: it joins this mapping's two value
+    * columns onto `existing` by id, scores each row pair inline with
+    * [[functions.fuzzy_dist_bounded]] (the lowercasing, bound and `1 − d`
+    * of [[scoreValuePairs]]) and keeps `existing`'s score columns. */
   def processFuzzyMapping(leftIdxDf: DataFrame, rightIdxDf: DataFrame,
                           fuzzyMap: FuzzyMapping, existing: Option[DataFrame],
                           opts: MatchOptions): DataFrame = {
     val leftCol = fuzzyMap.leftCol
     val rightCol = fuzzyMap.rightCol
-    val (matched, usedLsh) = existing match {
+    val score = fuzzyMap.resolvedOutputName
+    val rt = fuzzyMap.reversedThresholdScore
+    existing match {
       case Some(ex) =>
-        // Pass >= 2 (cross_join_filter_existing_fuzzy_results,
-        // matcher.py:188-238): attach values to the surviving pairs, score
-        // each DISTINCT value pair once, inner-join the scores back — the
-        // join both re-attaches scores and drops below-threshold pairs.
-        val pairs = ex.select(LeftIdx, RightIdx)
-          .join(leftIdxDf.select(col(LeftIdx), col(leftCol)), LeftIdx)
+        ex.join(leftIdxDf.select(col(LeftIdx), col(leftCol)), LeftIdx)
           .join(rightIdxDf.select(col(RightIdx), col(rightCol)), RightIdx)
-        val distinctPairs = pairs.select(col(leftCol), col(rightCol)).distinct()
-        val scored = scoreValuePairs(distinctPairs, leftCol, rightCol,
-          fuzzyMap.fuzzyType, fuzzyMap.reversedThresholdScore)
-        (pairs.join(scored, Seq(leftCol, rightCol))
-          .select(col("s"), col(LeftIdx), col(RightIdx)), false)
+          .withColumn("__d", functions.fuzzy_dist_bounded(lower(col(leftCol)),
+            lower(col(rightCol)), fuzzyMap.fuzzyType, rt))
+          .where(col("__d") <= rt)
+          .select(ex.columns.map(col) :+ (lit(1.0) - col("__d")).as(score): _*)
       case None =>
-        // Fresh pass: scored distinct value pairs (strategy pick + scoring),
-        // then expand to row pairs by joining each side back on its value.
-        val (scored, lsh) = freshScoredValuePairs(leftIdxDf, rightIdxDf,
-          fuzzyMap, opts)
-        (scored
+        // Scored distinct value pairs (strategy pick + scoring), expanded
+        // to row pairs by joining each side back on its value. Each
+        // (leftIdx, rightIdx) comes out at most once (reference: .unique(),
+        // matcher.py:501-504): candidates are distinct value pairs and ids
+        // are unique per row.
+        val (scored, usedLsh) = freshScoredValuePairs(leftIdxDf, rightIdxDf, fuzzyMap, opts)
+        val matched = scored
           .join(leftIdxDf.select(col(LeftIdx), col(leftCol)), Seq(leftCol))
           .join(rightIdxDf.select(col(RightIdx), col(rightCol)), Seq(rightCol))
-          .select(col("s"), col(LeftIdx), col(RightIdx)), lsh)
+          .select(col(LeftIdx), col(RightIdx), col("s").as(score))
+        // An LSH pass ranks through BoundedTopK (ObjectHashAggregate):
+        // scope the sort-based-fallback threshold around the pass
+        // materialization so the heap aggregate is not demoted to a
+        // per-partition sort at 128 groups.
+        val out = AnnJoin.withTopKHeapConf(leftIdxDf.sparkSession, usedLsh) {
+          graft.util.Materialize(matched, opts.checkpoint)
+        }
+        // counting the materialized barrier is a metadata-cheap job and
+        // gives the pass diagnostics the reference logs throughout
+        // matcher.py
+        log.info(s"[graft.pass] $leftCol -> $rightCol " +
+          s"(${fuzzyMap.fuzzyType.name}, threshold ${fuzzyMap.thresholdScore}, pass=fresh): " +
+          s"${out.count()} surviving row pairs")
+        out
     }
-    // No dropDuplicates needed (reference: .unique(), matcher.py:501-504):
-    // every shape above yields each (leftIdx, rightIdx) at most once —
-    // candidates are distinct value pairs and ids are unique per row.
-    // Checkpointed: consumed by the next pass, the combine AND the assembly.
-    // An LSH pass ranks through BoundedTopK (ObjectHashAggregate): scope
-    // the sort-based-fallback threshold around the pass materialization so
-    // the heap aggregate is not demoted to a per-partition sort at 128
-    // groups — engine-owned now, instead of a bench-harness conf
-    // (VERDICT r19 item 4).
-    val out = AnnJoin.withTopKHeapConf(leftIdxDf.sparkSession, usedLsh) {
-      graft.util.Materialize(
-        matched.withColumnRenamed("s", fuzzyMap.resolvedOutputName),
-        opts.checkpoint)
-    }
-    // counting the materialized barrier is a metadata-cheap job and gives
-    // the per-pass diagnostics the reference logs throughout matcher.py
-    log.info(s"[graft.pass] ${fuzzyMap.leftCol} -> ${fuzzyMap.rightCol} " +
-      s"(${fuzzyMap.fuzzyType.name}, threshold ${fuzzyMap.thresholdScore}, " +
-      s"pass=${if (existing.isDefined) "filter-existing" else "fresh"}): " +
-      s"${out.count()} surviving row pairs")
-    out
   }
 
   /** Fold over mappings; pass N's matches gate pass N+1
@@ -379,11 +385,9 @@ object FuzzyMatcher {
     out.result()
   }
 
-  /** Inner-join every per-mapping frame on the index pair — final pairs
-    * satisfy ALL thresholds, one score column each (combine_matches,
-    * matcher.py:388-392). */
-  def combineMatches(frames: Seq[DataFrame]): DataFrame = {
-    val base = frames.last.select(LeftIdx, RightIdx)
-    frames.foldLeft(base)((acc, f) => acc.join(f, Seq(LeftIdx, RightIdx)))
-  }
+  /** The pairs that satisfy ALL thresholds, one score column each
+    * (combine_matches, matcher.py:388-392). Every pass carries the scores
+    * of the passes before it, so this is the last pass frame: its ids and
+    * scores, with no join. */
+  def combineMatches(frames: Seq[DataFrame]): DataFrame = frames.last
 }

@@ -570,12 +570,91 @@ object Kernels {
 
   def jaroDist(a: String, b: String): Double = 1.0 - jaroSim(a, b)
 
+  /** [[jaroSim]] and [[jaroWinklerSim]] of one fixed ASCII value `a` of at
+    * most 64 chars against many `b`s, bit-parallel (the rapidfuzz-cpp
+    * short-string scheme, https://github.com/rapidfuzz/rapidfuzz-cpp):
+    * `a` is compiled once into a 128-entry table of position masks, so
+    * each `b` costs one pass over its chars instead of a window scan per
+    * char of `a`.
+    *
+    * Flagging walks `b`: the candidates of `b(j)` are
+    * `pattern(b(j)) & window(j) & ~flaggedA`, and the lowest one is taken.
+    * Greedy matching of the same char inside a symmetric window flags the
+    * same positions whichever side it walks, so matches and transpositions
+    * equal [[jaroSim]]'s, and the score is computed by the same expression
+    * (bit-identical, KernelsSpec). The matched chars of `b` are kept in
+    * order; transpositions walk the trailing zeros of `flaggedA` against
+    * them. A char of `b` outside ASCII matches nothing in `a`, so `b` may
+    * be any string. Not thread-safe: one instance per left value. */
+  private[fuzzy] final class JaroPattern(a: String) {
+    private val n = a.length
+    require(n <= 64, s"JaroPattern needs at most 64 chars, got $n")
+    private val pattern = new Array[Long](128)
+    private val matchedB = new Array[Char](64)
+    private val all = if (n == 64) -1L else (1L << n) - 1
+
+    {
+      var i = 0
+      while (i < n) {
+        val c = a.charAt(i)
+        require(c < 128, "JaroPattern needs an ASCII value")
+        pattern(c) |= 1L << i
+        i += 1
+      }
+    }
+
+    def sim(b: String): Double = {
+      val m = b.length
+      if (n == 0 && m == 0) return 1.0
+      if (n == 0 || m == 0) return 0.0
+      if (n == 1 && m == 1) return if (a.charAt(0) == b.charAt(0)) 1.0 else 0.0
+      val window = math.max(0, math.max(n, m) / 2 - 1)
+      // no position of `a` is in reach of b(j) once j - window >= n
+      val end = math.min(m, n + window)
+      var flagged = 0L
+      var matches = 0
+      var j = 0
+      while (j < end && flagged != all) {
+        val c = b.charAt(j)
+        if (c < 128) {
+          val lo = j - window
+          val hi = j + window
+          val win = (if (hi >= 63) -1L else (1L << (hi + 1)) - 1) &
+            (if (lo <= 0) -1L else -1L << lo)
+          val cand = pattern(c) & win & ~flagged
+          if (cand != 0L) {
+            flagged |= cand & -cand
+            matchedB(matches) = c
+            matches += 1
+          }
+        }
+        j += 1
+      }
+      if (matches == 0) return 0.0
+      var transpositions = 0
+      var f = flagged
+      var k = 0
+      while (f != 0L) {
+        if (a.charAt(java.lang.Long.numberOfTrailingZeros(f)) != matchedB(k)) transpositions += 1
+        k += 1
+        f &= f - 1
+      }
+      val mD = matches.toDouble
+      // the expression of jaroSim, so the two agree bit for bit
+      (mD / n + mD / m + (mD - transpositions / 2) / mD) / 3.0
+    }
+
+    def winklerSim(b: String): Double = winkler(a, b, sim(b))
+  }
+
   /** Jaro-Winkler with standard prefix weight 0.1, max prefix 4, and the
     * common 0.7 boost threshold (matches rapidfuzz / DuckDB conventions;
     * golden value 0.88 for "apple inc." vs "apple incorporated" verified
     * against tests/test_pl_fuzzy_frame_match.py:360). */
-  def jaroWinklerSim(a: String, b: String): Double = {
-    val j = jaroSim(a, b)
+  def jaroWinklerSim(a: String, b: String): Double = winkler(a, b, jaroSim(a, b))
+
+  /** The Winkler prefix boost of Jaro similarity `j`. */
+  private def winkler(a: String, b: String, j: Double): Double = {
     if (j <= 0.7) return j
     var prefix = 0
     val maxPrefix = math.min(4, math.min(a.length, b.length))

@@ -102,9 +102,12 @@ object SweepTable {
   *    (`bitCount(m1L^m1R) > 2k || bitCount(m2L^m2R) > 4k`, each side
   *    disabled on mask 0 — sound by KernelsSpec's mask bounds, which hold
   *    for levenshtein only), then [[Kernels.levBoundedAscii]];
-  *  - other algorithms run [[Kernels.inBand]], the in-band half of the
-  *    same kernel; non-ASCII values on either side run
-  *    [[Kernels.distBounded]] itself over the whole block.
+  *  - jaro and jaro-winkler compile a left value of at most 64 chars once
+  *    ([[Kernels.JaroPattern]]) and score each right value bit-parallel;
+  *  - other algorithms, and longer jaro left values, run
+  *    [[Kernels.inBand]], the in-band half of the same kernel; non-ASCII
+  *    values on either side run [[Kernels.distBounded]] itself over the
+  *    whole block.
   *
   * The algorithm is dispatched once per left value and length group,
   * never per pair. Evaluated per LEFT row: the scan over the table is a
@@ -177,6 +180,8 @@ case class FuzzySweep(child: Expression, algoId: Int, maxDist: Double,
     val kernel = if (lev) null else Kernels.inBand(algoId)
     val lStr = if (lev) null else lLow.toString
     val strs = if (lev) null else t.lowStrings
+    val jaro = if ((algoId == 1 || algoId == 2) && lLen <= 64) new Kernels.JaroPattern(lStr) else null
+    val winkler = algoId == 2
     var g = 0
     var done = false
     while (g < t.groupLens.length && !done) {
@@ -211,6 +216,12 @@ case class FuzzySweep(child: Expression, algoId: Int, maxDist: Double,
             if (nd <= maxDist)
               out += new GenericInternalRow(Array[Any](t.origs(j), 1.0 - nd))
           }
+          j += 1
+        }
+      } else if (jaro != null) {
+        while (j < e) {
+          val sim = if (winkler) jaro.winklerSim(strs(j)) else jaro.sim(strs(j))
+          emit(out, t, j, 1.0 - sim)
           j += 1
         }
       } else {

@@ -2014,13 +2014,15 @@ object Dedup {
                                threshold: Double,
                                maxCellPairs: Long = 4_000_000L,
                                checkpoint: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
-    val bState = semDedupState(batch, vecCol, idCol, centroidsMicro,
-      dim, nCells, checkpoint)
-    val gate = Blocking.cross(bState, corpusState, "dedup_semantic_inc", None, "cell",
+    // zero-norm rows never pair: the gate prices only the rows it keeps
+    val bRows = semDedupState(batch, vecCol, idCol, centroidsMicro,
+      dim, nCells, checkpoint).where(col("__n2") > 0)
+    val cRows = corpusState.where(col("__n2") > 0)
+    val gate = Blocking.cross(bRows, cRows, "dedup_semantic_inc", None, "cell",
       maxCellPairs, checkpoint)
-    gate.keep(bState).where(col("__n2") > 0)
+    gate.keep(bRows)
       .select(col("cell"), col(idCol).as("id_a"), col(vecCol).as("__va"))
-      .join(gate.keep(corpusState).where(col("__n2") > 0)
+      .join(gate.keep(cRows)
         .select(col("cell"), col(idCol).as("id_b"), col(vecCol).as("__vb")),
         Seq("cell"))
       .select(col("id_a"), col("id_b"),
@@ -2041,8 +2043,11 @@ object Dedup {
     *    the [[AnnSearch]] postings layout. No hash-bucket layer — the
     *    cell key is already bounded by `nCells`, fixed at save time
     *    together with the centroids that define it.
-    *  - `stats/` — per-cell row counts (≤ nCells rows, unpartitioned):
-    *    the cap gate prices a batch without touching any state row.
+    *  - `stats/` — per-cell counts of the rows that can pair (n2 > 0;
+    *    ≤ nCells rows, unpartitioned): the cap gate prices a batch without
+    *    touching any state row. A store saved before stats left zero-norm
+    *    rows out counts every row of a cell until it is re-saved, so its
+    *    gate may drop a cell that zero vectors crowd.
     *  - `meta/` — dim, nCells AND the pinned micro-grid centroids, so
     *    query-time assignment can never drift from the saved layout.
     *
@@ -2073,6 +2078,7 @@ object Dedup {
       // the assignment projection over the corpus a second time)
       spark.read.schema(storedSchema(spark, s"$genPath/schema_state"))
         .parquet(s"$genPath/state")
+        .where(col("n2") > 0)
         .groupBy(col("cell")).agg(count(lit(1)).as("__cc"))
         .coalesce(1).write.mode("overwrite").parquet(s"$genPath/stats")
       import spark.implicits._
@@ -2127,9 +2133,10 @@ object Dedup {
     val cStats = stored.stats.where(col("cell").isin(touched: _*))
     // cap gate priced from batch counts x STORED per-cell counts — no
     // state-row scan needed to decide; only both-side cells survive
-    val gatedB = Blocking.cross(bState, cState, "dedup_semantic_stored", None, "cell",
-      maxCellPairs, checkpoint, rightCounts = Some(cStats)).keep(bState)
-    gatedB.where(col("__n2") > 0)
+    val bRows = bState.where(col("__n2") > 0)
+    val gatedB = Blocking.cross(bRows, cState, "dedup_semantic_stored", None, "cell",
+      maxCellPairs, checkpoint, rightCounts = Some(cStats)).keep(bRows)
+    gatedB
       .select(col("cell"), col(idCol).as("id_a"), col(vecCol).as("__va"))
       .join(cState.where(col("n2") > 0)
         .select(col("cell"), col("id").as("id_b"), col("vec").as("__vb")),
@@ -2194,8 +2201,10 @@ object Dedup {
 
     // skew guard on the quadratic stage, same contract as the LSH/simhash
     // generators: degenerate cells drop (counted, logged), never explode
-    val gated = Blocking.self(base, "dedup_semantic", None, "cell", maxCellPairs, checkpoint)
-      .keep(base.where(col("__n2") > 0))
+    // zero-norm rows never pair: the gate prices only the rows it keeps
+    val pairable = base.where(col("__n2") > 0)
+    val gated = Blocking.self(pairable, "dedup_semantic", None, "cell", maxCellPairs, checkpoint)
+      .keep(pairable)
 
     val a = gated.select(col("cell"), col(idCol).as("__ia"),
       col(vecCol).as("__va"), col("ccosq").as("__ca"))

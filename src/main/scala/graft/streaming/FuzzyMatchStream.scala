@@ -48,7 +48,7 @@ object FuzzyMatchStream {
         // Per-batch MatchScope: foreachBatch runs on the stream-execution
         // thread, so a scope opened by the CALLER (thread-local) never sees
         // these barriers — without this, every micro-batch's barriers (left
-        // row ids, value frames, the combine join) would live for the app
+        // row ids, value frames, the fresh pass frame) would live for the app
         // lifetime and an unbounded stream would accumulate executor blocks
         // without bound. The scope releases them when the sink returns; the
         // sink must CONSUME its frame (write/collect) before returning —

@@ -10,8 +10,9 @@ import org.apache.spark.storage.StorageLevel
 /** Materialization-barrier strategy for multi-pass plans.
   *
   * The engine cuts lineage wherever an intermediate is consumed more than
-  * once (pass N+1, the combine join, the final assembly — see
-  * [[graft.fuzzy.FuzzyMatcher]]). The reference hands the caller a temp
+  * once (the row-indexed sides, the distinct-value frames, and the fresh
+  * pass frame that the filter passes and the final join back both read —
+  * see [[graft.fuzzy.FuzzyMatcher]]). The reference hands the caller a temp
   * directory for the same purpose (matcher.py:580-658 + the
   * `fuzzy_match_temp_dir` context manager, matcher.py:725-750); on Spark the
   * right abstraction is a checkpoint strategy:

@@ -313,4 +313,60 @@ class KernelsSpec extends AnyFunSuite {
       assert(lev <= indel, s"levenshtein > indel on ($a,$b)")
     }
   }
+
+  /** Both bit-parallel scores of `p` (compiled from `a`) against `b` equal
+    * the reference loop's, bit for bit. */
+  private def assertJaroPattern(a: String, p: Kernels.JaroPattern, b: String): Unit = {
+    val (got, want) = (p.sim(b), Kernels.jaroSim(a, b))
+    assert(java.lang.Double.compare(got, want) == 0, s"jaro '$a' vs '$b': $got != $want")
+    val (gotW, wantW) = (p.winklerSim(b), Kernels.jaroWinklerSim(a, b))
+    assert(java.lang.Double.compare(gotW, wantW) == 0,
+      s"jaro-winkler '$a' vs '$b': $gotW != $wantW")
+  }
+
+  test("bit-parallel jaro == jaroSim on 1M small-alphabet pairs (bit for bit)") {
+    // 0-19 chars over 1-4 letters: dense repeats put many equal chars in
+    // every window, where flag order and transpositions are most fragile
+    val rnd = new scala.util.Random(7)
+    def word(alphabet: Int): String =
+      (0 until rnd.nextInt(20)).map(_ => ('a' + rnd.nextInt(alphabet)).toChar).mkString
+    var pairs = 0
+    (0 until 50000).foreach { _ =>
+      val alphabet = 1 + rnd.nextInt(4)
+      val a = word(alphabet)
+      val p = new Kernels.JaroPattern(a)
+      (0 until 20).foreach { _ => assertJaroPattern(a, p, word(alphabet)); pairs += 1 }
+    }
+    assert(pairs >= 1000000)
+  }
+
+  test("bit-parallel jaro at the 64-char word edge, on empty, length-1 and non-ASCII values") {
+    val rnd = new scala.util.Random(11)
+    def word(len: Int, alphabet: Int): String =
+      (0 until len).map(_ => ('a' + rnd.nextInt(alphabet)).toChar).mkString
+    for (n <- Seq(63, 64); alphabet <- Seq(1, 2, 4, 26); _ <- 0 until 20) {
+      val a = word(n, alphabet)
+      val p = new Kernels.JaroPattern(a)
+      // right values shorter than, at and past one word, up to twice as long
+      for (m <- Seq(0, 1, 2, 31, 32, 33, 62, 63, 64, 65, 66, 100, 128, 129))
+        assertJaroPattern(a, p, word(m, alphabet))
+      // a near copy: one substitution and one adjacent swap
+      val c = a.toCharArray
+      c(rnd.nextInt(n)) = 'z'
+      val i = rnd.nextInt(n - 1)
+      val t = c(i); c(i) = c(i + 1); c(i + 1) = t
+      assertJaroPattern(a, p, new String(c))
+      assertJaroPattern(a, p, a)
+    }
+    // a 65-char value does not fit one word: the sweep keeps jaroSim for it
+    intercept[IllegalArgumentException](new Kernels.JaroPattern("a" * 65))
+    // a non-ASCII left value is rejected the same way; a non-ASCII right
+    // value matches only on its ASCII chars
+    intercept[IllegalArgumentException](new Kernels.JaroPattern("café"))
+    val small = Seq("", "a", "b", "ab", "ba", "aa", "abc")
+    val nonAscii = Seq("é", "café", "caf\u00e9s", "日本語", "naïve", "\ud83d\ude00a", "a\u00e9b")
+    for (a <- small; b <- small ++ nonAscii) assertJaroPattern(a, new Kernels.JaroPattern(a), b)
+    for (a <- Seq("cafe", "naive", "cafes", "aeb"); b <- nonAscii ++ small)
+      assertJaroPattern(a, new Kernels.JaroPattern(a), b)
+  }
 }

@@ -2,13 +2,15 @@ package graft.fuzzy
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan pins for the exact path's one scorer: every fresh exact pass, of
   * every algorithm, blocked or not, runs the [[FuzzySweep]] generator over
   * the value frame, with no nested-loop or cartesian join on the pair
   * stream. Its pairs and scores are pinned against an in-memory brute force
-  * by FuzzyMatcherPropertySpec's differential matrix.
+  * here at thresholds 0, 70 and 100 (scores bit-identical, every algorithm)
+  * and by FuzzyMatcherPropertySpec's differential matrix.
   */
 class SweepSpec extends AnyFunSuite with SparkSpec {
 
@@ -42,6 +44,33 @@ class SweepSpec extends AnyFunSuite with SparkSpec {
       assert(plan.contains("fuzzy_sweep"), s"${algo.name}, block $limit: no sweep:\n$plan")
       assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
         s"${algo.name}, block $limit: nested-loop join on the pair stream:\n$plan")
+    }
+  }
+
+  test("sweep equals a brute-force Kernels.dist at thresholds 0, 70 and 100") {
+    import spark.implicits._
+    // jaro and jaro-winkler score a left value of at most 64 chars
+    // bit-parallel and longer or non-ASCII ones through the kernel: the
+    // corpus spans both sides of that edge, on both sides of the join
+    val rnd = new scala.util.Random(3)
+    def word(len: Int): String = (0 until len).map(_ => ('a' + rnd.nextInt(3)).toChar).mkString
+    val long = Seq(63, 64, 65, 66).flatMap(n => Seq.fill(3)(word(n)))
+    val short = Seq.fill(40)(word(rnd.nextInt(12)))
+    val values = (SweepSpec.leftRows.map(_._2) ++ long ++ short ++
+      long.map(v => v.updated(10, 'é')) ++ Seq("A", "é", "aé")).distinct
+    val lefts = values.filter(_ => rnd.nextInt(3) > 0)
+    val rights = values.filter(_ => rnd.nextInt(3) > 0) ++ long.map(_.reverse)
+    def low(v: String) = UTF8String.fromString(v).toLowerCase
+    for (algo <- FuzzyAlgorithm.all; threshold <- Seq(0, 70, 100)) {
+      val maxDist = FuzzyMapping("a", "b", threshold.toDouble, algo).reversedThresholdScore
+      val want = (for (l <- lefts; r <- rights.distinct;
+                       d = Kernels.dist(algo.id, low(l), low(r)) if d <= maxDist)
+        yield (l, r, 1.0 - d)).toSet
+      val got = SweepScore.sweepScoredPairs(lefts.toDF("a"), rights.distinct.toDF("b"),
+          "a", "b", maxDist, algo, broadcastDistinctLimit = 17L)
+        .as[(String, String, Double)].collect().toSet
+      assert(got == want, s"${algo.name} at $threshold: ${got.size} pairs, want ${want.size}; " +
+        s"missing ${(want -- got).take(3)}, extra ${(got -- want).take(3)}")
     }
   }
 

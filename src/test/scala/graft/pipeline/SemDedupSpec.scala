@@ -75,6 +75,52 @@ class SemDedupSpec extends AnyFunSuite with SparkSpec {
     assert(Seq(out(1L)._1, out(2L)._1).count(identity) === 1)
   }
 
+  test("zero vectors do not count toward a cell's price") {
+    import spark.implicits._
+    // two unit centroids on a 2-d grid: the near-duplicate pair lands in
+    // cell 1, and so do the zero vectors (every dot is 0, the tie goes to
+    // the smaller cell). Two pairable rows price 2·2 = 4, within the cap;
+    // counting the zero vectors too would price 5·5 = 25 and drop the cell
+    val cents2 = Dedup.quantizeCentroidsMicro(Array(Array(1.0, 0.0), Array(0.0, 1.0)))
+    val df = Seq((1L, Seq(1f, 0f)), (2L, Seq(1f, 0.01f)),
+        (3L, Seq(0f, 0f)), (4L, Seq(0f, 0f)), (5L, Seq(0f, 0f)))
+      .toDF("vec_id", "embedding")
+    val out = Dedup.semDedup(df, "embedding", "vec_id", cents2, dim = 2, nCells = 2,
+        threshold = 0.9, maxCellPairs = 4L)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(3))).toMap
+    assert(out.values.map(_._1).toSet === Set(1L))
+    // the pair was compared: exactly one of the near-duplicates drops
+    assert(Seq(out(1L)._2, out(2L)._2).count(identity) === 1)
+    assert(Seq(3L, 4L, 5L).forall(out(_)._2))
+    val stats = graft.util.CapMetrics.lastMetrics("dedup_semantic").get
+    assert(stats.droppedBuckets === 0L && stats.totalBuckets === 1L, s"$stats")
+  }
+
+  test("incremental and stored: zero vectors do not count toward a cell's price") {
+    import spark.implicits._
+    // one pairable row a side in cell 1 prices 1·1, within a cap of 1;
+    // the zero vectors on both sides would price 3·3
+    val cents2 = Dedup.quantizeCentroidsMicro(Array(Array(1.0, 0.0), Array(0.0, 1.0)))
+    val zeros = Seq.fill(2)(Seq(0f, 0f))
+    val batch = ((1L, Seq(1f, 0f)) +: zeros.zipWithIndex.map { case (z, i) => (10L + i, z) })
+      .toDF("vec_id", "embedding")
+    val corpus = ((101L, Seq(1f, 0.01f)) +: zeros.zipWithIndex.map { case (z, i) => (110L + i, z) })
+      .toDF("vec_id", "embedding")
+    val inMemory = Dedup.semDedupIncrementalPairs(batch,
+        Dedup.semDedupState(corpus, "embedding", "vec_id", cents2, 2, 2),
+        "embedding", "vec_id", cents2, 2, 2, threshold = 0.9, maxCellPairs = 1L)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(inMemory === Set((1L, 101L)))
+    assert(graft.util.CapMetrics.lastMetrics("dedup_semantic_inc").get.droppedBuckets === 0L)
+    val store = java.nio.file.Files.createTempDirectory("sem_zero").toString
+    Dedup.saveSemDedupState(corpus, "embedding", "vec_id", store, cents2, 2, 2)
+    val stored = Dedup.semDedupPairsAgainstStored(batch, "embedding", "vec_id",
+        Dedup.loadSemDedupState(spark, store), threshold = 0.9, maxCellPairs = 1L)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(stored === Set((1L, 101L)))
+    assert(graft.util.CapMetrics.lastMetrics("dedup_semantic_stored").get.droppedBuckets === 0L)
+  }
+
   test("incremental: cross-side pairs only, complete against a first-principles recompute") {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val isBatch = col("vec_id") % 10 === 0

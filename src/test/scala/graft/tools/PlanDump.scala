@@ -13,9 +13,10 @@ import graft.fuzzy.{FuzzyAlgorithm, FuzzyMatcher, MatchOptions}
   * for the scoring-join core they share, and for the prepared-right front
   * door (`fuzzy_prepared_right`).
   *
-  * The fuzzy bench rows MATERIALIZE their per-pass match frames while the
-  * query is being BUILT (checkpoint barriers), so the tail explain of a
-  * full `matchDfs` shows only the assembly joins over checkpoint scans.
+  * The fuzzy bench rows MATERIALIZE their fresh-pass match frame while the
+  * query is being BUILT (a checkpoint barrier), so the tail explain of a
+  * full `matchDfs` shows the filter passes and the assembly joins over
+  * checkpoint scans (`fuzzy_multi`: three mappings, two filter passes).
   * The plan that actually carries the runtime — candidate generation +
   * scoring — is therefore captured separately via the same public entry
   * point the matcher uses for a fresh pass (`freshScoredValuePairs`).
@@ -164,13 +165,23 @@ object PlanDump {
 
     // ---- the prepared-right front door (stream-static shape): the
     // two-mapping customer self-join of `fuzzy_multi_225m` (renames, order
-    // step, filter-existing pass, combine) through prepareRight ----
+    // step, filter-existing pass) through prepareRight ----
     dump("fuzzy_prepared_right", FuzzyMatcher.matchDfsWithPreparedRight(c,
       FuzzyMatcher.prepareRight(c.columns.toSeq, c, Seq(
           graft.fuzzy.FuzzyMapping("c_name", "c_name", 90.0, FuzzyAlgorithm.Levenshtein),
           graft.fuzzy.FuzzyMapping("c_mktsegment", "c_mktsegment", 80.0,
             FuzzyAlgorithm.JaroWinkler)),
         MatchOptions(useApproxNearestNeighbor = Some(false)))))
+
+    // ---- the multi-pass fold: a fresh name pass, then two filter passes
+    // that score the surviving row pairs inline (segment, address) ----
+    dump("fuzzy_multi", FuzzyMatcher.matchDfs(c, c, Seq(
+        graft.fuzzy.FuzzyMapping("c_name", "c_name", 90.0, FuzzyAlgorithm.Levenshtein),
+        graft.fuzzy.FuzzyMapping("c_mktsegment", "c_mktsegment", 80.0,
+          FuzzyAlgorithm.JaroWinkler),
+        graft.fuzzy.FuzzyMapping("c_address", "c_address", 50.0,
+          FuzzyAlgorithm.DamerauLevenshtein)),
+      MatchOptions(useApproxNearestNeighbor = Some(false))))
 
     // ---- full bench queries (tail assembly plans; barriers make these
     // short, captured for completeness) ----
