@@ -45,10 +45,10 @@ import org.apache.spark.sql.functions._
   *    the surviving row pairs by id, scores each row pair inline with the
   *    same bounded kernel, and keeps the earlier passes' score columns, so
   *    the last pass frame already holds every score and no combine join
-  *    runs. The reference scores each distinct value pair once here too;
-  *    a filter pass sees only pairs that survived pass 1, where one bounded
-  *    kernel call per row costs less than the shuffle and join-back that
-  *    deduplication needs;
+  *    runs. Unlike the reference, a filter pass does not score each
+  *    distinct value pair once: it sees only row pairs that survived
+  *    pass 1, where one bounded kernel call per row costs less than the
+  *    shuffle and join-back that deduplication needs;
   *
   *  - one driver behind both front doors: [[matchDfs]] (also behind the
   *    `fuzzy_match` TVF) and the prepared-right path ([[prepareRight]] +

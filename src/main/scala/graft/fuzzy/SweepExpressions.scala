@@ -180,7 +180,8 @@ case class FuzzySweep(child: Expression, algoId: Int, maxDist: Double,
     val kernel = if (lev) null else Kernels.inBand(algoId)
     val lStr = if (lev) null else lLow.toString
     val strs = if (lev) null else t.lowStrings
-    val jaro = if ((algoId == 1 || algoId == 2) && lLen <= 64) new Kernels.JaroPattern(lStr) else null
+    val jaro =
+      if ((algoId == 1 || algoId == 2) && lLen <= 64) new Kernels.JaroPattern(lStr) else null
     val winkler = algoId == 2
     var g = 0
     var done = false

@@ -174,12 +174,12 @@ object PlanDump {
         MatchOptions(useApproxNearestNeighbor = Some(false)))))
 
     // ---- the multi-pass fold: a fresh name pass, then two filter passes
-    // that score the surviving row pairs inline (segment, address) ----
+    // that score the surviving row pairs inline (name again, segment) ----
     dump("fuzzy_multi", FuzzyMatcher.matchDfs(c, c, Seq(
         graft.fuzzy.FuzzyMapping("c_name", "c_name", 90.0, FuzzyAlgorithm.Levenshtein),
         graft.fuzzy.FuzzyMapping("c_mktsegment", "c_mktsegment", 80.0,
           FuzzyAlgorithm.JaroWinkler),
-        graft.fuzzy.FuzzyMapping("c_address", "c_address", 50.0,
+        graft.fuzzy.FuzzyMapping("c_name", "c_name", 95.0,
           FuzzyAlgorithm.DamerauLevenshtein)),
       MatchOptions(useApproxNearestNeighbor = Some(false))))
 
