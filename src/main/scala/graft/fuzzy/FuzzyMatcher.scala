@@ -214,10 +214,10 @@ object FuzzyMatcher {
   /** Score candidate value pairs: lowercase both sides, keep pairs whose
     * normalized distance is within the (truncated) reversed threshold, flip
     * distance to similarity (calculate_fuzzy_score, process.py:8-56).
-    * Input and output are value-level: (leftVal, rightVal) -> + score `s`.
-    * Scores LSH candidates; fresh exact passes run the [[SweepScore]]
-    * sweep instead, and filter passes score row pairs inline with the same
-    * kernel expression ([[processFuzzyMapping]]).
+    * Appends score `s` to each (leftVal, rightVal) row of `candidates`.
+    * Scores LSH candidates (distinct value pairs) and filter passes (row
+    * pairs, [[processFuzzyMapping]]); fresh exact passes run the
+    * [[SweepScore]] sweep instead.
     *
     * Performance shape: lowercased columns a candidate frame already
     * carries (LSH attaches them once per distinct value) are reused, and
@@ -326,8 +326,7 @@ object FuzzyMatcher {
     * (`existing` set, cross_join_filter_existing_fuzzy_results,
     * matcher.py:188-238) stays lazy: it joins this mapping's two value
     * columns onto `existing` by id, scores each row pair inline with
-    * [[functions.fuzzy_dist_bounded]] (the lowercasing, bound and `1 − d`
-    * of [[scoreValuePairs]]) and keeps `existing`'s score columns. */
+    * [[scoreValuePairs]] and keeps `existing`'s score columns. */
   def processFuzzyMapping(leftIdxDf: DataFrame, rightIdxDf: DataFrame,
                           fuzzyMap: FuzzyMapping, existing: Option[DataFrame],
                           opts: MatchOptions): DataFrame = {
@@ -337,12 +336,10 @@ object FuzzyMatcher {
     val rt = fuzzyMap.reversedThresholdScore
     existing match {
       case Some(ex) =>
-        ex.join(leftIdxDf.select(col(LeftIdx), col(leftCol)), LeftIdx)
+        val pairs = ex.join(leftIdxDf.select(col(LeftIdx), col(leftCol)), LeftIdx)
           .join(rightIdxDf.select(col(RightIdx), col(rightCol)), RightIdx)
-          .withColumn("__d", functions.fuzzy_dist_bounded(lower(col(leftCol)),
-            lower(col(rightCol)), fuzzyMap.fuzzyType, rt))
-          .where(col("__d") <= rt)
-          .select(ex.columns.map(col) :+ (lit(1.0) - col("__d")).as(score): _*)
+        scoreValuePairs(pairs, leftCol, rightCol, fuzzyMap.fuzzyType, rt)
+          .select(ex.columns.map(col) :+ col("s").as(score): _*)
       case None =>
         // Scored distinct value pairs (strategy pick + scoring), expanded
         // to row pairs by joining each side back on its value. Each
