@@ -607,7 +607,6 @@ object Kernels {
       val m = b.length
       if (n == 0 && m == 0) return 1.0
       if (n == 0 || m == 0) return 0.0
-      if (n == 1 && m == 1) return if (a.charAt(0) == b.charAt(0)) 1.0 else 0.0
       val window = math.max(0, math.max(n, m) / 2 - 1)
       // no position of `a` is in reach of b(j) once j - window >= n
       val end = math.min(m, n + window)
@@ -635,7 +634,8 @@ object Kernels {
       var f = flagged
       var k = 0
       while (f != 0L) {
-        if (a.charAt(java.lang.Long.numberOfTrailingZeros(f)) != matchedB(k)) transpositions += 1
+        if (a.charAt(java.lang.Long.numberOfTrailingZeros(f)) != matchedB(k))
+          transpositions += 1
         k += 1
         f &= f - 1
       }
