@@ -684,6 +684,22 @@ object VectorKernels {
     m
   }
 
+  /** [[charMask]] over the UTF-16 code units of any string: bit `c & 63`
+    * set for every code unit `c` present, 0 only for the empty string. The
+    * String kernels ([[Kernels.levenshteinBounded]]) edit code units, so
+    * the same argument gives `bitCount(maskA ^ maskB) <= 2 * levenshtein(a,
+    * b)` for every pair; on an ASCII string it equals [[charMask]]
+    * (KernelsSpec pins both). */
+  def utf16CharMask(s: String): Long = {
+    var m = 0L
+    var i = 0
+    while (i < s.length) {
+      m |= 1L << (s.charAt(i) & 63)
+      i += 1
+    }
+    m
+  }
+
   /** 64-bit BIGRAM-set mask of an ASCII string: bit
     * `(b(i)*31 + b(i+1)) & 63` set for every adjacent byte pair; 0 for
     * non-ASCII strings and strings shorter than 2 (gate disabled). One

@@ -256,6 +256,49 @@ class KernelsSpec extends AnyFunSuite {
     assert(VectorKernels.charMask(UTF8String.fromString("")) == 0L)
   }
 
+  test("utf16CharMask bound: bitCount(maskA ^ maskB) <= 2 * levenshtein, non-ASCII and surrogates") {
+    val rnd = new scala.util.Random(31)
+    // ASCII, accented Latin, CJK, surrogate-pair emoji and arbitrary code
+    // units (lone surrogates included), so masks collide mod 64 across scripts
+    val pool = Vector("a", "b", "z", "0", " ", "é", "É", "ü", "ñ", "日", "本", "語",
+      "😀", "🎉")
+    def unit(): String =
+      if (rnd.nextInt(4) == 0) rnd.nextInt(0x10000).toChar.toString
+      else pool(rnd.nextInt(pool.length))
+    def w(): String = Seq.fill(rnd.nextInt(20))(unit()).mkString
+    def edit(s: String): String = {
+      val p = if (s.isEmpty) 0 else rnd.nextInt(s.length)
+      rnd.nextInt(3) match {
+        case 0 => s.substring(0, p) + unit() + s.substring(p)
+        case 1 if s.nonEmpty => s.substring(0, p) + s.substring(p + 1)
+        case _ => s.substring(0, p) + unit() + s.substring(math.min(s.length, p + 1))
+      }
+    }
+    def check(a: String, b: String): Unit = {
+      val x = java.lang.Long.bitCount(VectorKernels.utf16CharMask(a) ^ VectorKernels.utf16CharMask(b))
+      val lev = Kernels.levenshtein(a, b)
+      assert(x <= 2 * lev, s"mask bound violated on '$a' vs '$b': $x > 2*$lev")
+    }
+    (0 until 4000).foreach { _ =>
+      check(w(), w())
+      val a = w()
+      check(a, edit(a))
+      check(a, edit(edit(a)))
+    }
+    assert(VectorKernels.utf16CharMask("") == 0L)
+    assert(VectorKernels.utf16CharMask("é") != 0L)
+  }
+
+  test("utf16CharMask equals charMask on ASCII strings") {
+    import org.apache.spark.unsafe.types.UTF8String
+    val rnd = new scala.util.Random(37)
+    (0 until 4000).foreach { _ =>
+      val a = Seq.fill(rnd.nextInt(40))(rnd.nextInt(128).toChar).mkString
+      assert(VectorKernels.utf16CharMask(a) == VectorKernels.charMask(UTF8String.fromString(a)),
+        s"masks differ on '$a'")
+    }
+  }
+
   test("bigramMask bound: bitCount(maskA ^ maskB) <= 4 * levenshtein (property)") {
     import org.apache.spark.unsafe.types.UTF8String
     val rnd = new scala.util.Random(29)

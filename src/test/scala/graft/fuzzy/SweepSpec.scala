@@ -74,6 +74,47 @@ class SweepSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("non-ASCII-heavy sweep equals a brute-force Kernels.dist, blocked or not") {
+    import spark.implicits._
+    // accented Latin (both cases), CJK and a surrogate-pair emoji, so UTF-16
+    // length, code points and UTF-8 bytes all differ; near copies made by
+    // one or two edits from the whole alphabet put ASCII x non-ASCII and
+    // non-ASCII x non-ASCII pairs inside every threshold, and equal-length
+    // ASCII/non-ASCII twins share a length group's UTF-16 length
+    val rnd = new scala.util.Random(11)
+    val alphabet = Vector("a", "b", "c", " ", "é", "É", "ü", "ñ", "日", "本", "語", "😀")
+    def sym(ascii: Boolean): String = alphabet(rnd.nextInt(if (ascii) 4 else alphabet.length))
+    def word(ascii: Boolean): Vector[String] = Vector.fill(rnd.nextInt(13))(sym(ascii))
+    def edit(w: Vector[String]): Vector[String] = {
+      val p = if (w.isEmpty) 0 else rnd.nextInt(w.length)
+      rnd.nextInt(3) match {
+        case 0 => w.patch(p, Seq(sym(false)), 0)
+        case 1 if w.nonEmpty => w.patch(p, Nil, 1)
+        case _ => w.patch(p, Seq(sym(false)), 1)
+      }
+    }
+    val words = Seq.fill(70)(word(rnd.nextBoolean()))
+    val values = (words.flatMap(w => Seq(w, edit(w), edit(edit(w)))).map(_.mkString) ++
+      Seq("", "cafe", "café", "CAFÉ", "naive", "naïve", "日本", "ab", "😀", "😀a", "a😀b", "abcd"))
+      .distinct
+    val lefts = values.filter(_ => rnd.nextInt(3) > 0)
+    val rights = values.filter(_ => rnd.nextInt(3) > 0)
+    def low(v: String) = UTF8String.fromString(v).toLowerCase
+    for (algo <- FuzzyAlgorithm.all; threshold <- Seq(0, 70, 100)) {
+      val maxDist = FuzzyMapping("a", "b", threshold.toDouble, algo).reversedThresholdScore
+      val want = (for (l <- lefts; r <- rights;
+                       d = Kernels.dist(algo.id, low(l), low(r)) if d <= maxDist)
+        yield (l, r, 1.0 - d)).toSet
+      for (block <- Seq(17L, MatchOptions.default.broadcastDistinctLimit)) {
+        val got = SweepScore.sweepScoredPairs(lefts.toDF("a"), rights.toDF("b"),
+            "a", "b", maxDist, algo, broadcastDistinctLimit = block)
+          .as[(String, String, Double)].collect().toSet
+        assert(got == want, s"${algo.name} at $threshold, block $block: ${got.size} pairs, " +
+          s"want ${want.size}; missing ${(want -- got).take(3)}, extra ${(got -- want).take(3)}")
+      }
+    }
+  }
+
   test("a non-positive block size fails naming the option") {
     val e = intercept[IllegalArgumentException](freshPlan(FuzzyAlgorithm.Jaro,
       MatchOptions(useApproxNearestNeighbor = Some(false), broadcastDistinctLimit = 0L)))
