@@ -222,7 +222,8 @@ object FuzzyMatcher {
     * Performance shape: lowercased columns a candidate frame already
     * carries (LSH attaches them once per distinct value) are reused, and
     * the kernel is the thresholded [[BoundedFuzzyDistance]] — length-bound
-    * pruning plus a banded DP, exact for every surviving pair. */
+    * pruning plus a banded DP, exact for every surviving pair — called
+    * once per pair. */
   def scoreValuePairs(candidates: DataFrame, leftCol: String, rightCol: String,
                       algo: FuzzyAlgorithm, reversedThreshold: Double): DataFrame = {
     val ll = lowerName(leftCol)
@@ -230,7 +231,12 @@ object FuzzyMatcher {
     candidates
       .withColumn(ll, if (candidates.columns.contains(ll)) col(ll) else lower(col(leftCol)))
       .withColumn(rl, if (candidates.columns.contains(rl)) col(rl) else lower(col(rightCol)))
-      .withColumn("s", functions.fuzzy_dist_bounded(col(ll), col(rl), algo, reversedThreshold))
+      // a generator's output is never inlined back into the plan, so the
+      // filter and the score below both read the one kernel call; a plain
+      // column would be pushed into the join below as its condition and
+      // computed again for the score
+      .withColumn("s", explode(array(
+        functions.fuzzy_dist_bounded(col(ll), col(rl), algo, reversedThreshold))))
       .where(col("s") <= reversedThreshold)
       .withColumn("s", lit(1.0) - col("s"))
       .drop(ll, rl)
@@ -257,7 +263,7 @@ object FuzzyMatcher {
     // serial fixed-cost floor of the four driver actions.
     def valsOf(df: DataFrame, c: String): (DataFrame, Long) = {
       val v = graft.util.Materialize(distinctValues(df, c), opts.checkpoint)
-      (v, v.count())
+      (v, graft.util.Materialize.count(v))
     }
     val ((lv0, lc0), (rv0, rc0)) = graft.util.Par.run2(
       valsOf(leftIdxDf, fuzzyMap.leftCol), valsOf(rightIdxDf, fuzzyMap.rightCol))
@@ -358,12 +364,12 @@ object FuzzyMatcher {
         val out = AnnJoin.withTopKHeapConf(leftIdxDf.sparkSession, usedLsh) {
           graft.util.Materialize(matched, opts.checkpoint)
         }
-        // counting the materialized barrier is a metadata-cheap job and
+        // counting the materialized barrier is one single-stage job and
         // gives the pass diagnostics the reference logs throughout
         // matcher.py
         log.info(s"[graft.pass] $leftCol -> $rightCol " +
           s"(${fuzzyMap.fuzzyType.name}, threshold ${fuzzyMap.thresholdScore}, pass=fresh): " +
-          s"${out.count()} surviving row pairs")
+          s"${graft.util.Materialize.count(out)} surviving row pairs")
         out
     }
   }

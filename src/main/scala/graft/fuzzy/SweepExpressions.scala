@@ -27,16 +27,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * test per length group instead of a per-pair test. The benchmark's
   * `sweep.s` and `kernel.*.ns_per_pair` (perfbench) measure both halves.
   *
-  * Layout: values `[0, asciiCount)` are pure-ASCII lowercase, sorted by
-  * byte length ascending, in groups of equal length — group `g` is
-  * `[groupStarts(g), groupStarts(g + 1))`, every value of byte length
-  * `groupLens(g)`; `[asciiCount, n)` are the non-ASCII tail (their masks
-  * stay 0, which disables the gate). `lows` hold the Spark-side `lower()`
-  * of each value, `origs` the original value emitted on a match.
+  * Layout: two regions of length groups, each sorted by UTF-16 length
+  * ascending — the length every String kernel and [[Kernels.distBounded]]
+  * measure, and an ASCII value's byte length. Group `g` is
+  * `[groupStarts(g), groupStarts(g + 1))`, every value of length
+  * `groupLens(g)`. Groups `[0, asciiGroups)` hold the pure-ASCII lowercase
+  * values, with their [[VectorKernels.charMask]] in `masks1` and
+  * [[VectorKernels.bigramMask]] in `masks2`; the remaining groups hold the
+  * non-ASCII tail, with [[VectorKernels.utf16CharMask]] in `masks1` and 0
+  * (bigram gate off) in `masks2`. `lows` hold the Spark-side `lower()` of
+  * each value, `origs` the original value emitted on a match.
   */
 final class SweepTable(
     val n: Int,
-    val asciiCount: Int,
+    val asciiGroups: Int,
     val groupStarts: Array[Int],
     val groupLens: Array[Int],
     val masks1: Array[Long],
@@ -61,30 +65,31 @@ object SweepTable {
     val lowU = lows.map(UTF8String.fromString)
     val origU = origs.map(UTF8String.fromString)
     val ascii = lowU.map(_.isFullAscii)
-    // ASCII region first, sorted by lowered byte length; non-ASCII tail last
+    // ASCII region first, then the non-ASCII tail, each by UTF-16 length
     val order = Array.range(0, n).sortBy(i =>
-      (if (ascii(i)) 0L else 1L) * Int.MaxValue.toLong + lowU(i).numBytes)
+      (if (ascii(i)) 0L else 1L) * Int.MaxValue.toLong + lows(i).length)
     val m1 = new Array[Long](n)
     val m2 = new Array[Long](n)
     val starts = ArrayBuffer[Int]()
     val lens = ArrayBuffer[Int]()
-    var asciiCount = 0
+    var asciiGroups = 0
     var i = 0
     while (i < n) {
-      val v = lowU(order(i))
-      if (ascii(order(i))) {
-        if (lens.isEmpty || lens.last != v.numBytes) {
-          starts += i
-          lens += v.numBytes
-        }
-        asciiCount += 1
-        m1(i) = VectorKernels.charMask(v)
-        m2(i) = VectorKernels.bigramMask(v)
+      val k = order(i)
+      val len = lows(k).length
+      if (i == 0 || ascii(order(i - 1)) != ascii(k) || lens.last != len) {
+        starts += i
+        lens += len
+        if (ascii(k)) asciiGroups += 1
       }
+      if (ascii(k)) {
+        m1(i) = VectorKernels.charMask(lowU(k))
+        m2(i) = VectorKernels.bigramMask(lowU(k))
+      } else m1(i) = VectorKernels.utf16CharMask(lows(k))
       i += 1
     }
-    starts += asciiCount
-    new SweepTable(n, asciiCount, starts.toArray, lens.toArray, m1, m2,
+    starts += n
+    new SweepTable(n, asciiGroups, starts.toArray, lens.toArray, m1, m2,
       order.map(lowU(_)), order.map(origU(_)))
   }
 }
@@ -93,21 +98,28 @@ object SweepTable {
   * for one lowered left value, emit `(rightValue, similarity)` for every
   * value of one broadcast block within the threshold — the same surviving
   * pair set and scores as a cross join + [[BoundedFuzzyDistance]] +
-  * `s <= maxDist` filter, pair by pair:
+  * `s <= maxDist` filter, pair by pair.
+  *
+  * Every left value, ASCII or not, sweeps the table's ASCII groups and
+  * then its non-ASCII groups the same way, scoring from strings decoded
+  * once (the left value once per `eval`, the table once per executor):
   *
   *  - a length group is skipped when [[Kernels.lengthRejects]] holds for
-  *    it — the very test [[Kernels.distBounded]] rejects with first, so
-  *    only pairs the kernel scores 2.0 are skipped;
+  *    it at the UTF-16 lengths — the very test [[Kernels.distBounded]]
+  *    rejects with first, so only pairs the kernel scores 2.0 are skipped;
   *  - levenshtein pairs pass the unigram/bigram mask gate
   *    (`bitCount(m1L^m1R) > 2k || bitCount(m2L^m2R) > 4k`, each side
   *    disabled on mask 0 — sound by KernelsSpec's mask bounds, which hold
-  *    for levenshtein only), then [[Kernels.levBoundedAscii]];
-  *  - jaro and jaro-winkler compile a left value of at most 64 chars once
-  *    ([[Kernels.JaroPattern]]) and score each right value bit-parallel;
-  *  - other algorithms, and longer jaro left values, run
-  *    [[Kernels.inBand]], the in-band half of the same kernel; non-ASCII
-  *    values on either side run [[Kernels.distBounded]] itself over the
-  *    whole block.
+  *    for levenshtein only; the unigram masks are taken over UTF-16 code
+  *    units, the bigram masks only on ASCII values). An ASCII left value
+  *    then runs [[Kernels.levBoundedAscii]] on the ASCII groups; every
+  *    other pair runs [[Kernels.levenshteinBounded]] on the strings, as
+  *    `distBounded` does;
+  *  - jaro and jaro-winkler compile an ASCII left value of at most 64
+  *    chars once ([[Kernels.JaroPattern]]) and score every right value,
+  *    ASCII or not, bit-parallel;
+  *  - other algorithms, and the remaining jaro left values, run
+  *    [[Kernels.inBand]], the in-band half of the same kernel.
   *
   * The algorithm is dispatched once per left value and length group,
   * never per pair. Evaluated per LEFT row: the scan over the table is a
@@ -140,8 +152,9 @@ case class FuzzySweep(child: Expression, algoId: Int, maxDist: Double,
   // budget(rLen)` with budget `c * maxDist * rLen` (c = 1 for the edit
   // distances, 3 for jaro, 5 for jaro-winkler; the floored budgets step
   // by at most 1 per length), so `rLen - budget(rLen)` is nondecreasing
-  // while c * maxDist <= 1 — once a longer group is out of band, every
-  // later one is too. Above that no long-side group is ever rejected.
+  // while c * maxDist <= 1 — once a longer group of a region is out of
+  // band, every later one of that region is too. Above that no long-side
+  // group is ever rejected.
   private val longSideMonotone =
     (algoId match { case 1 => 3.0; case 2 => 5.0; case _ => 1.0 }) * maxDist <= 1.0
 
@@ -149,91 +162,87 @@ case class FuzzySweep(child: Expression, algoId: Int, maxDist: Double,
     val v = child.eval(input).asInstanceOf[UTF8String]
     if (v == null) return Nil
     val t = table.value
+    val strs = t.lowStrings
     val out = new ArrayBuffer[InternalRow]()
-    // clone: `v` may point into a reused row buffer, and the kernels read
-    // it word-wise over a stable base object
+    // clone: `v` may point into a reused row buffer, and the byte kernel
+    // reads it word-wise over a stable base object
     val lLow = v.clone()
-    // a non-ASCII left value scans the whole block through the kernel;
-    // an ASCII one sweeps the ASCII region, then the non-ASCII tail
-    var j = 0
-    if (lLow.isFullAscii) {
-      sweepAscii(lLow, t, out)
-      j = t.asciiCount
+    val lStr = lLow.toString
+    val lLen = lStr.length
+    val ascii = lLow.isFullAscii
+    val lev = algoId == 0
+    val lm1 = if (lev) VectorKernels.utf16CharMask(lStr) else 0L
+    val lm2 = if (lev) VectorKernels.bigramMask(lLow) else 0L
+    val kernel = Kernels.inBand(algoId)
+    val jaro =
+      if ((algoId == 1 || algoId == 2) && ascii && lLen <= 64) new Kernels.JaroPattern(lStr)
+      else null
+    val winkler = algoId == 2
+
+    // groups [g0, g1) of one region; `bytes`: both sides are ASCII
+    def sweep(g0: Int, g1: Int, bytes: Boolean): Unit = {
+      var g = g0
+      var done = false
+      while (g < g1 && !done) {
+        val rLen = t.groupLens(g)
+        val e = t.groupStarts(g + 1)
+        var j = t.groupStarts(g)
+        if (Kernels.lengthRejects(algoId, lLen, rLen, maxDist)) {
+          if (rLen > lLen && longSideMonotone) done = true
+        } else if (lev) {
+          val mx = if (rLen > lLen) rLen else lLen
+          val k = (maxDist * mx).toInt
+          val g2 = 2L * k
+          val g4 = 4L * k
+          val mxd = mx.toDouble
+          while (j < e) {
+            val rm1 = t.masks1(j)
+            val pruned =
+              (lm1 != 0L && rm1 != 0L &&
+                java.lang.Long.bitCount(lm1 ^ rm1) > g2) || {
+                val rm2 = t.masks2(j)
+                lm2 != 0L && rm2 != 0L &&
+                  java.lang.Long.bitCount(lm2 ^ rm2) > g4
+              }
+            if (!pruned) {
+              val nd =
+                if (mx == 0) 0.0
+                else {
+                  val d =
+                    if (bytes) Kernels.levBoundedAscii(lLow, t.lows(j), k)
+                    else Kernels.levenshteinBounded(lStr, strs(j), k)
+                  if (d > k) 2.0 else d.toDouble / mxd
+                }
+              // emitted inline rather than through `emit`: the per-pair hot loop
+              if (nd <= maxDist)
+                out += new GenericInternalRow(Array[Any](t.origs(j), 1.0 - nd))
+            }
+            j += 1
+          }
+        } else if (jaro != null) {
+          while (j < e) {
+            val sim = if (winkler) jaro.winklerSim(strs(j)) else jaro.sim(strs(j))
+            emit(out, t, j, 1.0 - sim)
+            j += 1
+          }
+        } else {
+          while (j < e) {
+            emit(out, t, j, kernel.dist(lStr, strs(j), maxDist))
+            j += 1
+          }
+        }
+        g += 1
+      }
     }
-    while (j < t.n) {
-      emit(out, t, j, Kernels.distBounded(algoId, lLow, t.lows(j), maxDist))
-      j += 1
-    }
+
+    sweep(0, t.asciiGroups, bytes = ascii)
+    sweep(t.asciiGroups, t.groupLens.length, bytes = false)
     out
   }
 
   private def emit(out: ArrayBuffer[InternalRow], t: SweepTable, j: Int,
                    nd: Double): Unit =
     if (nd <= maxDist) out += new GenericInternalRow(Array[Any](t.origs(j), 1.0 - nd))
-
-  private def sweepAscii(lLow: UTF8String, t: SweepTable,
-                         out: ArrayBuffer[InternalRow]): Unit = {
-    val lLen = lLow.numBytes
-    val lev = algoId == 0
-    val lm1 = if (lev) VectorKernels.charMask(lLow) else 0L
-    val lm2 = if (lev) VectorKernels.bigramMask(lLow) else 0L
-    val kernel = if (lev) null else Kernels.inBand(algoId)
-    val lStr = if (lev) null else lLow.toString
-    val strs = if (lev) null else t.lowStrings
-    val jaro =
-      if ((algoId == 1 || algoId == 2) && lLen <= 64) new Kernels.JaroPattern(lStr) else null
-    val winkler = algoId == 2
-    var g = 0
-    var done = false
-    while (g < t.groupLens.length && !done) {
-      val rLen = t.groupLens(g)
-      val e = t.groupStarts(g + 1)
-      var j = t.groupStarts(g)
-      if (Kernels.lengthRejects(algoId, lLen, rLen, maxDist)) {
-        if (rLen > lLen && longSideMonotone) done = true
-      } else if (lev) {
-        val mx = if (rLen > lLen) rLen else lLen
-        val k = (maxDist * mx).toInt
-        val g2 = 2L * k
-        val g4 = 4L * k
-        val mxd = mx.toDouble
-        while (j < e) {
-          val rm1 = t.masks1(j)
-          val pruned =
-            (lm1 != 0L && rm1 != 0L &&
-              java.lang.Long.bitCount(lm1 ^ rm1) > g2) || {
-              val rm2 = t.masks2(j)
-              lm2 != 0L && rm2 != 0L &&
-                java.lang.Long.bitCount(lm2 ^ rm2) > g4
-            }
-          if (!pruned) {
-            val nd =
-              if (mx == 0) 0.0
-              else {
-                val d = Kernels.levBoundedAscii(lLow, t.lows(j), k)
-                if (d > k) 2.0 else d.toDouble / mxd
-              }
-            // emitted inline rather than through `emit`: the per-pair hot loop
-            if (nd <= maxDist)
-              out += new GenericInternalRow(Array[Any](t.origs(j), 1.0 - nd))
-          }
-          j += 1
-        }
-      } else if (jaro != null) {
-        while (j < e) {
-          val sim = if (winkler) jaro.winklerSim(strs(j)) else jaro.sim(strs(j))
-          emit(out, t, j, 1.0 - sim)
-          j += 1
-        }
-      } else {
-        while (j < e) {
-          emit(out, t, j, kernel.dist(lStr, strs(j), maxDist))
-          j += 1
-        }
-      }
-      g += 1
-    }
-  }
 }
 
 /** Entry point used by [[FuzzyMatcher]]'s exact path. */

@@ -74,6 +74,12 @@ object Materialize {
     out
   }
 
+  /** Row count of a frame [[apply]] returned, as one single-stage job over
+    * its materialized rows. `Dataset.count` on the same frame plans a
+    * partial aggregate, a shuffle and a final aggregate, which AQE runs as
+    * two jobs. */
+  def count(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
   /** Release one barrier's storage NOW: checkpointed blocks unpersist
     * (blocking) and reliable checkpoint files are deleted. This is the
     * single-frame form of what [[MatchScope.close]] does for a whole

@@ -71,6 +71,23 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("filter passes: one bounded-kernel call per pass in the executed plan") {
+    val c = spark.read.parquet(s"$dir/customer.parquet")
+    // fresh name pass, then two filter passes of different algorithms
+    val plan = FuzzyMatcher.matchDfs(c, c, Seq(
+        FuzzyMapping("c_name", "c_name", 90.0, FuzzyAlgorithm.Levenshtein),
+        FuzzyMapping("c_mktsegment", "c_mktsegment", 80.0, FuzzyAlgorithm.JaroWinkler),
+        FuzzyMapping("c_name", "c_name", 95.0, FuzzyAlgorithm.DamerauLevenshtein)),
+      MatchOptions(useApproxNearestNeighbor = Some(false)))
+      .queryExecution.executedPlan.toString
+    def calls(name: String): Int =
+      s"(?<![a-z_])${name}_dist_bounded\\(".r.findAllIn(plan).length
+    assert(calls("jaro_winkler") == 1 && calls("damerau_levenshtein") == 1,
+      s"a filter pass scores its pairs more than once:\n$plan")
+    assert("_dist_bounded\\(".r.findAllIn(plan).length == 2,
+      s"unexpected bounded-kernel calls in the tail plan:\n$plan")
+  }
+
   test("hash sampling is a pure pushed-past-pruning filter: no shuffle anywhere") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val plan = graft.pipeline.Curation.hashSample(docs, "doc_id", 0.25)

@@ -117,12 +117,10 @@ class FuzzyMatcherSpec extends AnyFunSuite with SparkSpec {
     assert(counts(1) <= counts(0), s"pass 2 (${counts(1)}) must not exceed pass 1 (${counts(0)})")
   }
 
-  test("a three-mapping match runs at most 28 Spark jobs") {
-    // Filter passes are scored inline on the fresh pass's barrier and the
-    // last pass frame carries every score, so they add no barrier, count
-    // or combine join. Jobs are attributed by a job tag, which the
-    // engine's helper threads inherit; a tagged sentinel job marks the
-    // end of the match's listener events.
+  /** Spark jobs one collected `matchDfs` call runs, and its rows. Jobs are
+    * attributed by a job tag, which the engine's helper threads inherit; a
+    * tagged sentinel job marks the end of the match's listener events. */
+  private def matchJobs(maps: Seq[FuzzyMapping]): (Int, Array[Row]) = {
     val sc = spark.sparkContext
     val tag = "fuzzy-matcher-spec-jobs"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
@@ -139,8 +137,6 @@ class FuzzyMatcherSpec extends AnyFunSuite with SparkSpec {
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (sentinelJobs.contains(e.jobId)) sentinelDone.countDown()
     }
-    val maps = mappings :+ FuzzyMapping("address", "location", thresholdScore = 10.0,
-      fuzzyType = FuzzyAlgorithm.Indel)
     sc.addSparkListener(listener)
     val rows = try {
       sc.addJobTag(tag)
@@ -151,8 +147,24 @@ class FuzzyMatcherSpec extends AnyFunSuite with SparkSpec {
       assert(sentinelDone.await(30, java.util.concurrent.TimeUnit.SECONDS))
       r
     } finally sc.removeSparkListener(listener)
+    (jobs.get(), rows)
+  }
+
+  test("a three-mapping match runs at most 25 Spark jobs") {
+    // Filter passes are scored inline on the fresh pass's barrier and the
+    // last pass frame carries every score, so they add no barrier, count
+    // or combine join; the fresh pass counts its barriers in one job each.
+    val (jobs, rows) = matchJobs(mappings :+ FuzzyMapping("address", "location",
+      thresholdScore = 10.0, fuzzyType = FuzzyAlgorithm.Indel))
     assert(rows.length == 5)
-    assert(jobs.get() <= 28, s"a three-mapping match ran ${jobs.get()} Spark jobs")
+    assert(jobs <= 25, s"a three-mapping match ran $jobs Spark jobs")
+  }
+
+  test("a one-mapping exact match runs at most 21 Spark jobs") {
+    val (jobs, rows) = matchJobs(Seq(FuzzyMapping("company_name", "organization",
+      thresholdScore = 20.0, fuzzyType = FuzzyAlgorithm.Levenshtein)))
+    assert(rows.nonEmpty)
+    assert(jobs <= 21, s"a one-mapping exact match ran $jobs Spark jobs")
   }
 
   test("empty input produces empty result with full schema") {

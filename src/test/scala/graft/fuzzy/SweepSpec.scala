@@ -125,9 +125,10 @@ class SweepSpec extends AnyFunSuite with SparkSpec {
 object SweepSpec {
 
   // mixed shapes: shared prefixes (strip path), case differences (lower
-  // must match Spark's), non-ASCII values (generic-kernel tail + mask-0
-  // gate disable), empty strings, equal values, length outliers (band
-  // skip), and near-threshold pairs on both sides of the cutoff
+  // must match Spark's), non-ASCII values (the tail's UTF-16 length groups,
+  // String kernels and UTF-16 unigram gate), empty strings, equal values,
+  // length outliers (band skip), and near-threshold pairs on both sides of
+  // the cutoff
   private val base = Seq(
     "customer#0001", "customer#0002", "Customer#0001", "CUSTOMER#00x2",
     "alpha beta gamma", "alpha beta gamm", "alpha beta gamme",
