@@ -39,7 +39,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * each value, `origs` the original value emitted on a match.
   */
 final class SweepTable(
-    val n: Int,
     val asciiGroups: Int,
     val groupStarts: Array[Int],
     val groupLens: Array[Int],
@@ -89,7 +88,7 @@ object SweepTable {
       i += 1
     }
     starts += n
-    new SweepTable(n, asciiGroups, starts.toArray, lens.toArray, m1, m2,
+    new SweepTable(asciiGroups, starts.toArray, lens.toArray, m1, m2,
       order.map(lowU(_)), order.map(origU(_)))
   }
 }
