@@ -1,6 +1,8 @@
 package graft.fuzzy
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The LSH path has no row-identical oracle (different candidate generation
@@ -160,6 +162,62 @@ class AnnJoinSpec extends AnyFunSuite with SparkSpec {
       totalValues = 3600L, cartesian = cartesian)
     assert(builtAnyway.nonEmpty,
       "with the volume gate disabled the probe should pass this corpus (the blind spot)")
+  }
+
+  /** The stop-gram rule as a cluster-side aggregate over the seed-42
+    * sample (3-grams of the lowered values, document frequency above 0.25 of
+    * the sample's expected size), kept here as the reference the engine's
+    * stop set must reproduce. */
+  private def aggregatedStopGrams(left: DataFrame, right: DataFrame, lc: String, rc: String,
+                                  total: Long): Array[String] = {
+    val frac = math.min(1.0, 10000.0 / math.max(total, 1L))
+    left.select(col(lc).as("__v")).unionByName(right.select(col(rc).as("__v")))
+      .sample(withReplacement = false, frac, seed = 42L)
+      .select(explode(array_distinct(vectorFunctions.char_ngrams(lower(col("__v")), 3))).as("__g"))
+      .groupBy(col("__g")).agg(count(lit(1)).as("__df"))
+      .where(col("__df") > 0.25 * (total * frac))
+      .select(col("__g")).collect().map(_.getString(0))
+  }
+
+  test("forced LSH candidates equal a build on the aggregated sample stop grams") {
+    import spark.implicits._
+    val sf = "/root/testdata/sf0.01"
+    def values(df: DataFrame, c: String): DataFrame =
+      df.select(col(c)).where(col(c).isNotNull).distinct().localCheckpoint()
+    val names = (values(spark.read.parquet(s"$sf/customer.parquet"), "c_name"),
+      values(spark.read.parquet(s"$sf/supplier.parquet"), "s_name"), "c_name", "s_name")
+    val docs = (graft.Bench.docValues(spark, sf, 1 to 271 by 10, 30, "name").localCheckpoint(),
+      graft.Bench.docValues(spark, sf, 1 to 211 by 30, 30, "src").localCheckpoint(),
+      "name", "src")
+    val tiny = (Seq("aaa", "aab", "aba").toDF("k"), Seq("aaa", "abb").toDF("g"), "k", "g")
+    // dotted capital I lowers to two chars, sharp s stays one, a capital
+    // sigma lowers by position: grams must come from Spark's lower()
+    val accented = (0 until 40).map(i => f"İstanbul Straße ΟΔΥΣΣΕΥΣ $i%02d")
+    val nonAscii = (accented.toDF("k"),
+      accented.map(v => v.replace("ß", "ss").replace("Σ ", "ς ")).toDF("g"), "k", "g")
+    // a mixed-case prefix in every value and a word in 22% of them: the
+    // stop set decides which grams sign a value, so a wrong case fold or
+    // stop bar changes the candidates
+    val rnd = new scala.util.Random(7)
+    val firms = (0 until 1500).map(i => "Northwind Trading Co " +
+      (if (i % 50 < 11) "Lima " else "") +
+      rnd.alphanumeric.filter(_.isLetter).take(10).mkString.toLowerCase)
+    val prefixed = (firms.toDF("k"), firms.zipWithIndex
+      .map { case (v, i) => if (i % 2 == 0) v.updated(v.length - 5, 'z') else v + "x" }
+      .toDF("g"), "k", "g")
+    // every collision up to the top 20 survives the verify gate
+    val opts = MatchOptions(useApproxNearestNeighbor = Some(true),
+      lshJaccardDistanceThreshold = 1.0, topNForNewMatches = 20)
+    for ((lv, rv, lc, rc) <- Seq(names, docs, tiny, nonAscii, prefixed)) {
+      val total = lv.count() + rv.count()
+      def rows(df: DataFrame) =
+        df.collect().map(r => (0 until r.length).map(r.getString)).toSet
+      val stops = aggregatedStopGrams(lv, rv, lc, rc, total)
+      val got = rows(AnnJoin.candidates(lv, rv, lc, rc, opts, 0.3, total))
+      val want = rows(AnnJoin.build(lv, rv, lc, rc, opts, 0.3, stops, total))
+      assert(want.nonEmpty, s"$lc x $rc: no candidates")
+      assert(got == want, s"$lc x $rc (${stops.length} stop grams): candidate rows differ")
+    }
   }
 
   test("threshold int-truncation quirk: 70.9 behaves as 70") {
