@@ -947,7 +947,7 @@ object Bench {
 
   /** Remove the io probe's ~64 MB staging dir — PID-named, so every
     * fresh JVM would otherwise orphan one per run. Called at the end of
-    * [[main]] and by ProbeSweep. */
+    * [[main]]. */
   def ioProbeCleanup(): Unit = {
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm))

@@ -1,7 +1,11 @@
 package graft.fuzzy
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 import org.slf4j.LoggerFactory
 
 import graft.util.{Blocking, CapMetrics}
@@ -34,10 +38,11 @@ import graft.util.{Blocking, CapMetrics}
   * when most values keep too few discriminative grams, bucket blocking
   * cannot separate them and the LSH path costs more than the exact cross
   * join while losing recall — [[candidatesOrExactFallback]] then returns
-  * None so the caller runs exact (if the cartesian permits). The probe runs
-  * on a ≤`lshProbeSampleSize` uniform sample: corpus-wide gram statistics
-  * would cost more than the exact join the probe is trying to avoid
-  * (measured: ~25 s of pure probe overhead at sf0.1 before sampling).
+  * None so the caller runs exact (if the cartesian permits). The probe and
+  * the stop grams come from one gram census of a uniform sample of about
+  * `ProbeSampleSize` values: corpus-wide gram statistics would cost more
+  * than the exact join the probe is trying to avoid (measured: ~25 s of
+  * pure probe overhead at sf0.1 before sampling).
   */
 object AnnJoin {
 
@@ -68,70 +73,29 @@ object AnnJoin {
     }
   }
 
+  /** Character n-gram size of the signatures and the jaccard verify. */
+  private[graft] val NgramSize = 3
+  /** Below this many grams outside the stop set a value reverts to its full
+    * gram set (tiny kept sets collapse minhash recall — TUNING.md §1). */
+  private[graft] val MinKeptGrams = 8
+  /** Expected size of the uniform sample behind the gram census. */
+  private[graft] val ProbeSampleSize = 10000
+
   /** Candidate generation with degenerate-input detection. Returns None
     * when the corpus is LSH-hostile and the cartesian is within
     * `lshExactFallbackCartesianCap` — the caller should run the exact
-    * cross join instead.
-    *
-    * The probe estimates the degenerate-value fraction from a uniform
-    * sample: gram document frequencies are proportional under uniform
-    * sampling, so "gram present in more than `lshStopGramFraction` of all
-    * values" is estimated by the same fraction of the sample, and the
-    * per-value kept-gram counts follow. Total probe cost is O(sample), not
-    * O(corpus) — auto-mode-with-fallback now costs ≈ the exact join. */
+    * cross join instead. The probe reads the gram census's degenerate
+    * fraction, so it costs no job beyond the stop grams. */
   def candidatesOrExactFallback(leftValues: DataFrame, rightValues: DataFrame,
                                 leftCol: String, rightCol: String,
                                 opts: MatchOptions, reversedThreshold: Double,
                                 totalValues: Long, cartesian: Double): Option[DataFrame] = {
     CapMetrics.requireBands(opts.lshNumBands, "lshNumBands")
-    val n = opts.lshNgramSize
-
     val probeApplies =
       cartesian <= opts.lshExactFallbackCartesianCap && opts.lshExactFallbackCartesianCap > 0
-
-    // ONE Spark action: collect the ≤`lshProbeSampleSize` sampled values
-    // (a few hundred KB) and run the whole probe — stop-gram estimation
-    // and per-value kept-gram counts — in plain Scala on the driver.
-    // Cluster-side aggregation would cost three jobs plus a barrier for
-    // work that is microseconds at this size. Returns true when the corpus
-    // is too degenerate for LSH.
-    def probeDegenerate(): Boolean = {
-      val frac = math.min(1.0, opts.lshProbeSampleSize.toDouble / math.max(totalValues, 1L))
-      val sampled: Array[String] = leftValues.select(col(leftCol).as("__v"))
-        .unionByName(rightValues.select(col(rightCol).as("__v")))
-        .sample(withReplacement = false, frac, seed = 42L)
-        .limit(2 * opts.lshProbeSampleSize)
-        .collect().map(_.getString(0)).filter(_ != null).map(_.toLowerCase)
-      val nSample = sampled.length
-      if (nSample == 0) return false
-      def gramsOf(v: String): Set[String] =
-        if (v.length < n) Set(v)
-        else (0 to v.length - n).map(i => v.substring(i, i + n)).toSet
-      val gramSets = sampled.map(gramsOf)
-      val docFreq = new java.util.HashMap[String, Int]()
-      gramSets.foreach(_.foreach(g => docFreq.merge(g, 1, Integer.sum)))
-      val stopBar = opts.lshStopGramFraction * nSample
-      val ok = gramSets.count { gs =>
-        gs.count(g => docFreq.get(g) <= stopBar) >= opts.lshMinKeptGrams
-      }
-      1.0 - ok.toDouble / nSample > opts.lshDegenerateFraction
-    }
-
-    // The probe collect and the stop-gram estimation job are independent
-    // reads of the same value frames — overlap them (guide §2.6). When the
-    // probe bails, the stop-gram sample job ran for nothing, but it was
-    // concurrent with the probe and is sample-bounded (O(lshProbeSampleSize)
-    // regardless of corpus size), so the bail case pays ~nothing while the
-    // proceed case saves the whole serial stop-gram latency.
-    val (isDegenerate, stopGrams) =
-      if (probeApplies)
-        graft.util.Par.run2(
-          probeDegenerate(),
-          estimateStopGrams(leftValues, rightValues, leftCol, rightCol, opts, totalValues))
-      else
-        (false, estimateStopGrams(leftValues, rightValues, leftCol, rightCol,
-          opts, totalValues))
-    if (isDegenerate) return None
+    val (stopGrams, degenerateFraction) =
+      gramCensus(leftValues, rightValues, leftCol, rightCol, opts, totalValues)
+    if (probeApplies && degenerateFraction > opts.lshDegenerateFraction) return None
 
     // Second, RUNTIME degeneracy gate (auto mode only): the sampled probe
     // cannot see MIXTURE degeneracy — K internally-degenerate sub-corpora
@@ -158,37 +122,43 @@ object AnnJoin {
     val total =
       if (totalValues > 0) totalValues
       else leftValues.count() + rightValues.count()
-    val stopGrams = estimateStopGrams(leftValues, rightValues, leftCol, rightCol,
-      opts, total)
+    val (stopGrams, _) = gramCensus(leftValues, rightValues, leftCol, rightCol, opts, total)
     build(leftValues, rightValues, leftCol, rightCol, opts, reversedThreshold,
       stopGrams, total)
   }
 
-  /** The stop grams are ESTIMATED from a uniform sample and COLLECTED to
-    * the driver: gram document frequencies are proportional under uniform
-    * sampling (same argument as the degeneracy probe), so "present in more
-    * than `lshStopGramFraction` of all values" is tested against the
-    * sample's expected size — a constant-cost step instead of a corpus
-    * scan. The set itself is bounded by avgGramsPerValue /
-    * lshStopGramFraction entries regardless of corpus size (~a hundred at
-    * the defaults even at 100 TB), so it ships to executors as a literal
-    * reference object and gram filtering becomes a narrow codegen
-    * projection instead of three shuffles a side. */
-  private def estimateStopGrams(leftValues: DataFrame, rightValues: DataFrame,
-                                leftCol: String, rightCol: String,
-                                opts: MatchOptions, total: Long): Array[String] = {
-    val n = opts.lshNgramSize
-    val sampleFrac = math.min(1.0, opts.lshProbeSampleSize.toDouble / math.max(total, 1L))
-    leftValues.select(col(leftCol).as("__v"))
+  /** The gram census: ONE Spark action collects a uniform seed-42 sample of
+    * about `ProbeSampleSize` lowered values (a few hundred KB) and the
+    * driver counts their distinct-gram document frequencies. Frequencies
+    * are proportional under uniform sampling, so "present in more than
+    * `lshStopGramFraction` of all values" is tested against the sample's
+    * expected size — a constant-cost step instead of a corpus scan. Returns
+    *  - the stop grams, bounded by avgGramsPerValue / lshStopGramFraction
+    *    entries regardless of corpus size (~a hundred at the defaults), so
+    *    they ship to executors as a literal reference object and gram
+    *    filtering is a narrow codegen projection;
+    *  - the fraction of sampled values keeping fewer than `MinKeptGrams`
+    *    grams outside them (the degeneracy probe's verdict input).
+    * Grams come from Spark's `lower()` and `VectorKernels.charNgrams`, the
+    * same functions `kept_grams` applies to every value. */
+  private def gramCensus(leftValues: DataFrame, rightValues: DataFrame,
+                         leftCol: String, rightCol: String,
+                         opts: MatchOptions, total: Long): (Array[String], Double) = {
+    val sampleFrac = math.min(1.0, ProbeSampleSize.toDouble / math.max(total, 1L))
+    val gramSets = leftValues.select(col(leftCol).as("__v"))
       .unionByName(rightValues.select(col(rightCol).as("__v")))
       .sample(withReplacement = false, sampleFrac, seed = 42L)
-      .select(explode(array_distinct(
-        vectorFunctions.char_ngrams(lower(col("__v")), n))).as("__g"))
-      .groupBy(col("__g"))
-      .agg(count(lit(1)).as("__df"))
-      .where(col("__df") > opts.lshStopGramFraction * (total * sampleFrac))
-      .select(col("__g"))
-      .collect().map(_.getString(0))
+      .select(lower(col("__v")))
+      .collect().flatMap(r => Option(r.getString(0)))
+      .map(v => VectorKernels.charNgrams(UTF8String.fromString(v), NgramSize)
+        .toArray[UTF8String](StringType).toSet)
+    val docFreq = mutable.HashMap.empty[UTF8String, Int].withDefaultValue(0)
+    gramSets.foreach(_.foreach(g => docFreq(g) += 1))
+    val bar = opts.lshStopGramFraction * (total * sampleFrac)
+    val stops = docFreq.collect { case (g, df) if df > bar => g }.toSet
+    val degenerate = gramSets.count(_.count(g => !stops(g)) < MinKeptGrams)
+    (stops.iterator.map(_.toString).toArray,
+      if (gramSets.isEmpty) 0.0 else degenerate.toDouble / gramSets.length)
   }
 
   /** `valueId` is the narrow-payload id expression (xxhash64 in
@@ -212,7 +182,7 @@ object AnnJoin {
                     bailVolume: Option[Double],
                     valueId: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
                       c => xxhash64(c)): Option[DataFrame] = {
-    val n = opts.lshNgramSize
+    val n = NgramSize
     val bands = opts.lshNumBands
     val rows = opts.lshRowsPerBand
     val k = bands * rows
@@ -237,7 +207,7 @@ object AnnJoin {
     def bandedIds(df: DataFrame, vCol: String, vidName: String): DataFrame =
       Blocking.minhashBands(df,
         vectorFunctions.minhash_signature(
-          vectorFunctions.kept_grams(lower(col(vCol)), n, stopGrams, opts.lshMinKeptGrams), k),
+          vectorFunctions.kept_grams(lower(col(vCol)), n, stopGrams, MinKeptGrams), k),
         bands, rows, "__band", "__bkey", valueId(col(vCol)).as(vidName))
 
     // Materialized: consumed twice (bucket statistics + the bucket join).

@@ -87,8 +87,9 @@ final case class MatchOptions(
     runPreprocess: Boolean = true,
     // LSH (approximate path) tuning — Spark-side design, no reference analog:
     // the reference delegates to polars-simed (matcher.py:145-152); we use
-    // banded char-ngram MinHash which scales horizontally on a cluster.
-    lshNgramSize: Int = 3,
+    // banded char-ngram MinHash which scales horizontally on a cluster. The
+    // gram size, the kept-gram floor and the census sample size are fixed
+    // (AnnJoin.NgramSize / MinKeptGrams / ProbeSampleSize; TUNING.md §1).
     lshNumBands: Int = 16,
     lshRowsPerBand: Int = 2,
     lshJaccardDistanceThreshold: Double = 0.85,
@@ -98,9 +99,6 @@ final case class MatchOptions(
     // n-grams present in more than this fraction of all values are excluded
     // from MinHash signatures (IDF-style stop grams; see AnnJoin scaladoc)
     lshStopGramFraction: Double = 0.25,
-    // below this many surviving grams a value reverts to its full gram set
-    // (tiny/asymmetric kept sets make MinHash recall collapse)
-    lshMinKeptGrams: Int = 8,
     // auto mode: when more than this fraction of values lack discriminative
     // grams, LSH cannot separate them -> fall back to the exact cross join
     // as long as the cartesian stays under the fallback cap (0 disables).
@@ -133,10 +131,6 @@ final case class MatchOptions(
     // of left values and the bail decision uses the estimated UNIQUE
     // volume. 0 disables.
     lshCandidateFractionForExact: Double = 0.2,
-    // the degeneracy probe estimates the fractions above from a uniform
-    // sample of at most this many values (corpus-wide stats would cost more
-    // than the exact join the probe is trying to avoid)
-    lshProbeSampleSize: Int = 10000,
     // Broadcast the smaller value-level side of an exact cross join when it
     // has at most this many distinct values (driver-side hint; AQE may still
     // pick broadcast on its own).

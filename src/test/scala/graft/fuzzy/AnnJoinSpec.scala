@@ -116,6 +116,29 @@ class AnnJoinSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  /** Spark jobs of one collected `pairs` match (the parquet reads, which
+    * run schema-inference jobs, stay outside the count). */
+  private def pairJobs(opts: MatchOptions): (Int, Set[(Long, Long)]) = {
+    val c = spark.read.parquet(s"$dir/customer.parquet")
+    val s = spark.read.parquet(s"$dir/supplier.parquet")
+    sparkJobs(FuzzyMatcher.withMatchScope(FuzzyMatcher.matchDfs(c, s,
+        Seq(FuzzyMapping("c_name", "s_name", 70.0, FuzzyAlgorithm.Levenshtein)), opts)
+      .select("c_custkey", "s_suppkey").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet))
+  }
+
+  test("a forced-LSH match runs at most 31 Spark jobs") {
+    val (jobs, got) = pairJobs(MatchOptions(useApproxNearestNeighbor = Some(true)))
+    assert(got.nonEmpty)
+    assert(jobs <= 31, s"a forced-LSH match ran $jobs Spark jobs")
+  }
+
+  test("an auto match whose probe falls back to exact runs at most 22 Spark jobs") {
+    val (jobs, got) = pairJobs(MatchOptions(crossOverForApprox = 0.0))
+    assert(got == pairs(MatchOptions(useApproxNearestNeighbor = Some(false))))
+    assert(jobs <= 22, s"an auto match with the probe falling back ran $jobs Spark jobs")
+  }
+
   test("hard cartesian cap refuses oversized joins") {
     val err = intercept[IllegalStateException] {
       pairs(MatchOptions(hardCartesianCap = 100.0, useApproxNearestNeighbor = Some(false)))

@@ -1,7 +1,6 @@
 package graft.fuzzy
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -117,38 +116,9 @@ class FuzzyMatcherSpec extends AnyFunSuite with SparkSpec {
     assert(counts(1) <= counts(0), s"pass 2 (${counts(1)}) must not exceed pass 1 (${counts(0)})")
   }
 
-  /** Spark jobs one collected `matchDfs` call runs, and its rows. Jobs are
-    * attributed by a job tag, which the engine's helper threads inherit; a
-    * tagged sentinel job marks the end of the match's listener events. */
-  private def matchJobs(maps: Seq[FuzzyMapping]): (Int, Array[Row]) = {
-    val sc = spark.sparkContext
-    val tag = "fuzzy-matcher-spec-jobs"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val sentinelDone = new java.util.concurrent.CountDownLatch(1)
-    def tagged(e: SparkListenerJobStart, t: String): Boolean =
-      Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-        .exists(_.split(",").contains(t))
-    val sentinelJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        if (tagged(e, tag)) jobs.incrementAndGet()
-        if (tagged(e, s"$tag-sentinel")) sentinelJobs.add(e.jobId)
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (sentinelJobs.contains(e.jobId)) sentinelDone.countDown()
-    }
-    sc.addSparkListener(listener)
-    val rows = try {
-      sc.addJobTag(tag)
-      val r = try FuzzyMatcher.withMatchScope(FuzzyMatcher.matchDfs(leftDf, rightDf, maps).collect())
-        finally sc.removeJobTag(tag)
-      sc.addJobTag(s"$tag-sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(s"$tag-sentinel")
-      assert(sentinelDone.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      r
-    } finally sc.removeSparkListener(listener)
-    (jobs.get(), rows)
-  }
+  /** Spark jobs one collected `matchDfs` call runs, and its rows. */
+  private def matchJobs(maps: Seq[FuzzyMapping]): (Int, Array[Row]) =
+    sparkJobs(FuzzyMatcher.withMatchScope(FuzzyMatcher.matchDfs(leftDf, rightDf, maps).collect()))
 
   test("a three-mapping match runs at most 25 Spark jobs") {
     // Filter passes are scored inline on the fresh pass's barrier and the

@@ -224,8 +224,8 @@ class BandGateSpec extends AnyFunSuite with SparkSpec {
     val right = Seq("sMith", "smiTh", "smitH", "Jones", "green").toDF("r")
     def rows(df: DataFrame, c: String): Seq[(String, Bucket)] =
       explodedBands(df, c, vectorFunctions.lsh_band_keys(vectorFunctions.minhash_signature(
-          vectorFunctions.kept_grams(lower(col(c)), opts.lshNgramSize, Array.empty[String],
-            opts.lshMinKeptGrams), bands * rowsPerBand), bands, rowsPerBand))
+          vectorFunctions.kept_grams(lower(col(c)), AnnJoin.NgramSize, Array.empty[String],
+            AnnJoin.MinKeptGrams), bands * rowsPerBand), bands, rowsPerBand))
         .map { case (v, b) => (v.asInstanceOf[String], b) }
     val (l, r) = (rows(left, "l"), rows(right, "r"))
     val c = crossCensus(l, r)
