@@ -13,16 +13,20 @@ class AnnJoinSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def pairs(opts: MatchOptions): Set[(Long, Long)] = {
+  /** The matched key pairs, and the Spark jobs of the match alone (each
+    * parquet read runs a schema-inference job before the count starts). */
+  private def pairJobs(opts: MatchOptions): (Int, Set[(Long, Long)]) = {
     val c = spark.read.parquet(s"$dir/customer.parquet")
     val s = spark.read.parquet(s"$dir/supplier.parquet")
-    FuzzyMatcher.matchDfs(c, s,
+    sparkJobs(FuzzyMatcher.withMatchScope(FuzzyMatcher.matchDfs(c, s,
         Seq(FuzzyMapping("c_name", "s_name", 70.0, FuzzyAlgorithm.Levenshtein)), opts)
       .select("c_custkey", "s_suppkey")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-      .toSet
+      .toSet))
   }
+
+  private def pairs(opts: MatchOptions): Set[(Long, Long)] = pairJobs(opts)._2
 
   test("forced-ANN candidates recall >= 0.9 of the exact path") {
     val exact = pairs(MatchOptions(useApproxNearestNeighbor = Some(false)))
@@ -114,17 +118,6 @@ class AnnJoinSpec extends AnyFunSuite with SparkSpec {
       assert(got.contains((f"collide_left_$i%02d_val", f"collide_left_$i%02d_vXl")),
         s"collision lost the 1-edit diagonal pair $i")
     }
-  }
-
-  /** Spark jobs of one collected `pairs` match (the parquet reads, which
-    * run schema-inference jobs, stay outside the count). */
-  private def pairJobs(opts: MatchOptions): (Int, Set[(Long, Long)]) = {
-    val c = spark.read.parquet(s"$dir/customer.parquet")
-    val s = spark.read.parquet(s"$dir/supplier.parquet")
-    sparkJobs(FuzzyMatcher.withMatchScope(FuzzyMatcher.matchDfs(c, s,
-        Seq(FuzzyMapping("c_name", "s_name", 70.0, FuzzyAlgorithm.Levenshtein)), opts)
-      .select("c_custkey", "s_suppkey").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet))
   }
 
   test("a forced-LSH match runs at most 31 Spark jobs") {
