@@ -25,7 +25,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ConcurrentMatchSpec extends AnyFunSuite with SparkSpec {
 
   // degenerate: shared 10-char prefix, 3-char suffixes — kept grams fall
-  // below lshMinKeptGrams, every value reverts to its full gram set, and
+  // below AnnJoin.MinKeptGrams, every value reverts to its full gram set, and
   // band buckets go quadratic
   private def degFrames = {
     import spark.implicits._
