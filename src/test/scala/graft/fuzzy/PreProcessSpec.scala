@@ -1,6 +1,8 @@
 package graft.fuzzy
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{approx_count_distinct, col, concat, count, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 class PreProcessSpec extends AnyFunSuite with SparkSpec {
@@ -45,6 +47,68 @@ class PreProcessSpec extends AnyFunSuite with SparkSpec {
     val plan = PreProcess.run(left, right, Seq(FuzzyMapping("k", "rk", 80.0)))
     assert(plan.left.count() == 2000)
     assert(plan.right.count() == 2000)
+  }
+
+  /** The statistics as a `count` + `approx_count_distinct` aggregate
+    * computes them: the oracle [[PreProcess.statScan]] must equal. */
+  private def aggregateStats(df: DataFrame, cols: Seq[String]): (Long, Map[String, Long]) = {
+    val distinctCols = cols.distinct
+    val aggs = count(lit(1)).as("__n") +:
+      distinctCols.map(c => approx_count_distinct(col(c)).as(c))
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    (row.getLong(0),
+      distinctCols.zipWithIndex.map { case (c, i) => c -> row.getLong(i + 1) }.toMap)
+  }
+
+  /** `n` rows of a string `a` (about n/3 distinct), an int `b`, a long `c`
+    * and a double `d`, from a range source in `parts` partitions. */
+  private def abcd(n: Long, parts: Int): DataFrame =
+    spark.range(0, n, 1, parts).select(
+      concat(lit("name_"), (col("id") % math.max(n / 3, 1)).cast("string")).as("a"),
+      (col("id") % 97).cast("int").as("b"),
+      (col("id") * 7919L).as("c"),
+      (col("id") / 13).cast("double").as("d"))
+
+  private val abcdCols = Seq("a", "b", "c", "d", "a")
+
+  private def statFixtures: Seq[(String, DataFrame, Seq[String])] = {
+    val nonAscii = Seq("İstanbul", "istanbul", "ISTANBUL", "straße", "STRASSE", "strasse",
+      "σοφός", "σοφόσ", "ΣΟΦΟΣ", "naïve", "naive", "😀 smile", "smile 😀", "😀", "", " ")
+    val nulls = Seq[(Option[String], Option[java.lang.Integer])](
+      (Some("x"), Some(1)), (None, Some(2)), (Some("y"), None), (None, None),
+      (Some("x"), Some(1)), (Some(""), Some(0)))
+    val customer = spark.read.parquet("/root/testdata/sf0.01/customer.parquet")
+    Seq(
+      ("0 rows", abcd(0, 2), abcdCols),
+      ("0 rows, local", Seq.empty[(String, Int)].toDF("a", "b"), Seq("a", "b")),
+      ("1 row", abcd(1, 1), abcdCols),
+      ("17 rows", abcd(17, 3), abcdCols),
+      ("2k rows", abcd(2000, 4), abcdCols),
+      ("50k rows", abcd(50000, 4), abcdCols),
+      ("300k rows", abcd(300000, 4), abcdCols),
+      ("nulls", nulls.toDF("a", "b"), Seq("a", "b")),
+      ("all-null column", nulls.toDF("a", "b").select(lit(null).cast("string").as("a")),
+        Seq("a")),
+      ("non-ASCII", (nonAscii ++ nonAscii.map(_.toUpperCase)).toDF("a"), Seq("a")),
+      ("int", (1 to 5000).map(i => i % 1234).toDF("b"), Seq("b")),
+      ("long", (1 to 5000).map(i => i.toLong * Int.MaxValue).toDF("c"), Seq("c")),
+      ("double", (Seq(0.0, -0.0, Double.NaN, 1.5, -1.5, Double.MinPositiveValue,
+        Double.PositiveInfinity) ++ (1 to 3000).map(_ / 7.0)).toDF("d"), Seq("d")),
+      ("repartitioned", abcd(20000, 2).repartition(7), abcdCols),
+      ("repartitioned by a column", abcd(20000, 2).repartition(5, col("b")), abcdCols),
+      ("coalesced", abcd(20000, 4).coalesce(1), abcdCols),
+      ("no mapping columns", abcd(500, 2), Seq.empty),
+      ("sf0.01 customer", customer,
+        Seq("c_name", "c_mktsegment", "c_nationkey", "c_acctbal", "c_custkey", "c_name")),
+      ("sf0.01 customer, filtered", customer.where(col("c_acctbal") > 0),
+        Seq("c_mktsegment", "c_name")))
+  }
+
+  test("statScan equals count + approx_count_distinct") {
+    statFixtures.foreach { case (name, df, cols) =>
+      val expected = aggregateStats(df, cols)
+      assert(PreProcess.statScan(df, cols) == expected, s"fixture: $name")
+    }
   }
 }
 
