@@ -88,7 +88,8 @@ object FuzzyMatcher {
     * the structural `_right` renames (computed against the caller's fixed
     * left schema), row-id assignment + materialization under
     * `opts.checkpoint`, the row count, and the per-mapping-column
-    * approx-distinct (HLL) statistics. [[matchDfsWithPreparedRight]] then
+    * approx-distinct (HLL++) statistics, from one sketch pass
+    * ([[PreProcess.statScan]]). [[matchDfsWithPreparedRight]] then
     * spends per-call Spark actions only on the left side; the right side is
     * consumed exclusively through the materialized barrier.
     *
@@ -117,8 +118,8 @@ object FuzzyMatcher {
 
   /** Build a [[PreparedRight]]. `leftCols` is the (fixed) schema of the
     * batches that will be matched — the structural renames depend on it.
-    * Stats (count + HLL scan) run only when `opts.runPreprocess` is set;
-    * the count lands on the already-materialized frame. */
+    * Stats (one single-stage count + HLL++ sketch pass) run only when
+    * `opts.runPreprocess` is set, over the already-materialized frame. */
   def prepareRight(leftCols: Seq[String], right: DataFrame, maps: Seq[FuzzyMapping],
                    opts: MatchOptions = MatchOptions.default): PreparedRight = {
     require(maps.nonEmpty, "at least one FuzzyMapping is required")
@@ -139,7 +140,8 @@ object FuzzyMatcher {
     require(left.columns.toSet == prepared.leftCols.toSet,
       s"left schema ${left.columns.mkString(",")} does not match the schema " +
         s"the right side was prepared against (${prepared.leftCols.mkString(",")})")
-    // the per-batch planning cost is one fused count+HLL scan of the batch
+    // the per-batch planning cost is one single-stage count + HLL++ sketch
+    // pass over the batch (no shuffle)
     val (maps, dedupBoth) =
       if (opts.runPreprocess)
         PreProcess.decide(prepared.maps, PreProcess.statScan(left, prepared.maps.map(_.leftCol)),
@@ -261,8 +263,16 @@ object FuzzyMatcher {
     // The two sides' materialize+count chains are independent — run them
     // concurrently (guide §2.6): same barriers, same counts, half the
     // serial fixed-cost floor of the four driver actions.
+    // Hash-partitioned by the value with an explicit partition count: AQE
+    // does not coalesce a shuffle whose count the user set, and the distinct
+    // aggregate reuses that partitioning, so it runs on every core and the
+    // sweep's stream side arrives already spread (a coalesced one-partition
+    // frame would be repartitioned again before every sweep).
+    val parallelism = leftIdxDf.sparkSession.sparkContext.defaultParallelism
     def valsOf(df: DataFrame, c: String): (DataFrame, Long) = {
-      val v = graft.util.Materialize(distinctValues(df, c), opts.checkpoint)
+      val v = graft.util.Materialize(
+        df.where(col(c).isNotNull).select(col(c)).repartition(parallelism, col(c)).distinct(),
+        opts.checkpoint)
       (v, graft.util.Materialize.count(v))
     }
     val ((lv0, lc0), (rv0, rc0)) = graft.util.Par.run2(

@@ -120,16 +120,16 @@ class AnnJoinSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("a forced-LSH match runs at most 31 Spark jobs") {
+  test("a forced-LSH match runs at most 29 Spark jobs") {
     val (jobs, got) = pairJobs(MatchOptions(useApproxNearestNeighbor = Some(true)))
     assert(got.nonEmpty)
-    assert(jobs <= 31, s"a forced-LSH match ran $jobs Spark jobs")
+    assert(jobs <= 29, s"a forced-LSH match ran $jobs Spark jobs")
   }
 
-  test("an auto match whose probe falls back to exact runs at most 22 Spark jobs") {
+  test("an auto match whose probe falls back to exact runs at most 19 Spark jobs") {
     val (jobs, got) = pairJobs(MatchOptions(crossOverForApprox = 0.0))
     assert(got == pairs(MatchOptions(useApproxNearestNeighbor = Some(false))))
-    assert(jobs <= 22, s"an auto match with the probe falling back ran $jobs Spark jobs")
+    assert(jobs <= 19, s"an auto match with the probe falling back ran $jobs Spark jobs")
   }
 
   test("hard cartesian cap refuses oversized joins") {

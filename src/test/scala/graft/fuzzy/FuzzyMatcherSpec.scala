@@ -120,21 +120,21 @@ class FuzzyMatcherSpec extends AnyFunSuite with SparkSpec {
   private def matchJobs(maps: Seq[FuzzyMapping]): (Int, Array[Row]) =
     sparkJobs(FuzzyMatcher.withMatchScope(FuzzyMatcher.matchDfs(leftDf, rightDf, maps).collect()))
 
-  test("a three-mapping match runs at most 25 Spark jobs") {
+  test("a three-mapping match runs at most 22 Spark jobs") {
     // Filter passes are scored inline on the fresh pass's barrier and the
     // last pass frame carries every score, so they add no barrier, count
     // or combine join; the fresh pass counts its barriers in one job each.
     val (jobs, rows) = matchJobs(mappings :+ FuzzyMapping("address", "location",
       thresholdScore = 10.0, fuzzyType = FuzzyAlgorithm.Indel))
     assert(rows.length == 5)
-    assert(jobs <= 25, s"a three-mapping match ran $jobs Spark jobs")
+    assert(jobs <= 22, s"a three-mapping match ran $jobs Spark jobs")
   }
 
-  test("a one-mapping exact match runs at most 21 Spark jobs") {
+  test("a one-mapping exact match runs at most 18 Spark jobs") {
     val (jobs, rows) = matchJobs(Seq(FuzzyMapping("company_name", "organization",
       thresholdScore = 20.0, fuzzyType = FuzzyAlgorithm.Levenshtein)))
     assert(rows.nonEmpty)
-    assert(jobs <= 21, s"a one-mapping exact match ran $jobs Spark jobs")
+    assert(jobs <= 18, s"a one-mapping exact match ran $jobs Spark jobs")
   }
 
   test("empty input produces empty result with full schema") {

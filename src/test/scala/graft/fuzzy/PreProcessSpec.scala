@@ -110,6 +110,13 @@ class PreProcessSpec extends AnyFunSuite with SparkSpec {
       assert(PreProcess.statScan(df, cols) == expected, s"fixture: $name")
     }
   }
+
+  test("statScan runs one Spark job") {
+    val df = abcd(2000, 4)
+    val (jobs, stats) = sparkJobs(PreProcess.statScan(df, abcdCols))
+    assert(stats._1 == 2000)
+    assert(jobs == 1, s"a stat scan ran $jobs Spark jobs")
+  }
 }
 
 class NameUtilsSpec extends AnyFunSuite {

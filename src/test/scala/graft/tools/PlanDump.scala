@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.fuzzy.{FuzzyAlgorithm, FuzzyMatcher, MatchOptions}
 
@@ -20,6 +21,9 @@ import graft.fuzzy.{FuzzyAlgorithm, FuzzyMatcher, MatchOptions}
   * The plan that actually carries the runtime — candidate generation +
   * scoring — is therefore captured separately via the same public entry
   * point the matcher uses for a fresh pass (`freshScoredValuePairs`).
+  * For `fuzzy_multi`, `fuzzy_prepared_right` and `fuzzy_exact_225m` the
+  * barriers themselves (row index, distinct values, fresh pass) are also
+  * written, as the final plans AQE ran, to `<name>_barriers_<tag>.txt`.
   * Everything runs at sf0.001: plan SHAPE is scale-independent, and
   * dumping must not take bench-scale minutes.
   *
@@ -60,6 +64,36 @@ object PlanDump {
       Files.write(outDir.resolve(s"${name}_$tag.txt"),
         (s"-- $name @$sfDir ($tag)\n" + txt).getBytes("UTF-8"))
       println(s"[plandump] wrote ${name}_$tag.txt (${txt.length} chars)")
+    }
+    // The barriers a fuzzy match materializes while it is built (row index,
+    // distinct values, fresh pass) never show in its tail plan: capture the
+    // final plans AQE ran for them. Listener events arrive asynchronously,
+    // so a tagged sentinel action marks the end of a call's barriers.
+    val barriers = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val sentinel = "__plandump_sentinel"
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == sentinel)) barriers.put(sentinel)
+        else if (funcName == "localCheckpoint")
+          barriers.put(qe.explainString(ExplainMode.fromString("formatted")))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    def drainBarriers(): Vector[String] = {
+      spark.range(1).toDF(sentinel).collect()
+      Iterator.continually(barriers.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(p => p != null && p != sentinel).toVector
+    }
+    // writes `<name>_barriers_<tag>.txt`; concurrent barriers finish in any
+    // order, so they are sorted by their plan text with ids masked
+    def withBarriers(name: String)(df: => DataFrame): Unit = {
+      drainBarriers()
+      dump(name, df)
+      val plans = drainBarriers().sortBy(_.replaceAll("#\\d+L?|\\[\\d+\\]", ""))
+      val txt = plans.zipWithIndex
+        .map { case (p, i) => s"-- barrier ${i + 1} of ${plans.size}\n$p" }.mkString("\n")
+      Files.write(outDir.resolve(s"${name}_barriers_$tag.txt"),
+        (s"-- $name barriers @$sfDir ($tag)\n" + txt).getBytes("UTF-8"))
+      println(s"[plandump] wrote ${name}_barriers_$tag.txt (${plans.size} barriers)")
     }
     def gated(name: String, stage: String, df: DataFrame): Unit = {
       dump(name, df)
@@ -166,7 +200,7 @@ object PlanDump {
     // ---- the prepared-right front door (stream-static shape): the
     // two-mapping customer self-join of `fuzzy_multi_225m` (renames, order
     // step, filter-existing pass) through prepareRight ----
-    dump("fuzzy_prepared_right", FuzzyMatcher.matchDfsWithPreparedRight(c,
+    withBarriers("fuzzy_prepared_right")(FuzzyMatcher.matchDfsWithPreparedRight(c,
       FuzzyMatcher.prepareRight(c.columns.toSeq, c, Seq(
           graft.fuzzy.FuzzyMapping("c_name", "c_name", 90.0, FuzzyAlgorithm.Levenshtein),
           graft.fuzzy.FuzzyMapping("c_mktsegment", "c_mktsegment", 80.0,
@@ -175,7 +209,7 @@ object PlanDump {
 
     // ---- the multi-pass fold: a fresh name pass, then two filter passes
     // that score the surviving row pairs inline (name again, segment) ----
-    dump("fuzzy_multi", FuzzyMatcher.matchDfs(c, c, Seq(
+    withBarriers("fuzzy_multi")(FuzzyMatcher.matchDfs(c, c, Seq(
         graft.fuzzy.FuzzyMapping("c_name", "c_name", 90.0, FuzzyAlgorithm.Levenshtein),
         graft.fuzzy.FuzzyMapping("c_mktsegment", "c_mktsegment", 80.0,
           FuzzyAlgorithm.JaroWinkler),
@@ -186,9 +220,8 @@ object PlanDump {
     // ---- full bench queries (tail assembly plans; barriers make these
     // short, captured for completeness) ----
     val bq = graft.Bench.benchQueries(sfDir)
-    Seq("fuzzy_exact_225m", "fuzzy_annf_3g_lsh", "text_bm25_docs").foreach { n =>
-      dump(n, bq(n)(spark))
-    }
+    withBarriers("fuzzy_exact_225m")(bq("fuzzy_exact_225m")(spark))
+    Seq("fuzzy_annf_3g_lsh", "text_bm25_docs").foreach(n => dump(n, bq(n)(spark)))
     spark.stop()
   }
 }
