@@ -56,11 +56,12 @@ object PreProcess {
     * Why not that aggregate: HLL++ is an imperative aggregate, so the
     * HashAggregate around it runs without whole-stage codegen over a
     * 52-word buffer per column, and Spark plans it as a shuffle-map job plus
-    * a result job. On ~400 rows per task that cost 30–38 ms of task CPU and
-    * a 16 MB execution-memory page per task, and 28–38 ms more to merge the
-    * buffers in the single result task: about as much as all of a
-    * three-mapping match's scoring. The sketch pass has no aggregate, no
-    * exchange and no result stage. */
+    * a result job. In a Spark event log of a three-mapping match on 4 cores
+    * (~400 rows per task) that cost 30–38 ms of task CPU and a 16 MB
+    * execution-memory page per task, and 28–38 ms more to merge the buffers
+    * in the single result task: about as much as all of the match's
+    * scoring. The sketch pass has no aggregate, no exchange and no result
+    * stage. */
   def statScan(df: DataFrame, cols: Seq[String]): (Long, Map[String, Long]) = {
     val distinctCols = cols.distinct
     val projected = df.select(distinctCols.map(col): _*)
