@@ -278,11 +278,14 @@ object SweepScore {
     val lLow = GraftSql.expression(lower(col(lCol)))
     val block = math.min(broadcastDistinctLimit, Int.MaxValue.toLong).toInt
     val blocks = if (rows.isEmpty) Iterator(rows) else rows.grouped(block)
-    blocks.map { b =>
+    // The planner sizes a generator's output as its input (the value
+    // frame), so a join on the scored pairs would broadcast them however
+    // many there are: mark them never to be broadcast.
+    GraftSql.noBroadcast(blocks.map { b =>
       val bc = spark.sparkContext.broadcast(
         SweepTable.build(b.map(_.getString(0)), b.map(_.getString(1))))
       val gen: Column = GraftSql.column(FuzzySweep(lLow, algo.id, maxDist, rCol, bc))
       lSpread.select(col(lCol), gen.as(Seq(rCol, "s")))
-    }.reduce(_ union _)
+    }.reduce(_ union _))
   }
 }
