@@ -7,8 +7,10 @@ import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, NO_BROADCAST_HASH,
   *
   * Spark 4 moved `new Column(expr)` behind `org.apache.spark.sql.classic.
   * ExpressionUtils`; custom Catalyst expressions (our similarity kernels)
-  * still need to surface as `Column`s. Keeping the bridge in one tiny file
-  * confines the `private[sql]` access to a single place.
+  * still need to surface as `Column`s, and a join hint Spark's `hint` names
+  * do not cover ([[noBroadcast]]) needs `Dataset.ofRows`. Keeping the
+  * bridge in one tiny file confines the `private[sql]` access to a single
+  * place.
   */
 object GraftSql {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
