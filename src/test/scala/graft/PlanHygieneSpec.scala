@@ -1,7 +1,12 @@
 package graft.fuzzy
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape guards for the properties that matter at 100 TB: filters and
@@ -86,6 +91,46 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
       s"a filter pass scores its pairs more than once:\n$plan")
     assert("_dist_bounded\\(".r.findAllIn(plan).length == 2,
       s"unexpected bounded-kernel calls in the tail plan:\n$plan")
+  }
+
+  test("fresh exact pass: the scored pairs are never a broadcast build side") {
+    // The planner sizes the sweep generator's output as its input, so an
+    // unmarked join back would broadcast an unbounded pair set. The pass
+    // frame is materialized while it is built: capture the final plan AQE
+    // ran for its barrier, and mark the end of the call with a sentinel.
+    val c = spark.read.parquet(s"$dir/customer.parquet")
+    val s = spark.read.parquet(s"$dir/supplier.parquet")
+    val cIdx = FuzzyMatcher.addIndexColumn(c, "__left_index")
+    val sIdx = FuzzyMatcher.addIndexColumn(s, "__right_index")
+    val sentinel = "__plan_hygiene_sentinel"
+    val barriers = new java.util.concurrent.LinkedBlockingQueue[Option[SparkPlan]]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == sentinel)) barriers.put(None)
+        else if (funcName == "localCheckpoint") barriers.put(Some(qe.executedPlan))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val plans = try {
+      FuzzyMatcher.processFuzzyMapping(cIdx, sIdx,
+        FuzzyMapping("c_name", "s_name", 70.0, FuzzyAlgorithm.Levenshtein), None,
+        MatchOptions(useApproxNearestNeighbor = Some(false)))
+      spark.range(1).toDF(sentinel).collect()
+      Iterator.continually(barriers.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(p => p != null && p.nonEmpty).flatten.toVector
+    } finally spark.listenerManager.unregister(listener)
+    object Stages extends AdaptiveSparkPlanHelper
+    def sweeps(p: SparkPlan): Seq[SparkPlan] =
+      Stages.collect(p) { case g: GenerateExec if g.generator.isInstanceOf[FuzzySweep] => g }
+    val fresh = plans.filter(sweeps(_).nonEmpty)
+    assert(fresh.size == 1, s"expected one fresh-pass barrier:\n${plans.mkString("\n")}")
+    val joins = Stages.collect(fresh.head) { case j: BroadcastHashJoinExec => j }
+    // the row-id sides are broadcast-sized here: the join back broadcasts them
+    assert(joins.nonEmpty, s"join back not broadcast at all:\n${fresh.head}")
+    joins.foreach { j =>
+      val build = if (j.buildSide == BuildLeft) j.left else j.right
+      assert(sweeps(build).isEmpty, s"the scored pairs are a broadcast build side:\n${fresh.head}")
+    }
   }
 
   test("hash sampling is a pure pushed-past-pruning filter: no shuffle anywhere") {
