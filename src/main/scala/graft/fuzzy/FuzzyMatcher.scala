@@ -209,9 +209,19 @@ object FuzzyMatcher {
                        graft.util.CheckpointStrategy.Local): DataFrame =
     graft.util.Materialize(df.withColumn(name, monotonically_increasing_id()), checkpoint)
 
-  /** Distinct non-null values of the match column (the unit of scoring). */
+  /** Distinct non-null values of the match column (the unit of scoring),
+    * hash-partitioned by the value into one partition per core. The
+    * distinct aggregate keeps its map-side partial aggregate, so a
+    * duplicate-heavy column shuffles only each task's distinct values.
+    * When `spark.sql.shuffle.partitions` is the core count (the engine's
+    * setting) the planner folds the repartition into the aggregate's own
+    * exchange, which AQE then leaves uncoalesced because the count is set:
+    * the final aggregate runs on every core, and the sweep's stream side
+    * arrives already spread instead of as one coalesced partition that is
+    * shuffled again before every sweep. */
   def distinctValues(df: DataFrame, valueCol: String): DataFrame =
     df.where(col(valueCol).isNotNull).select(col(valueCol)).distinct()
+      .repartition(df.sparkSession.sparkContext.defaultParallelism, col(valueCol))
 
   /** Score candidate value pairs: lowercase both sides, keep pairs whose
     * normalized distance is within the (truncated) reversed threshold, flip
@@ -263,16 +273,8 @@ object FuzzyMatcher {
     // The two sides' materialize+count chains are independent — run them
     // concurrently (guide §2.6): same barriers, same counts, half the
     // serial fixed-cost floor of the four driver actions.
-    // Hash-partitioned by the value with an explicit partition count: AQE
-    // does not coalesce a shuffle whose count the user set, and the distinct
-    // aggregate reuses that partitioning, so it runs on every core and the
-    // sweep's stream side arrives already spread (a coalesced one-partition
-    // frame would be repartitioned again before every sweep).
-    val parallelism = leftIdxDf.sparkSession.sparkContext.defaultParallelism
     def valsOf(df: DataFrame, c: String): (DataFrame, Long) = {
-      val v = graft.util.Materialize(
-        df.where(col(c).isNotNull).select(col(c)).repartition(parallelism, col(c)).distinct(),
-        opts.checkpoint)
+      val v = graft.util.Materialize(distinctValues(df, c), opts.checkpoint)
       (v, graft.util.Materialize.count(v))
     }
     val ((lv0, lc0), (rv0, rc0)) = graft.util.Par.run2(

@@ -266,10 +266,9 @@ object SweepScore {
     val rows = rightVals.select(col(rCol), lower(col(rCol))).collect()
     // AQE happily coalesces a small distinct-value frame to ONE partition,
     // which would serialize the whole O(n*m) sweep onto a single core:
-    // spread the stream side across the cluster first. The engine's fresh
-    // pass builds its value frames already spread (one partition per core,
-    // FuzzyMatcher.freshScoredValuePairs), so this guard is for frames a
-    // caller builds itself (perfbench's isolated sweep, ScaleBench).
+    // spread the stream side across the cluster first. Value frames from
+    // FuzzyMatcher.distinctValues arrive spread already (one partition per
+    // core), so this guard is for frames a caller builds otherwise.
     val parallelism = spark.sparkContext.defaultParallelism
     val lSpread =
       if (leftVals.queryExecution.toRdd.getNumPartitions < parallelism)
