@@ -1,7 +1,7 @@
 package graft.fuzzy
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, SpecificInternalRow}
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.catalyst.util.HyperLogLogPlusPlusHelper
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.LongType
@@ -73,26 +73,22 @@ object PreProcess {
       (0 until r.numFields).foreach(r.setLong(_, 0L))
       r
     }
-    val perTask = projected.queryExecution.toRdd.mapPartitions { rows =>
-      val buf = registers()
-      var n = 0L
-      rows.foreach { row =>
-        n += 1
+    // one job: each task folds its rows into its own register block and the
+    // driver merges every task's block as it arrives
+    val (rows, merged) = projected.queryExecution.toRdd.aggregate((0L, registers()))(
+      { case ((n, buf), row) =>
         var i = 0
         while (i < types.length) {
           if (!row.isNullAt(i)) helper.update(buf, i * numWords, row.get(i, types(i)), types(i))
           i += 1
         }
-      }
-      Iterator.single((n, Array.tabulate(buf.numFields)(buf.getLong)))
-    }.collect()
-    val merged = registers()
-    perTask.foreach { case (_, words) =>
-      val block = new GenericInternalRow(words.map(w => w: Any))
-      types.indices.foreach(i => helper.merge(merged, block, i * numWords, i * numWords))
-    }
-    (perTask.map(_._1).sum,
-      distinctCols.zipWithIndex.map { case (c, i) => c -> helper.query(merged, i * numWords) }.toMap)
+        (n + 1, buf)
+      },
+      { case ((n1, buf1), (n2, buf2)) =>
+        types.indices.foreach(i => helper.merge(buf1, buf2, i * numWords, i * numWords))
+        (n1 + n2, buf1)
+      })
+    (rows, distinctCols.zipWithIndex.map { case (c, i) => c -> helper.query(merged, i * numWords) }.toMap)
   }
 
   /** Combined uniqueness score — exact formula from pre_process.py:45,
