@@ -39,6 +39,11 @@ import graft.pipeline.{AnnSearch, Dedup}
   * row, compact mins line last) so no truncation or mid-run kill can
   * lose it. SCALE.md "Bench self-certification" carries the
   * calibration sweeps and the dd-contention separation test.
+  *
+  * Every row runs at the session's default settings. The rows that rank
+  * through `topk_pairs` (ANN search, BM25, the LSH fuzzy rows) take the
+  * engine's own top-K plan ([[graft.fuzzy.TopKStrategy]]), which has no
+  * setting to raise, so the harness scopes none.
   */
 object Bench {
 
@@ -425,24 +430,6 @@ object Bench {
     }),
   )
 
-  /** Rows whose ranking runs through the BoundedTopK heap aggregate
-    * (ObjectHashAggregate with fixed k*16-byte buffers): the default
-    * fallback-to-sort threshold of 128 groups per partition would
-    * re-introduce the per-partition sort the aggregate exists to avoid
-    * (measured at sf10: 56.0 s -> 24.5 s IVF search — SCALE.md). The
-    * conf is scoped PER QUERY via set/restore around each sample —
-    * exactly the TUNING.md recipe — so the session default (and its
-    * sort-based memory safety valve for unbounded collect_list/
-    * collect_set buffers) is back in force for every other row. */
-  private val HeapAggQueries = Set("ann_ivf_embeddings",
-    "ann_ivf_fit_embeddings", "ann_topk_embeddings", "ann_int8_embeddings",
-    "ann_pq_embeddings", "text_bm25_docs")
-  // The LSH fuzzy rows no longer appear here: since r20 the ENGINE scopes
-  // the fallback conf around each LSH pass's materialization
-  // (FuzzyMatcher.processFuzzyMapping -> AnnJoin.withTopKHeapConf), so a
-  // production caller gets the same treatment without bench-harness help
-  // (VERDICT r19 item 4). The rows above share that one helper.
-
   /** One pre-sample host reading: CPU-bound probe + I/O-bound probe,
     * with the health verdict taken AT PROBE TIME against the run's
     * effective gates. A window is healthy only when BOTH axes pass —
@@ -543,11 +530,8 @@ object Bench {
     benchQueries("/root/testdata/sf0.001").toSeq.sortBy(_._1)
       .filter { case (name, _) => warmOnly.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-        try graft.util.MatchScope.withMatchScope {
-          graft.fuzzy.AnnJoin.withTopKHeapConf(spark, HeapAggQueries.contains(name)) {
-            fn(spark).count()
-          }
-        } catch { case _: Throwable => }
+        try graft.util.MatchScope.withMatchScope { fn(spark).count() }
+        catch { case _: Throwable => }
       }
 
     // dev filter: SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the run (the
@@ -705,9 +689,7 @@ object Bench {
         var dt = 0.0
         val got = try graft.util.MatchScope.withMatchScope {
           val t0 = System.nanoTime()
-          val r = try Some(graft.fuzzy.AnnJoin.withTopKHeapConf(spark, HeapAggQueries.contains(name)) {
-            fn(spark).count()
-          }) catch {
+          val r = try Some(fn(spark).count()) catch {
             case e: Throwable =>
               System.err.println(s"[bench] $name failed: ${e.getMessage}")
               None

@@ -32,6 +32,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // SQL clients write `levenshtein_dist(a, b) <= t`; the optimizer
     // rewrites it to the banded early-exit kernel the matcher uses
     ext.injectOptimizerRule(_ => graft.plans.BoundedDistanceRewrite)
+    // `GROUP BY k` + `topk_pairs(score, id, n)` plans as the engine's
+    // partial/final heap steps, whatever the session's aggregate settings
+    ext.injectPlannerStrategy(_ => graft.fuzzy.TopKStrategy)
     // the full fuzzy-join planner as a table-valued function:
     // SELECT * FROM fuzzy_match('l','r','lc','rc',70.0,'levenshtein')
     ext.injectTableFunction((

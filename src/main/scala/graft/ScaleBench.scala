@@ -784,11 +784,6 @@ object ScaleBench {
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // BoundedTopK (ObjectHashAggregate) buffers are a fixed k*16 bytes;
-      // the default fallback-to-sort threshold of 128 groups per partition
-      // would re-introduce the very sort the aggregate exists to avoid
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJAGG_FALLBACK", "4194304"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -40,15 +40,13 @@ object SparkEntry {
   /** events.parquet's `ts` encoding varies across testdata generations
     * (TIMESTAMP(NANOS)-as-long vs TIMESTAMP_NTZ micros); every events
     * query here works on epoch-nano longs, so the shared loader
-    * ([[graft.util.EventTs]]) normalizes on read — self-contained on ANY
-    * caller-built session, not only the in-repo mains.
+    * ([[graft.util.EventTs]]) normalizes on read.
     *
-    * DOCUMENTED SIDE EFFECT: the loader leaves
-    * `spark.sql.legacy.parquet.nanosAsLong=true` set on the session — the
-    * returned frame is lazy and parquet schema conversion consults the
-    * conf through execution, so restoring it here would break the query
-    * it just enabled. Callers who later need TIMESTAMP(NANOS) columns
-    * read as timestamps must unset it themselves. */
+    * The session must be built with
+    * `spark.sql.legacy.parquet.nanosAsLong=true` (every in-repo main sets
+    * it): the returned frame is lazy and parquet schema conversion
+    * consults the setting through execution. The loader fails fast when
+    * it is missing and never changes the caller's session. */
   private def events(s: SparkSession, dir: String): DataFrame =
     graft.util.EventTs.loadEvents(s, dir)
 

@@ -43,35 +43,13 @@ import graft.util.{Blocking, CapMetrics}
   * `ProbeSampleSize` values: corpus-wide gram statistics would cost more
   * than the exact join the probe is trying to avoid (measured: ~25 s of
   * pure probe overhead at sf0.1 before sampling).
+  *
+  * The per-left-value top-N is a `topk_pairs` aggregate, which
+  * [[TopKStrategy]] plans as per-partition heaps merged after one exchange:
+  * an LSH pass reads and writes no session setting, so concurrent matches
+  * on one session cannot race on one.
   */
 object AnnJoin {
-
-  /** The LSH top-N ranks through the BoundedTopK TypedImperativeAggregate
-    * (ObjectHashAggregate). Its default sort-based fallback threshold (128
-    * groups per partition) would demote the heap aggregate to exactly the
-    * per-partition sort it exists to avoid (measured 56.0 -> 24.5 s on IVF
-    * search at sf10 — SCALE.md). The conf is scoped around the execution
-    * that contains the aggregate and restored afterwards, so the session
-    * default (the memory safety valve for unbounded collect_list/set
-    * buffers) stays in force everywhere else. Engine-owned since r20: a
-    * production caller running the LSH path bare gets the same treatment
-    * the bench rows used to configure by hand (VERDICT r19 item 4). */
-  private val FallbackConf =
-    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-
-  private[graft] def withTopKHeapConf[T](
-      spark: org.apache.spark.sql.SparkSession, scoped: Boolean)(body: => T): T = {
-    if (!scoped) body
-    else {
-      val prev = spark.conf.getOption(FallbackConf)
-      spark.conf.set(FallbackConf, "4194304")
-      try body
-      finally prev match {
-        case Some(v) => spark.conf.set(FallbackConf, v)
-        case None => spark.conf.unset(FallbackConf)
-      }
-    }
-  }
 
   /** Character n-gram size of the signatures and the jaccard verify. */
   private[graft] val NgramSize = 3
@@ -347,9 +325,10 @@ object AnnJoin {
 
     // Top-N via the BoundedTopK heap aggregate, NOT a row_number window:
     // the window shuffles AND SORTS every gated pair per left value, while
-    // the TypedImperativeAggregate partial-aggregates k*16-byte heaps
-    // map-side before the exchange (the same swap that took IVF search
-    // 56 -> 24.5 s at sf10 — SCALE.md). Order is identical: keep the k
+    // the engine's top-K plan (TopKStrategy) keeps one heap per left value
+    // map-side before the exchange and merges them after it, with no
+    // setting to raise (the same swap that took IVF search 56 -> 24.5 s at
+    // sf10 — SCALE.md). Order is identical: keep the k
     // best under (jaccard asc, rvid asc) == (score desc, id asc) with
     // score = -jaccard, so the surviving (lvid, rvid) SET is exactly the
     // window's `row_number <= k` set.

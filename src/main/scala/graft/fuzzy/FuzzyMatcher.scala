@@ -261,13 +261,12 @@ object FuzzyMatcher {
     * (cross_join_no_existing_fuzzy_results, matcher.py:241-340): the exact
     * cross join runs as the [[SweepScore]] broadcast sweep, in blocks of at
     * most `broadcastDistinctLimit` values for every algorithm; LSH
-    * candidates are scored by [[scoreValuePairs]]. Returns the scored
-    * frame and whether the LSH candidate path (and so its BoundedTopK
-    * ranking) is in the plan, so the caller can scope the
-    * ObjectHashAggregate fallback conf around the pass's materialization. */
+    * candidates are scored by [[scoreValuePairs]]; their per-value top-N
+    * is the engine's own top-K plan ([[TopKStrategy]]), which needs no
+    * session setting. */
   def freshScoredValuePairs(
       leftIdxDf: DataFrame, rightIdxDf: DataFrame, fuzzyMap: FuzzyMapping,
-      opts: MatchOptions): (DataFrame, Boolean) = {
+      opts: MatchOptions): DataFrame = {
     val reversedThreshold = fuzzyMap.reversedThresholdScore
     // Checkpointed: each value frame is consumed twice (count + scoring).
     // The two sides' materialize+count chains are independent — run them
@@ -302,13 +301,13 @@ object FuzzyMatcher {
 
     val stats = f"$lCol x $rCol: $lCount x $rCount distinct values (cartesian $cartesian%.3g)"
 
-    def sweep(how: String): (DataFrame, Boolean) = {
+    def sweep(how: String): DataFrame = {
       log.info(s"[graft.pass] $stats -> exact sweep ($how)")
-      (SweepScore.sweepScoredPairs(leftVals, rightVals, lCol, rCol,
-        reversedThreshold, fuzzyMap.fuzzyType, opts.broadcastDistinctLimit), false)
+      SweepScore.sweepScoredPairs(leftVals, rightVals, lCol, rCol,
+        reversedThreshold, fuzzyMap.fuzzyType, opts.broadcastDistinctLimit)
     }
-    def scoreLsh(candidates: DataFrame): (DataFrame, Boolean) =
-      (scoreValuePairs(candidates, lCol, rCol, fuzzyMap.fuzzyType, reversedThreshold), true)
+    def scoreLsh(candidates: DataFrame): DataFrame =
+      scoreValuePairs(candidates, lCol, rCol, fuzzyMap.fuzzyType, reversedThreshold)
 
     val useApprox = opts.useApproxNearestNeighbor.getOrElse(cartesian > opts.crossOverForApprox)
     if (useApprox) {
@@ -364,18 +363,11 @@ object FuzzyMatcher {
         // (leftIdx, rightIdx) comes out at most once (reference: .unique(),
         // matcher.py:501-504): candidates are distinct value pairs and ids
         // are unique per row.
-        val (scored, usedLsh) = freshScoredValuePairs(leftIdxDf, rightIdxDf, fuzzyMap, opts)
-        val matched = scored
+        val matched = freshScoredValuePairs(leftIdxDf, rightIdxDf, fuzzyMap, opts)
           .join(leftIdxDf.select(col(LeftIdx), col(leftCol)), Seq(leftCol))
           .join(rightIdxDf.select(col(RightIdx), col(rightCol)), Seq(rightCol))
           .select(col(LeftIdx), col(RightIdx), col("s").as(score))
-        // An LSH pass ranks through BoundedTopK (ObjectHashAggregate):
-        // scope the sort-based-fallback threshold around the pass
-        // materialization so the heap aggregate is not demoted to a
-        // per-partition sort at 128 groups.
-        val out = AnnJoin.withTopKHeapConf(leftIdxDf.sparkSession, usedLsh) {
-          graft.util.Materialize(matched, opts.checkpoint)
-        }
+        val out = graft.util.Materialize(matched, opts.checkpoint)
         // counting the materialized barrier is one single-stage job and
         // gives the pass diagnostics the reference logs throughout
         // matcher.py

@@ -2,12 +2,24 @@ package graft.fuzzy
 
 import java.nio.ByteBuffer
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet,
+  BindReferences, Expression, GenericInternalRow, JoinedRow, NamedExpression, UnsafeProjection,
+  UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Final, Partial,
+  TypedImperativeAggregate}
+import org.apache.spark.sql.catalyst.planning.PhysicalAggregation
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.execution.{PartitioningPreservingUnaryExecNode, SparkPlan,
+  SparkStrategy}
 import org.apache.spark.sql.types._
 
 /** Fixed-capacity binary heap of (score, id) pairs keeping the k BEST under
@@ -19,8 +31,8 @@ import org.apache.spark.sql.types._
   * Backing arrays GROW LAZILY (start at 8, double up to k): memory per
   * group is proportional to the entries actually held, not to k. With a
   * large k (e.g. the LSH candidate top-N, k=500) an eager 8 KB per group
-  * multiplied by millions of groups held concurrently in an
-  * ObjectHashAggregate map was a measured executor OOM at the sf1 tier —
+  * multiplied by millions of groups held concurrently in one partition's
+  * map was a measured executor OOM at the sf1 tier —
   * most groups hold a handful of candidates and now pay tens of bytes.
   *
   * The (score, id) comparator is a strict total order over distinct ids, so
@@ -83,10 +95,16 @@ final class TopKHeap(val k: Int) {
   * `Window.partitionBy(group).orderBy(score desc)` + `row_number <= k`
   * ranking idiom: a window must SHUFFLE AND SORT every scored candidate
   * (at sf10 ANN volumes, ~5e8 rows through one exchange — the measured 19×
-  * super-linear row in SCALE.md), whereas a TypedImperativeAggregate runs
-  * partial aggregation before the exchange, capping shuffle volume at
+  * super-linear row in SCALE.md), whereas a top-k runs partial aggregation
+  * before the exchange, capping shuffle volume at
   * `groups × mapPartitions × k` fixed-size buffers and the reduce side at
   * an O(n log k) heap merge with no sort.
+  *
+  * This class is the single home of update, merge, serialize and eval, and
+  * the `topk_pairs` SQL function. A grouped `topk_pairs` alone in its
+  * aggregate is planned by [[TopKStrategy]]; anything else (a global
+  * aggregate, `topk_pairs` beside other aggregates) runs as Spark's own
+  * ObjectHashAggregate.
   */
 case class BoundedTopK(
     score: Expression,
@@ -170,4 +188,116 @@ case class BoundedTopK(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(score = l, id = r)
+}
+
+/** Plans `groupBy(keys).agg(topk_pairs(score, id, k))` as the engine's own
+  * two steps: [[TopKPartialExec]] keeps one heap per group key in each
+  * partition, the exchange clusters the serialized heaps by key, and
+  * [[TopKFinalExec]] merges them. Local top-k per partition, then a global
+  * merge, needs no setting: Spark's ObjectHashAggregate would fall back to
+  * a per-partition sort past 128 groups at the session default (measured
+  * 56.0 s against 24.5 s on sf10 IVF search — SCALE.md). Memory is the
+  * held entries: groups per partition × entries held × 16 B.
+  *
+  * Only an aggregate whose sole aggregate is one plain `topk_pairs`
+  * (no DISTINCT, no FILTER) over a non-empty, non-streaming grouping is
+  * taken; every other aggregate is left to Spark's own strategies.
+  * `GraftExtensions` injects the strategy; [[setup]] adds it to a session
+  * built without the extension. */
+object TopKStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case PhysicalAggregation(keys,
+        Seq(agg @ AggregateExpression(_: BoundedTopK, _, false, None, _)), result, child)
+        if keys.nonEmpty && !plan.isStreaming && agg.deterministic =>
+      val buffer = AttributeReference("buf", BinaryType, nullable = false)()
+      TopKFinalExec(keys.map(_.toAttribute), agg.copy(mode = Final), buffer, result,
+        TopKPartialExec(keys, agg.copy(mode = Partial), buffer, planLater(child))) :: Nil
+    case _ => Nil
+  }
+
+  /** Adds the strategy to `session`'s extra strategies, once. */
+  def setup(session: SparkSession): Unit = {
+    val methods = session.experimental
+    methods.synchronized {
+      if (!methods.extraStrategies.contains(TopKStrategy))
+        methods.extraStrategies = TopKStrategy +: methods.extraStrategies
+    }
+  }
+
+  /** The loop both steps run over a partition: fold `rows` into one heap
+    * per key (`fold` gets the key's heap, null on its first row, and
+    * returns it), then emit `project(key ++ [out(heap)])` once per key. */
+  private[fuzzy] def perKey(rows: Iterator[InternalRow], keyOf: UnsafeProjection,
+      fold: (TopKHeap, InternalRow) => TopKHeap, project: UnsafeProjection,
+      out: TopKHeap => Any): Iterator[InternalRow] = {
+    val heaps = new java.util.HashMap[UnsafeRow, TopKHeap]()
+    rows.foreach { row =>
+      val key = keyOf(row)
+      val held = heaps.get(key)
+      val heap = fold(held, row)
+      if (held == null) heaps.put(key.copy(), heap)
+    }
+    val joined = new JoinedRow
+    heaps.entrySet.iterator.asScala.map { e =>
+      project(joined(e.getKey, new GenericInternalRow(Array[Any](out(e.getValue)))))
+    }
+  }
+}
+
+/** Partial step of [[TopKStrategy]]: per partition, one [[TopKHeap]] per
+  * group key in a hash map, fed by [[BoundedTopK.update]]; emits
+  * `(keys, serialized heap)` once per key. */
+case class TopKPartialExec(keys: Seq[NamedExpression], topK: AggregateExpression,
+    buffer: Attribute, child: SparkPlan) extends PartitioningPreservingUnaryExecNode {
+
+  override def output: Seq[Attribute] = keys.map(_.toAttribute) :+ buffer
+  override def outputExpressions: Seq[NamedExpression] = keys :+ buffer
+  override def references: AttributeSet =
+    AttributeSet(keys.flatMap(_.references) ++ topK.aggregateFunction.references)
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val fn = BindReferences.bindReference(topK.aggregateFunction, child.output)
+      .asInstanceOf[BoundedTopK]
+    val (keyExprs, in, outTypes) = (keys, child.output, output.map(_.dataType).toArray)
+    child.execute().mapPartitions { rows =>
+      TopKStrategy.perKey(rows, UnsafeProjection.create(keyExprs, in),
+        (held, row) => fn.update(if (held == null) fn.createAggregationBuffer() else held, row),
+        UnsafeProjection.create(outTypes), fn.serialize)
+    }
+  }
+
+  override protected def withNewChildInternal(newChild: SparkPlan): TopKPartialExec =
+    copy(child = newChild)
+}
+
+/** Final step of [[TopKStrategy]]: over input clustered by the group keys,
+  * merges each key's serialized heaps with [[BoundedTopK.deserialize]] and
+  * [[BoundedTopK.merge]], then projects the aggregate's result expressions
+  * over [[BoundedTopK.eval]]. */
+case class TopKFinalExec(keys: Seq[Attribute], topK: AggregateExpression, buffer: Attribute,
+    result: Seq[NamedExpression], child: SparkPlan) extends PartitioningPreservingUnaryExecNode {
+
+  override def output: Seq[Attribute] = result.map(_.toAttribute)
+  override def outputExpressions: Seq[NamedExpression] = result
+  override def references: AttributeSet = AttributeSet(keys :+ buffer)
+  override def requiredChildDistribution: Seq[Distribution] =
+    ClusteredDistribution(keys) :: Nil
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val fn = topK.aggregateFunction.asInstanceOf[BoundedTopK]
+    val in = child.output
+    val bufAt = in.indexWhere(_.exprId == buffer.exprId)
+    val (keyAttrs, resultExprs, resultIn) = (keys, result, keys :+ topK.resultAttribute)
+    child.execute().mapPartitions { rows =>
+      TopKStrategy.perKey(rows, UnsafeProjection.create(keyAttrs, in),
+        (held, row) => {
+          val heap = fn.deserialize(row.getBinary(bufAt))
+          if (held == null) heap else fn.merge(held, heap)
+        },
+        UnsafeProjection.create(resultExprs, resultIn), fn.eval)
+    }
+  }
+
+  override protected def withNewChildInternal(newChild: SparkPlan): TopKFinalExec =
+    copy(child = newChild)
 }

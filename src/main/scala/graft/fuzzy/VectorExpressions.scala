@@ -588,8 +588,14 @@ object vectorFunctions {
     c(BucketAllowed(x(band), x(bkey), sortedKeys))
   def nearest_cells(vec: Column, centroids: Array[Double], dim: Int, nProbe: Int): Column =
     c(NearestCells(x(vec), centroids, dim, nProbe))
-  def topk_pairs(score: Column, id: Column, k: Int): Column =
+  def topk_pairs(score: Column, id: Column, k: Int): Column = {
+    // a session built without GraftExtensions gets the engine's top-K plan
+    // on first use
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .foreach(TopKStrategy.setup)
     c(BoundedTopK(x(score), x(id), k).toAggregateExpression())
+  }
   def tf_slot(term: Column, slots: Int): Column = c(TfSlot(x(term), slots))
   def bpe_tokens(word: Column, merges: Seq[(String, String)]): Column =
     c(BpeTokens(x(word), merges))
@@ -654,11 +660,13 @@ object vectorFunctions {
 
   /** Register the sketch/vector expressions for `spark.sql(...)` users
     * (counterpart of `graft.fuzzy.functions.registerAll` for the similarity
-    * kernels). */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit =
+    * kernels). Also adds the engine's top-K plan, as the extension does. */
+  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
+    TopKStrategy.setup(spark)
     sqlBuilders.foreach { case (name, builder) =>
       GraftSql.registerFunction(spark, name, builder)
     }
+  }
   def lsh_band_keys(sig: Column, bands: Int, rows: Int): Column =
     c(LshBandKeys(x(sig), bands, rows))
   def ngram_jaccard_dist(a: Column, b: Column, n: Int): Column =

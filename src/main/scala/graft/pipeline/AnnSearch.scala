@@ -26,12 +26,13 @@ object AnnSearch {
 
   /** Rank scored (query_id, corpus_id, score) candidates down to the top k
     * per query via [[graft.fuzzy.BoundedTopK]] — a map-side-combining
-    * bounded-heap aggregate. Every ranking site in this file used to be a
-    * `Window.partitionBy(query_id)` + `row_number`, which shuffles AND
+    * bounded-heap aggregate, planned by [[graft.fuzzy.TopKStrategy]] with
+    * no session setting to raise. Every ranking site in this file used to
+    * be a `Window.partitionBy(query_id)` + `row_number`, which shuffles AND
     * sorts every scored candidate (the one measured super-linear plan at
-    * sf10: 146.6 s, 19× cost for ~10× work — SCALE.md); the aggregate's
-    * partial step caps shuffle volume at queries × mapPartitions × k
-    * fixed-size buffers instead. Emits (query_id, corpus_id, score, rank)
+    * sf10: 146.6 s, 19× cost for ~10× work — SCALE.md); the partial step
+    * caps shuffle volume at queries × mapPartitions × k fixed-size buffers
+    * instead. Emits (query_id, corpus_id, score, rank)
     * with rank 1-based by (score desc, corpus_id asc) — identical rows to
     * the window formulation (the comparator is a strict total order over
     * the deduped pairs, so the result is partitioning-independent).
@@ -41,20 +42,7 @@ object AnnSearch {
     * This deliberately differs from the replaced window, which sorted
     * nulls last and NaN largest — a null "neighbor" was never a useful
     * answer, and NaN would poison the heap's total order. */
-  private def rankTopK(scored: DataFrame, scoreName: String, k: Int): DataFrame = {
-    // results are identical either way, but the sort-based fallback
-    // re-introduces the per-partition candidate sort this aggregate
-    // exists to avoid (sf10: 56.0 s vs 24.5 s — SCALE.md); surface the
-    // misconfiguration instead of silently running the slow plan
-    val fallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val threshold =
-      try scored.sparkSession.conf.get(fallbackKey, "128").toInt
-      catch { case _: NumberFormatException => 128 }
-    if (threshold <= 128)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"[graft.ann] $fallbackKey=$threshold: top-k aggregation will fall " +
-          "back to sort-based beyond that many queries per partition — raise " +
-          "it (BoundedTopK buffers are a fixed k*16 bytes; see TUNING.md)")
+  private def rankTopK(scored: DataFrame, scoreName: String, k: Int): DataFrame =
     scored
       .groupBy(col("query_id"))
       .agg(graft.fuzzy.vectorFunctions.topk_pairs(col(scoreName), col("corpus_id"), k)
@@ -62,7 +50,6 @@ object AnnSearch {
       .select(col("query_id"), posexplode(col("__tk")))
       .select(col("query_id"), col("col.id").as("corpus_id"),
         col("col.score").as(scoreName), (col("pos") + 1).cast("int").as("rank"))
-  }
 
   /** Materialize a derived corpus frame (quantized codes, signatures)
     * behind a NARROW exchange before it streams into a broadcast

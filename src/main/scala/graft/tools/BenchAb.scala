@@ -10,9 +10,7 @@ import org.apache.spark.sql.SparkSession
   * several rounds — if the rows track r7 once the host's
   * calibration-normalized throughput is factored in, the regression was
   * the documented 2-3.5x host drift, not the code. Session confs
-  * replicate the r7/r8 bench exactly (including the then-session-global
-  * ObjectHashAggregate fallback threshold) so the numbers are
-  * comparable. Emits one JSON line per round. */
+  * replicate `graft.Bench`'s. Emits one JSON line per round. */
 object BenchAb {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -24,7 +22,6 @@ object BenchAb {
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

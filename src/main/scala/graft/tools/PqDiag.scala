@@ -13,7 +13,6 @@ object PqDiag {
     val spark = SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

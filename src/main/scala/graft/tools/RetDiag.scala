@@ -17,8 +17,6 @@ object RetDiag {
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "64"))
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJAGG_FALLBACK", "4194304"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -36,10 +36,16 @@ object EventTs {
           "(expected LONG nanos or a timestamp)")
     }
 
-  /** Read `$dir/events.parquet` with `ts` normalized to epoch nanos. */
+  /** The read setting legacy nanos files need. */
+  val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** Read `$dir/events.parquet` with `ts` normalized to epoch nanos. The
+    * session must be built with [[NanosAsLong]]` = true` (legacy nanos
+    * files are unreadable without it): this fails fast otherwise, and
+    * never changes the caller's session. */
   def loadEvents(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    // legacy nanos files are unreadable without this; harmless otherwise
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    require(spark.conf.get(NanosAsLong, "false") == "true",
+      s"loadEvents needs $NanosAsLong=true on the session (set it when building the session)")
     normalizeTs(spark.read.parquet(s"$dir/events.parquet"))
   }
 }

@@ -45,6 +45,14 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     // score desc, id asc on the 0.9 tie; group 2 keeps its single row
     assert(rows == Seq((1L, 11L, 0.9), (1L, 12L, 0.9), (2L, 20L, 0.3)), s"got $rows")
+    // the extension plans it as the engine's top-K at the default settings
+    val plan = fresh.sql("SELECT g, topk_pairs(score, id, 2) AS tk FROM tk_in GROUP BY g")
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("TopKPartial") && plan.contains("partial_topk_pairs") &&
+      plan.contains("TopKFinal"), s"expected the engine's partial and final steps:\n$plan")
+    Seq("ObjectHashAggregate", "SortAggregate", "Window", "Sort [").foreach { node =>
+      assert(!plan.contains(node), s"unexpected $node:\n$plan")
+    }
   }
 
   test("ann_topk TVF: brute mode equals the Scala path, ivf full-probe " +

@@ -62,11 +62,11 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
     val cIdx = FuzzyMatcher.addIndexColumn(c, "__left_index")
     val sIdx = FuzzyMatcher.addIndexColumn(s, "__right_index")
     for (algo <- FuzzyAlgorithm.all; limit <- Seq(200000L, 3L)) {
-      val (scored, usedLsh) = FuzzyMatcher.freshScoredValuePairs(cIdx, sIdx,
+      val scored = FuzzyMatcher.freshScoredValuePairs(cIdx, sIdx,
         FuzzyMapping("c_name", "s_name", 70.0, algo),
         MatchOptions(useApproxNearestNeighbor = Some(false), broadcastDistinctLimit = limit))
-      assert(!usedLsh)
       val plan = scored.queryExecution.executedPlan.toString
+      assert(!plan.contains("topk_pairs"))
       // the kernel runs inside the generator over the value frame: the
       // cartesian stream is scored as it is produced, never materialized
       assert(plan.contains("fuzzy_sweep"),
@@ -198,7 +198,8 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
       .queryExecution.executedPlan.toString
     // both ranking stages are the bounded-heap aggregate, never a
     // sort-the-world window
-    assert(plan.contains("ObjectHashAggregate") && plan.contains("topk_pairs"),
+    assert(plan.contains("TopKPartial") && plan.contains("TopKFinal") &&
+      plan.contains("topk_pairs"),
       s"PQ ranking lost the bounded-heap aggregate:\n$plan")
     assert(!plan.linesIterator.exists(l => l.trim.startsWith("Window")),
       s"PQ plan re-introduced a Window:\n$plan")
@@ -220,7 +221,8 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
     val plan = graft.pipeline.TextAnalysis.bm25TopK(docs, "text", "doc_id",
         qs, "qtext", "query_id", k = 10)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("ObjectHashAggregate") && plan.contains("topk_pairs"),
+    assert(plan.contains("TopKPartial") && plan.contains("TopKFinal") &&
+      plan.contains("topk_pairs"),
       s"BM25 ranking lost the bounded-heap aggregate:\n$plan")
     assert(!plan.linesIterator.exists(l => l.trim.startsWith("Window")),
       s"BM25 re-introduced a Window ranking:\n$plan")
@@ -232,12 +234,47 @@ class PlanHygieneSpec extends AnyFunSuite with SparkSpec {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val plan = graft.pipeline.Curation.sampleExactN(docs, "doc_id", 50)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("ObjectHashAggregate") && plan.contains("topk_pairs"),
+    assert(plan.contains("TopKPartial") && plan.contains("TopKFinal") &&
+      plan.contains("topk_pairs"),
       s"sampleExactN lost the bounded-heap aggregate:\n$plan")
     assert(!plan.contains("TakeOrderedAndProject"),
       s"selection fell back to a driver-merged TakeOrdered:\n$plan")
     assert(!plan.linesIterator.exists(l => l.trim.startsWith("Sort ")),
       s"selection planned a sort:\n$plan")
+  }
+
+  test("LSH top-N, IVF, int8, bitext and kmv sketch rank through the engine top-K") {
+    assert(spark.conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") ===
+      "128", "the session must run at its default")
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val qs = emb.where(col("vec_id") < 5)
+    val c = FuzzyMatcher.addIndexColumn(
+      spark.read.parquet(s"$dir/customer.parquet"), "__left_index")
+    val s = FuzzyMatcher.addIndexColumn(
+      spark.read.parquet(s"$dir/supplier.parquet"), "__right_index")
+    val lshPlan = graft.util.MatchScope.withMatchScope {
+      FuzzyMatcher.freshScoredValuePairs(c, s,
+        FuzzyMapping("c_name", "s_name", 70.0, FuzzyAlgorithm.Levenshtein),
+        MatchOptions(useApproxNearestNeighbor = Some(true)))
+        .queryExecution.executedPlan.toString
+    }
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val sites = Seq(
+      "lsh" -> lshPlan,
+      "ivf" -> graft.pipeline.AnnSearch.ivfTopK(qs, emb, "embedding", "vec_id", 5,
+        dim = 64, nCells = 8, nProbe = 2, iters = 2).queryExecution.executedPlan.toString,
+      "int8" -> graft.pipeline.AnnSearch.int8TopK(qs, emb, "embedding", "vec_id", 5)
+        .queryExecution.executedPlan.toString,
+      "bitext" -> graft.pipeline.AnnSearch.bitextMarginMine(qs, emb, "embedding", "vec_id")
+        .queryExecution.executedPlan.toString,
+      "kmv" -> graft.pipeline.Profile.kmvSketch(docs, "doc_id", Seq("lang"), k = 8)
+        .queryExecution.executedPlan.toString)
+    for ((site, plan) <- sites) {
+      assert(plan.contains("TopKPartial") && plan.contains("partial_topk_pairs") &&
+        plan.contains("TopKFinal"), s"$site: expected the engine's partial and final steps:\n$plan")
+      assert(!plan.linesIterator.exists(l => l.contains("ObjectHashAggregate") &&
+        l.contains("topk_pairs")), s"$site: topk_pairs planned as ObjectHashAggregate:\n$plan")
+    }
   }
 
   test("correlations: every pair from ONE aggregate scan, no joins") {

@@ -79,7 +79,7 @@ class ConcurrentMatchSpec extends AnyFunSuite with SparkSpec {
     val m = FuzzyMapping("k", "g", 90.0, FuzzyAlgorithm.Levenshtein)
     def decide(left: DataFrame, right: DataFrame): String =
       MatchScope.withMatchScope {
-        val (scored, _) = FuzzyMatcher.freshScoredValuePairs(left, right, m, opts)
+        val scored = FuzzyMatcher.freshScoredValuePairs(left, right, m, opts)
         // consume inside the scope; the plan string carries the decision
         val plan = scored.queryExecution.executedPlan.toString
         scored.count()
@@ -122,6 +122,31 @@ class ConcurrentMatchSpec extends AnyFunSuite with SparkSpec {
 
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- baselineRdds
     assert(leaked.isEmpty, s"MatchScope leaked persisted RDDs: $leaked")
+  }
+
+  test("a forced-LSH match never changes the session's aggregate settings") {
+    // the LSH top-N used to raise this setting on the shared session for
+    // the pass, so a concurrent query could read (or restore) the raised
+    // value; a second thread polls it for the whole match
+    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    val default = spark.conf.getOption(key)
+    val (left, right) = divFrames
+    val maps = Seq(FuzzyMapping("k", "g", 90.0, FuzzyAlgorithm.Levenshtein))
+    val forced = opts.copy(useApproxNearestNeighbor = Some(true))
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Option[String]]()
+    @volatile var polling = true
+    val poller = new Thread(() => while (polling) {
+      seen.add(spark.conf.getOption(key))
+      Thread.onSpinWait()
+    }, "setting-poller")
+    poller.setDaemon(true)
+    poller.start()
+    val rows = try MatchScope.withMatchScope {
+      FuzzyMatcher.matchDfs(left, right, maps, forced).count()
+    } finally { polling = false; poller.join(10000L) }
+    assert(rows >= 400)
+    assert(seen.contains(default) && seen.size == 1,
+      s"the match changed $key on the session: saw $seen, default $default")
   }
 
   test("matchDfs finishes while its thread holds the session catalog monitor") {

@@ -23,10 +23,11 @@ class SweepSpec extends AnyFunSuite with SparkSpec {
     val (l, r) = corpus
     val lIdx = FuzzyMatcher.addIndexColumn(l, "__left_index")
     val rIdx = FuzzyMatcher.addIndexColumn(r, "__right_index")
-    val (scored, usedLsh) = FuzzyMatcher.freshScoredValuePairs(lIdx, rIdx,
+    val scored = FuzzyMatcher.freshScoredValuePairs(lIdx, rIdx,
       FuzzyMapping("a", "b", 80.0, algo), opts)
-    assert(!usedLsh)
-    scored.queryExecution.executedPlan.toString
+    val plan = scored.queryExecution.executedPlan.toString
+    assert(!plan.contains("topk_pairs"))
+    plan
   }
 
   test("sweep plan: Generate over the value frame, no join on the pair stream") {

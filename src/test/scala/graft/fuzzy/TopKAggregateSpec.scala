@@ -13,8 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * every [[AnnSearch]] path (the one measured super-linear plan at sf10 —
   * SCALE.md). Checks heap semantics against a sort oracle, merge-order
   * independence (partial aggregation must not change the answer), serde,
-  * exact equivalence with the window formulation on real data, and the
-  * plan shape (ObjectHashAggregate with partial aggregation, no Window).
+  * exact equivalence with the window formulation on real data, the engine
+  * plan ([[TopKStrategy]]: partial and final steps, no Window, no sort)
+  * against a brute force over the collected rows at the session's default
+  * settings, and
+  * the shapes left to Spark's own aggregate.
   */
 class TopKAggregateSpec extends AnyFunSuite with SparkSpec {
 
@@ -127,17 +130,94 @@ class TopKAggregateSpec extends AnyFunSuite with SparkSpec {
     assert(!res.exists(r => r.getAs[Double]("cosine").isNaN))
   }
 
-  test("plan: ObjectHashAggregate with a partial step, no Window, no sort of candidates") {
+  test("plan: engine top-K with a partial step, no Window, no candidate sort") {
     val dir = "/root/testdata/sf0.001"
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val queries = emb.where(col("vec_id") < 5)
     val plan = AnnSearch.bruteForceTopK(queries, emb, "embedding", "vec_id", 10)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("ObjectHashAggregate"),
-      s"expected ObjectHashAggregate (map-side-combining topk_pairs), got:\n$plan")
+    assert(plan.contains("TopKPartial") && plan.contains("TopKFinal"),
+      s"expected the engine top-K (map-side-combining topk_pairs), got:\n$plan")
     assert(plan.contains("partial_topk_pairs"),
       s"expected a partial aggregation step before the exchange, got:\n$plan")
     assert(!plan.contains("Window"),
       s"candidate ranking must not shuffle+sort through a Window, got:\n$plan")
+  }
+
+  test("default settings: top-K equals brute force, 10k+ groups a partition") {
+    val fallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    assert(spark.conf.get(fallbackKey) === "128", "the session must run at its default")
+    val groups = 20000
+    val k = 5
+    // two input partitions of 60k rows, each holding ~19k of the 20k
+    // groups; group sizes vary around 6, so some groups hold fewer than k
+    // rankable rows and others evict. Scores repeat (ties on id), some
+    // scores are null or NaN, some ids are null, some group keys are null.
+    val in = spark.range(0, 6L * groups, 1, 2).select(
+      when(col("id") % 997 === 0, lit(null).cast("long"))
+        .otherwise(pmod(hash(col("id")), lit(groups)).cast("long")).as("g"),
+      when(col("id") % 31 === 0, lit(null).cast("double"))
+        .when(col("id") % 29 === 0, lit(Double.NaN))
+        .otherwise(pmod(hash(col("id"), lit(1)), lit(4)).cast("double")).as("score"),
+      when(col("id") % 53 === 0, lit(null).cast("long")).otherwise(col("id")).as("id"))
+    val ranked = in.groupBy(col("g"))
+      .agg(vectorFunctions.topk_pairs(col("score"), col("id"), k).as("tk"))
+    val got = ranked.collect().map { r =>
+      (Option(r.get(0)).map(_.asInstanceOf[Long]),
+        r.getSeq[org.apache.spark.sql.Row](1).map(e => (e.getLong(0), e.getDouble(1))))
+    }.toMap
+
+    val expected = in.collect().toSeq
+      .groupBy(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
+      .map { case (g, rows) =>
+        g -> rows.filter(r => !r.isNullAt(1) && !r.getDouble(1).isNaN && !r.isNullAt(2))
+          .map(r => (r.getLong(2), r.getDouble(1)))
+          .sortBy { case (id, s) => (-s, id) }.take(k)
+      }
+    assert(got.size === expected.size)
+    assert(expected.values.exists(_.size < k) && expected.values.exists(_.size == k))
+    assert(expected.values.exists(_.isEmpty), "a group of unrankable rows only")
+    expected.foreach { case (g, top) => assert(got(g) === top, s"group $g") }
+
+    val plan = ranked.queryExecution.executedPlan.toString
+    assert(plan.contains("TopKPartial") && plan.contains("partial_topk_pairs") &&
+      plan.contains("TopKFinal"), s"expected the engine's partial and final steps:\n$plan")
+    Seq("ObjectHashAggregate", "SortAggregate", "Window", "Sort [").foreach { node =>
+      assert(!plan.contains(node), s"unexpected $node:\n$plan")
+    }
+  }
+
+  test("global or mixed topk_pairs stay Spark's ObjectHashAggregate") {
+    val in = spark.range(0, 100, 1, 2).select((col("id") % 3).as("g"),
+      (col("id") % 7).cast("double").as("s"), col("id"))
+    val global = in.agg(vectorFunctions.topk_pairs(col("s"), col("id"), 2).as("tk"))
+    val mixed = in.groupBy(col("g"))
+      .agg(vectorFunctions.topk_pairs(col("s"), col("id"), 2).as("tk"), count(lit(1)).as("n"))
+    for (df <- Seq(global, mixed)) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("ObjectHashAggregate") && !plan.contains("TopKFinal"), plan)
+    }
+    assert(global.head().getSeq[org.apache.spark.sql.Row](0)
+      .map(e => (e.getLong(0), e.getDouble(1))) === Seq((6L, 6.0), (13L, 6.0)))
+    assert(mixed.collect().map(r => (r.getLong(0), r.getLong(2))).toSet ===
+      Set((0L, 34L), (1L, 33L), (2L, 33L)))
+  }
+
+  test("topk_pairs and registerAll add the engine strategy to a session once") {
+    val fresh = spark.newSession()
+    // a new session's experimental strategies start empty; the extension's
+    // injected copy lives in the planner's own list
+    assert(!fresh.experimental.extraStrategies.contains(TopKStrategy))
+    org.apache.spark.sql.SparkSession.setActiveSession(fresh)
+    try {
+      vectorFunctions.topk_pairs(col("s"), col("id"), 3)
+      vectorFunctions.topk_pairs(col("s"), col("id"), 4)
+    } finally org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    assert(fresh.experimental.extraStrategies.count(_ == TopKStrategy) === 1)
+    // the pure-SQL path of a session that registers the functions by hand
+    val sqlOnly = spark.newSession()
+    vectorFunctions.registerAll(sqlOnly)
+    vectorFunctions.registerAll(sqlOnly)
+    assert(sqlOnly.experimental.extraStrategies.count(_ == TopKStrategy) === 1)
   }
 }

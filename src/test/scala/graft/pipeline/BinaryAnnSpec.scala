@@ -93,7 +93,8 @@ class BinaryAnnSpec extends AnyFunSuite with SparkSpec {
     val res = AnnSearch.binaryTopK(emb.where(col("vec_id") < 10), emb,
       "embedding", "vec_id", 10, rerank = 40)
     val plan = res.queryExecution.executedPlan.toString
-    assert(plan.contains("ObjectHashAggregate"), "top-k must aggregate, not sort")
+    assert(plan.contains("TopKPartial") && plan.contains("TopKFinal"),
+      "top-k must aggregate, not sort")
     assert(!plan.contains("Window"), "no window ranking anywhere")
     // the Hamming stage's cross join must move signatures, not vectors:
     // bit_count(xor) appears inside the join-side projections

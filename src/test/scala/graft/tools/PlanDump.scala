@@ -110,14 +110,14 @@ object PlanDump {
       FuzzyMatcher.freshScoredValuePairs(l, r,
         graft.fuzzy.FuzzyMapping("c_name", "r_name", 90.0,
           FuzzyAlgorithm.Levenshtein),
-        MatchOptions(useApproxNearestNeighbor = Some(false)))._1)
+        MatchOptions(useApproxNearestNeighbor = Some(false))))
     // every algorithm takes the same sweep; jaro-winkler shows the generic
     // (non-levenshtein) kernel dispatch
     dump("scoring_join_exact_jw",
       FuzzyMatcher.freshScoredValuePairs(l, r,
         graft.fuzzy.FuzzyMapping("c_name", "r_name", 90.0,
           FuzzyAlgorithm.JaroWinkler),
-        MatchOptions(useApproxNearestNeighbor = Some(false)))._1)
+        MatchOptions(useApproxNearestNeighbor = Some(false))))
 
     // ---- the LSH candidate pipeline (band join -> dedup -> jaccard gate
     // -> topN) + its scored verify join ----
@@ -126,7 +126,7 @@ object PlanDump {
     gated("scoring_join_lsh", "fuzzy_lsh",
       FuzzyMatcher.freshScoredValuePairs(l, r,
         graft.fuzzy.FuzzyMapping("c_name", "r_name", 90.0,
-          FuzzyAlgorithm.Levenshtein), opts)._1)
+          FuzzyAlgorithm.Levenshtein), opts))
 
     // ---- bucket-gate shapes ----
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
